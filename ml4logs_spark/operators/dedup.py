@@ -2,16 +2,17 @@
 
 Beyond the reference's scope (ml4logs has no corpus dedup), these are the
 operations a large-scale training-data pipeline needs; all are expressed
-with JVM-side higher-order functions — no Python in the hot path — and
-every hash is md5-hex so the DuckDB oracle reproduces results exactly.
+with JVM-side built-ins — no Python in the hot path — and every hash is
+md5-hex so the DuckDB oracle reproduces results exactly.
 
 Scale notes
 -----------
 - exact dedup: one hash-groupBy shuffle on md5(text) — the canonical
   content-addressed dedup; at 100 TB, AQE + high shuffle parallelism on
   the digest key (uniform by construction, no skew).
-- MinHash: signatures are per-row projections (map-only). LSH banding
-  explodes each doc into #bands rows and shuffles by (band, hash) —
+- MinHash: a doc_id aggregate over ``shingle_rows``, combined map-side
+  so only the signature hashes shuffle. LSH banding explodes each doc
+  into #bands rows and shuffles by (band, hash) —
   candidate generation cost is O(docs x bands), never O(docs^2); only
   bucket-colliding pairs are joined and Jaccard-verified.
 - lexicographic min of md5 hex strings == numeric min of the 128-bit
@@ -50,53 +51,45 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     return docs.join(keep, "doc_id", "left_semi")
 
 
-def shingles_col(
-    text_col: str = "text", k: int = SHINGLE_K, distinct: bool = True
-) -> Column:
-    """Distinct k-word shingles (JVM higher-order fns, no UDF).
-    ``distinct=False`` skips the array_distinct pass — safe (and ~2x
-    cheaper) for consumers insensitive to within-doc duplicates:
-    min-hash (min over a multiset equals min over its set) and
-    contamination semi-joins. Jaccard verification needs the set form.
-
-    Built by zipping the token array with its own shifted tails
-    (``zip_with`` + ``concat_ws``) rather than ``transform(sequence(1,n),
-    i -> slice(toks, i, k))``: per-index ``slice`` copies from position
-    i, making the transform O(L^2) per document — measured 6x slower at
-    100k docs (interpreted lambda per element either way, but zip_with
-    does O(k) work per position). ``concat_ws`` skips the NULLs that
-    zip_with pads past the shorter array, so tail entries degrade to
-    (k-1)-grams exactly like the slice formulation; the final slice
-    keeps positions 1..max(L-k+1, 1), matching the DuckDB oracle's
-    generate_series bound."""
-    toks = F.split(F.col(text_col), " ")
+def shingle_rows(
+    docs: DataFrame, text_col: str = "text", k: int = SHINGLE_K
+) -> DataFrame:
+    """(doc_id, gram): one row per k-word shingle position 1..max(L-k+1, 1)
+    of the space-split tokens (the DuckDB oracle's generate_series
+    bound), within-doc repeats kept. The frame MinHash, the verify sets,
+    the hashed store and decontamination all build on; built-ins only,
+    so whole-stage codegen compiles it. ``get`` is the null-safe index
+    (ANSI element_at throws past the end) and ``concat_ws`` skips its
+    NULLs, so short docs give one shorter gram; NULL text gives one row
+    with a NULL gram, so no doc drops out at the explode."""
+    toks, p = F.col("_toks"), F.col("_p")
     n = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
-    sh = toks
-    for j in range(1, k):
-        sh = F.zip_with(
-            sh,
-            F.slice(toks, j + 1, 1 << 30),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    sh = F.slice(sh, 1, n)
-    return F.array_distinct(sh) if distinct else sh
+    pos = docs.select("doc_id", F.split(F.col(text_col), " ").alias("_toks")).select(
+        "doc_id", "_toks", F.posexplode_outer(F.slice(toks, 1, n)).alias("_p", "_t")
+    )
+    gram = F.concat_ws(" ", *[F.get(toks, p + j) for j in range(k)])
+    return pos.select("doc_id", F.when(p.isNotNull(), gram).alias("gram"))
 
 
-def with_shingles(docs: DataFrame, distinct: bool = True) -> DataFrame:
-    return docs.withColumn("shingles", shingles_col(distinct=distinct))
-
-
-def minhash_col(i: int) -> Column:
-    return F.array_min(
-        F.transform(F.col("shingles"), lambda s: F.md5(F.concat(F.lit(f"{i}:"), s)))
+def _gram_sets(
+    docs: DataFrame, value: Column, name: str, text_col: str = "text"
+) -> DataFrame:
+    """(doc_id, <name>): the distinct ``value``s of each doc's grams,
+    NULL (not empty) for NULL text. Aggregates on doc_id, the row key."""
+    return shingle_rows(docs, text_col).groupBy("doc_id").agg(
+        F.when(F.count("gram") > 0, F.collect_set(value)).alias(name)
     )
 
 
 def minhash_signatures(docs: DataFrame, n: int = N_MINHASH) -> DataFrame:
-    """(doc_id, mh0..mh{n-1}) — per-row, map-only."""
-    sh = with_shingles(docs, distinct=False)
-    return sh.select(
-        "doc_id", *[minhash_col(i).alias(f"mh{i}") for i in range(n)]
+    """(doc_id, mh0..mh{n-1}): mh{i} = min of md5('{i}:' || gram) over
+    the doc's shingle_rows, NULL for NULL text. Aggregates on doc_id,
+    which must be the row key (it is in documents, heldout and
+    conv_text_docs); partial aggregation runs map-side, so the shuffle
+    carries n hashes per doc, never text or grams."""
+    g = F.col("gram")
+    return shingle_rows(docs).groupBy("doc_id").agg(
+        *[F.min(F.md5(F.concat(F.lit(f"{i}:"), g))).alias(f"mh{i}") for i in range(n)]
     )
 
 
@@ -127,12 +120,12 @@ def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
 
 def jaccard_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact shingle-Jaccard for candidate pairs (verification step).
-    The shingle frame feeds both sides of the pair join (sh_a, sh_b),
+    The shingle-set frame feeds both sides of the pair join (sh_a, sh_b),
     so it is tracked-persisted — without it the shingle pass over the
     corpus text runs twice per action (guide §2.4)."""
     from ml4logs_spark import cache
 
-    sh = cache.track(with_shingles(docs).select("doc_id", "shingles"))
+    sh = cache.track(_gram_sets(docs, F.col("gram"), "shingles"))
     out = (
         pairs.join(sh.withColumnRenamed("doc_id", "doc_a")
                      .withColumnRenamed("shingles", "sh_a"), "doc_a")
@@ -576,14 +569,8 @@ def contaminated_ids(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     all-pairs. Benchmark suites are tiny next to a 100 TB corpus, so
     the distinct benchmark-shingle side is broadcast; the big side
     never shuffles."""
-    doc_grams = with_shingles(docs, distinct=False).select(
-        "doc_id", F.explode("shingles").alias("gram")
-    )
-    bench_grams = (
-        with_shingles(benchmark, distinct=False)
-        .select(F.explode("shingles").alias("gram"))
-        .distinct()
-    )
+    doc_grams = shingle_rows(docs)
+    bench_grams = shingle_rows(benchmark).select("gram").distinct()
     return (
         doc_grams.join(F.broadcast(bench_grams), "gram", "left_semi")
         .select("doc_id")
@@ -612,12 +599,10 @@ def contamination_report(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     on (bench_id, doc_id) is the only corpus-derived shuffle, bounded
     by contamination volume rather than corpus size; the final count
     and the zero-fill left join run on benchmark-sized frames."""
-    doc_grams = with_shingles(docs, distinct=False).select(
-        "doc_id", F.explode("shingles").alias("gram")
-    )
+    doc_grams = shingle_rows(docs)
     bench_grams = (
-        with_shingles(benchmark, distinct=False)
-        .select(F.col("doc_id").alias("bench_id"), F.explode("shingles").alias("gram"))
+        shingle_rows(benchmark)
+        .select(F.col("doc_id").alias("bench_id"), "gram")
         .distinct()
     )
     hits = (
@@ -905,17 +890,16 @@ def shingle_store(
     chars (32 bits), a 500-shingle doc has ~3e-5 probability of ANY
     within-doc collision, and a collision merely merges two shingles —
     noise far below the dedup threshold's resolution. Fixed-width hex
-    entries also columnar-compress better than raw text. Map-only;
-    sorted so the stored state is byte-deterministic across runs."""
-    sig = F.array_sort(
-        F.array_distinct(
-            F.transform(
-                shingles_col(text_col),
-                lambda s: F.substring(F.md5(s), 1, hash_chars),
-            )
-        )
+    entries also columnar-compress better than raw text. Sorted so the
+    stored state is byte-deterministic; NULL for NULL text. Aggregates
+    on doc_id, which must be the row key (it is in documents, heldout
+    and conv_text_docs); the collect_set combines map-side, so the
+    shuffle carries each doc's distinct hashes, never text or grams."""
+    sig = _gram_sets(
+        docs, F.substring(F.md5("gram"), 1, hash_chars), "sh_sig", text_col
     )
-    return docs.select("doc_id", sig.alias("sh_sig"))
+    # sort_array == array_sort on a NULL-free array, minus the lambda
+    return sig.select("doc_id", F.sort_array("sh_sig").alias("sh_sig"))
 
 
 def store_jaccard_pairs(store: DataFrame, pairs: DataFrame) -> DataFrame:

@@ -528,3 +528,108 @@ def test_latency_histogram_bucket_and_percentile_property(spark, lats, qs):
         p: (n, buckets_sorted[(n * p + 99) // 100 - 1]) for p in qs
     }
     assert got == want
+
+
+# Pieces for shingle-kernel inputs: runs of spaces (empty tokens),
+# tabs and newlines inside tokens, NBSP (not a split point), combining
+# marks and astral-plane emoji.
+_SHINGLE_PIECES = ["a", "b", "ab", " ", "  ", "\t", "\n", " ", "é",
+                   "\U0001F600"]
+# Always present, whatever hypothesis draws: NULL and empty text, one and
+# two tokens, leading/trailing spaces, and a doc with repeated grams.
+_SHINGLE_EDGES = [None, "", "a", "a b", " a b ", "  ", "a b a b a b",
+                  "\ta\nb c d", "é \U0001F600 \U0001F600 x"]
+
+
+def _lambda_shingles(k: int = 3):
+    """The higher-order shingle array ``shingle_rows`` replaced: the
+    token array zipped with its own shifted tails, sliced to positions
+    1..max(L-k+1, 1). The reference for the kernel's exactness."""
+    toks = F.split(F.col("text"), " ")
+    n = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
+    sh = toks
+    for j in range(1, k):
+        sh = F.zip_with(
+            sh,
+            F.slice(toks, j + 1, 1 << 30),
+            lambda a, b: F.concat_ws(" ", a, b),
+        )
+    return F.slice(sh, 1, n)
+
+
+@settings(**SLOW)
+@given(
+    texts=st.lists(
+        st.lists(st.sampled_from(_SHINGLE_PIECES), max_size=14).map("".join),
+        max_size=12,
+    ),
+)
+def test_shingle_kernel_matches_lambda_reference_and_duckdb(spark, texts):
+    """shingle_rows equals the exploded lambda shingle array (as a
+    multiset per doc) and DuckDB's unnest(_SHINGLES) (as a set: the
+    oracle shingles are list_distinct'ed); minhash_signatures and
+    shingle_store equal the lambda expressions they replaced. Every
+    input doc gives exactly one signature and one store row, NULL text
+    included, so the explode drops no doc."""
+    from collections import Counter
+
+    import duckdb
+
+    from ml4logs_spark.operators import dedup
+    from ml4logs_spark.oracle.docs_sql import _SHINGLES
+
+    rows = list(enumerate(_SHINGLE_EDGES + texts))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    got = Counter(tuple(r) for r in dedup.shingle_rows(df).collect())
+    want = Counter(
+        tuple(r)
+        for r in df.select(
+            "doc_id", F.explode_outer(_lambda_shingles()).alias("gram")
+        ).collect()
+    )
+    assert got == want
+    assert {d for d, _ in got} == {i for i, _ in rows}
+    assert got[(0, None)] == 1  # NULL text: one row, NULL gram
+
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame(rows, columns=["doc_id", "text"])
+    )
+    duck = Counter(
+        con.execute(
+            f"SELECT doc_id, unnest({_SHINGLES}) AS gram FROM documents"
+        ).fetchall()
+    )
+    con.close()
+    assert duck == Counter({g for g in got if g[1] is not None})
+
+    def mh_ref_col(i):
+        return F.array_min(
+            F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{i}:"), s)))
+        ).alias(f"mh{i}")
+
+    sh = _lambda_shingles()
+    mh_ref = df.select(
+        "doc_id", *[mh_ref_col(i) for i in range(dedup.N_MINHASH)]
+    )
+    store_ref = df.select(
+        "doc_id",
+        F.array_sort(
+            F.array_distinct(
+                F.transform(
+                    F.array_distinct(sh),
+                    lambda s: F.substring(F.md5(s), 1, dedup.STORE_HASH_CHARS),
+                )
+            )
+        ).alias("sh_sig"),
+    )
+    for new, ref in (
+        (dedup.minhash_signatures(df), mh_ref),
+        (dedup.shingle_store(df), store_ref),
+    ):
+        got_rows = [tuple(r) for r in new.collect()]
+        assert len(got_rows) == len(rows)
+        assert sorted(got_rows, key=lambda r: r[0]) == [
+            tuple(r) for r in ref.orderBy("doc_id").collect()
+        ]

@@ -1,10 +1,14 @@
-"""Dump `.explain("formatted")` for declared queries to plans/r06/.
+"""Dump `.explain("formatted")` for declared queries, for before/after
+plan diffs.
 
-Usage: python tools/dump_plans_r06.py <before|after> <query> [query ...]
+Usage: python tools/dump_plans.py <dir> <before|after> <query> [query ...]
 
-Writes plans/r06/<query>_<tag>.txt for each named query, evaluated at
-sf0.01 (plan SHAPE is scale-invariant; the bench numbers come from
-bench_extra.py / bench.py, not from here).
+Writes <dir>/<query>_<tag>.txt for each named query, evaluated at
+sf0.01 (override with SPARK_GRAFT_SF_DIR; plan SHAPE is scale-invariant,
+timings come from the benchmark, not from here). <dir> is relative to
+the current directory. Dump the "before" side from a checkout of the
+parent commit and the "after" side from the change, then diff the
+pairs.
 """
 
 from __future__ import annotations
@@ -18,19 +22,17 @@ sys.path.insert(0, str(REPO))
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    if tag not in ("before", "after") or not names:
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
         print(__doc__)
         return 2
+    out_dir, tag, names = Path(sys.argv[1]), sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     import __spark_entry__ as entry
     from ml4logs_spark.session import get_spark
 
-    spark = get_spark(app_name="dump_plans_r06", cores=4, shuffle_partitions=8)
+    spark = get_spark(app_name="dump_plans", cores=4, shuffle_partitions=8)
     qs = entry.queries()
-    out_dir = REPO / "plans" / "r06"
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)

@@ -51,23 +51,21 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     return docs.join(keep, "doc_id", "left_semi")
 
 
-def shingle_rows(
-    docs: DataFrame, text_col: str = "text", k: int = SHINGLE_K
-) -> DataFrame:
+def shingle_rows(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, gram): one row per k-word shingle position 1..max(L-k+1, 1)
-    of the space-split tokens (the DuckDB oracle's generate_series
-    bound), within-doc repeats kept. The frame MinHash, the verify sets,
+    of the space-split tokens, k = SHINGLE_K (the DuckDB oracle's
+    generate_series bound), within-doc repeats kept. The frame MinHash, the verify sets,
     the hashed store and decontamination all build on; built-ins only,
     so whole-stage codegen compiles it. ``get`` is the null-safe index
     (ANSI element_at throws past the end) and ``concat_ws`` skips its
     NULLs, so short docs give one shorter gram; NULL text gives one row
     with a NULL gram, so no doc drops out at the explode."""
     toks, p = F.col("_toks"), F.col("_p")
-    n = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
+    n = F.greatest(F.size(toks) - F.lit(SHINGLE_K - 1), F.lit(1))
     pos = docs.select("doc_id", F.split(F.col(text_col), " ").alias("_toks")).select(
         "doc_id", "_toks", F.posexplode_outer(F.slice(toks, 1, n)).alias("_p", "_t")
     )
-    gram = F.concat_ws(" ", *[F.get(toks, p + j) for j in range(k)])
+    gram = F.concat_ws(" ", *[F.get(toks, p + j) for j in range(SHINGLE_K)])
     return pos.select("doc_id", F.when(p.isNotNull(), gram).alias("gram"))
 
 

@@ -105,23 +105,6 @@ def _hyperplane(plane: int, dim: int) -> list[float]:
     return w
 
 
-def lsh_signatures(
-    emb: DataFrame, n_planes: int = 8, dim: int = 64, vec_col: str = "embedding"
-) -> DataFrame:
-    """Map-only bit-signature: bit_p = sign(<v, h_p>)."""
-    bits = []
-    for p in range(n_planes):
-        w = F.array(*[F.lit(x) for x in _hyperplane(p, dim)])
-        bits.append(
-            F.when(_dot(F.col(vec_col), w) >= 0, F.lit(1)).otherwise(F.lit(0))
-            * (2 ** p)
-        )
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return _spread(emb).withColumn("lsh_sig", sig.cast("int"))
-
-
 def band_signatures(
     emb: DataFrame,
     n_planes: int = 8,

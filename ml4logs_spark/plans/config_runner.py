@@ -1,827 +1,328 @@
 """Config-driven pipeline dispatch — parity with the reference's primary
 entry point (``python -m ml4logs <config.json>``): a JSON ``pipeline``
-array of named ``action`` steps dispatched to engine functions
-(/root/reference/src/ml4logs/__main__.py:20-36, 46-51; step shape per
-configs/HDFS1_100k/drain_preprocess.json).
+array of named ``action`` steps, dispatched through one static table
+the way the reference's ``__main__`` maps action names to functions.
 
-Differences from the reference, by design:
+Step shape: ``{"action": name, "from": env_key, "out": env_key, "save":
+bool, "skip": bool, "partition_by": [cols], "where": sql, ...keys}``.
 
-- steps bind DataFrames into a named lazy environment (the analog of the
-  reference's file-path IR) instead of materializing files; ``save:
-  true`` commits a step's output to the warehouse — the durable
-  boundary (Iceberg when available, parquet+marker otherwise);
-- ``skip: true`` mirrors the reference's per-step skip flag;
-- unknown actions fail at VALIDATION time with the known-action list,
-  not at dispatch with a bare KeyError.
+- ``from`` names the env frame the operator reads (its first argument);
+  it defaults per action, usually to the previous logical stage.
+  Sources and merges take no ``from``.
+- ``out`` names the env frame the result binds to (default: the action
+  name). Steps bind DataFrames into a lazy environment — the analog of
+  the reference's file-path IR — instead of materializing files.
+- ``save: true`` commits the output to the warehouse, the durable
+  boundary, with optional ``partition_by``; downstream steps then read
+  the committed table.
+- ``skip: true`` mirrors the reference's per-step skip flag.
+- ``where`` (a SQL boolean expression) slices the ``from`` frame, so one
+  config can split history from a new batch; only the actions whose row
+  sets ``where=True`` honour it.
 
-Step shape: ``{"action": name, "from": env_key, "out": env_key,
-"save": bool, "skip": bool, ...action kwargs}``. ``from`` defaults per
-action (usually the previous logical stage), ``out`` defaults to the
-action name.
+Adding an action is one ``ACTIONS`` row: the operator, its default
+``from`` frame, the scalar step keys it accepts (each passed to the
+operator by name), the step keys that name env frames and the operator
+parameter each feeds, and whether ``where`` applies. Defaults live in
+the operator's signature only; a row carries a default of its own just
+where the config layer differs from the operator (or the operator has
+none). An operator that declares a ``spark`` parameter receives the
+session, and a step without ``input`` reads the config's ``input``
+directory. Steps whose work is more than one operator call go through a
+small composing function in this module.
+
+``validate_config`` checks every step before any Spark work: the action
+must exist, every key must be one its row accepts (a typo raises with
+the accepted list instead of running at the operator's default), and
+the arguments must bind to the operator's signature.
 """
 
 from __future__ import annotations
 
+import inspect
 import json
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ml4logs_spark.datagen import transcripts as tx
+from ml4logs_spark.operators import bpe, classify, curate, dedup, drain, encode
 from ml4logs_spark.operators import enrich as enrich_op
 from ml4logs_spark.operators import features as feat
-from ml4logs_spark.operators import parse, route, windows
+from ml4logs_spark.operators import parse, route, similarity, textqa, windows
 from ml4logs_spark.sources.tables import Warehouse
 
-
-def _a_transcripts(spark, env, step, cfg):
-    return tx.transcripts(spark, step.get("input", cfg["input"]))
-
-
-def _a_template_dim(spark, env, step, cfg):
-    return parse.template_dim(env[step.get("from", "transcripts")])
+# keys any step may carry; run_config reads them itself
+STEP_KEYS = ("action", "out", "save", "skip", "partition_by")
 
 
-def _a_parse(spark, env, step, cfg):
-    dim = env.get(step.get("dim", "template_dim"))
-    return parse.parsed_turns(env[step.get("from", "transcripts")], dim)
+class Action(NamedTuple):
+    op: Callable
+    src: str | None  # default ``from`` frame; None: the step takes no ``from``
+    keys: tuple[str, ...]  # scalar step keys, passed to ``op`` by name
+    frames: dict[str, str]  # step key naming an env frame -> ``op`` parameter
+    where: bool  # the ``where`` slice applies to the ``from`` frame
+    defaults: dict  # config-level defaults the operator does not supply
 
 
-def _a_enrich(spark, env, step, cfg):
-    return enrich_op.enrich(
-        env[step.get("from", "parse")], tx.role_dim(spark), tx.tool_dim(spark)
-    )
+def _row(op, src=None, keys="", frames=None, where=False, defaults=None) -> Action:
+    return Action(op, src, tuple(keys.split()), frames or {}, where, defaults or {})
 
 
-def _a_route(spark, env, step, cfg):
-    return route.with_sink_key(env[step.get("from", "enrich")]).drop("sink_key")
+def _transcripts(spark, input):
+    return tx.transcripts(spark, input)
 
 
-def _a_sink_counts(spark, env, step, cfg):
-    return route.sink_counts(env[step.get("from", "parse")])
+def _parquet(table: str) -> Callable:
+    def read(spark, input):
+        return spark.read.parquet(f"{input}/{table}.parquet")
+
+    return read
 
 
-def _a_counts(spark, env, step, cfg):
-    return feat.conv_tool_counts(env[step.get("from", "parse")])
+def _enrich(parsed):
+    spark = parsed.sparkSession
+    return enrich_op.enrich(parsed, tx.role_dim(spark), tx.tool_dim(spark))
 
 
-def _a_tfidf(spark, env, step, cfg):
-    counts = env[step.get("from", "counts")]
+def _route(parsed):
+    return route.with_sink_key(parsed).drop("sink_key")
+
+
+def _tfidf(counts):
     return feat.apply_tfidf(counts, feat.fit_idf(counts))
 
 
-def _a_timedeltas(spark, env, step, cfg):
-    return windows.with_timedeltas(env[step.get("from", "transcripts")]).select(
-        "conv_id", "turn_idx", "td"
-    )
+def _timedeltas(turns):
+    return windows.with_timedeltas(turns).select("conv_id", "turn_idx", "td")
 
 
-def _a_sessions(spark, env, step, cfg):
-    return windows.with_sessions(
-        env[step.get("from", "transcripts")], step.get("gap_seconds", 3600)
-    )
+def _drain(turns, **fit_kw):
+    return drain.match_templates(turns, drain.fit_templates(turns, **fit_kw))
 
 
-def _a_encode(spark, env, step, cfg):
-    from ml4logs_spark.operators import encode
+def _held_out(op: Callable) -> Callable:
+    # curate / curate_attrition: "benchmark" names the held-out frame;
+    # without one, the md5-nibble-'0' slice of the input is held out
+    def run(docs, benchmark=None, **kw):
+        if benchmark is None:
+            nib = F.substring(F.md5("text"), 1, 1)
+            docs, benchmark = docs.filter(nib != "0"), docs.filter(nib == "0")
+        return op(docs, benchmark, **kw)
 
-    return encode.turn_embeddings(
-        env[step.get("from", "transcripts")], dim=step.get("dim", 8)
-    )
+    return run
 
 
-def _a_array_maxpool(spark, env, step, cfg):
-    return feat.array_maxpool(
-        env[step.get("from", "encode")],
-        key=step.get("key", "conv_id"),
-        vec_col=step.get("vec_col", "embedding"),
-        dim=step.get("dim", 8),
-    )
-
-
-def _a_merge_features(spark, env, step, cfg):
-    return feat.merge_features(
-        env[step["left"]], env[step["right"]],
-        keys=step.get("keys", ["conv_id", "turn_idx"]),
-        feat_col=step.get("feat_col", "features"),
-    )
-
-
-def _a_documents(spark, env, step, cfg):
-    return spark.read.parquet(f"{step.get('input', cfg['input'])}/documents.parquet")
-
-
-def _a_embeddings(spark, env, step, cfg):
-    return spark.read.parquet(
-        f"{step.get('input', cfg['input'])}/embeddings.parquet"
-    )
-
-
-def _a_dedup_exact(spark, env, step, cfg):
-    from ml4logs_spark.operators import dedup
-
-    return dedup.exact_dedup(env[step.get("from", "documents")])
-
-
-def _a_near_dups(spark, env, step, cfg):
-    from ml4logs_spark.operators import dedup
-
-    return dedup.near_dups(
-        env[step.get("from", "documents")], step.get("threshold", 0.8)
-    )
-
-
-def _a_doc_stats(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.doc_stats(env[step.get("from", "documents")])
-
-
-def _a_repetition_stats(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.repetition_stats(env[step.get("from", "documents")])
-
-
-def _a_unigram_logprob(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.unigram_logprob(env[step.get("from", "documents")])
-
-
-def _a_bigram_counts(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.bigram_counts(
-        env[step.get("from", "documents")], step.get("min_count", 2)
-    )
-
-
-def _a_span_dedup(spark, env, step, cfg):
-    from ml4logs_spark.operators import dedup
-
-    return dedup.span_dedup(
-        env[step.get("from", "documents")], step.get("span_tokens", 16)
-    )
-
-
-def _a_curate_attrition(spark, env, step, cfg):
-    from pyspark.sql import functions as F
-
-    from ml4logs_spark.operators import curate
-
-    src = env[step.get("from", "documents")]
-    if "benchmark" in step:
-        bench = env[step["benchmark"]]
-    else:
-        nib = F.substring(F.md5("text"), 1, 1)
-        src, bench = src.filter(nib != "0"), src.filter(nib == "0")
-    return curate.curate_attrition(
-        src,
-        bench,
-        min_score=step.get("min_score", 0.5),
-        min_tokens=step.get("min_tokens", 3),
-        max_tokens=step.get("max_tokens", 10_000),
-        mix_weights=step.get("mix_weights"),
-        max_dup_bigram_frac=step.get("max_dup_bigram_frac"),
-        gopher=step.get("gopher"),
-    )
-
-
-def _a_incremental_span_dedup(spark, env, step, cfg):
-    # day-2 span dedup: the FROM frame is the new batch, the state
-    # table named by "store" is the historical block-hash dim
-    from ml4logs_spark.operators import dedup
-
-    return dedup.incremental_span_dedup(
-        env[step.get("from", "documents")],
-        env[step["store"]],
-        step.get("span_tokens", 16),
-    )
-
-
-def _a_gopher_quality(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    kw = {
-        k: step[k]
-        for k in (
-            "min_words", "max_words", "min_mean_word_len",
-            "max_mean_word_len", "max_symbol_ratio",
-            "min_alpha_word_frac", "min_stop_hits",
-        )
-        if k in step
-    }
-    return textqa.gopher_quality_flags(
-        env[step.get("from", "documents")], **kw
-    )
-
-
-def _a_length_histogram(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.doc_length_histogram(env[step.get("from", "documents")])
-
-
-def _a_merge_length_histograms(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.merge_doc_length_histograms(env[step["a"]], env[step["b"]])
-
-
-def _a_top_ngrams(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.top_ngrams_per_source(
-        env[step.get("from", "documents")],
-        k=step.get("k", 5),
-        min_count=step.get("min_count", 2),
-    )
-
-
-def _a_curate(spark, env, step, cfg):
-    from pyspark.sql import functions as F
-
-    from ml4logs_spark.operators import curate
-
-    src = env[step.get("from", "documents")]
-    if "benchmark" in step:
-        bench = env[step["benchmark"]]
-    else:
-        # no held-out set bound: deterministic md5-nibble split
-        nib = F.substring(F.md5("text"), 1, 1)
-        src, bench = src.filter(nib != "0"), src.filter(nib == "0")
-    return curate.curate_corpus(
-        src,
-        bench,
-        min_score=step.get("min_score", 0.5),
-        near_threshold=step.get("near_threshold"),
-        span_tokens=step.get("span_tokens"),
-        mix_weights=step.get("mix_weights"),
-        mix_alpha=step.get("mix_alpha"),
-        max_dup_bigram_frac=step.get("max_dup_bigram_frac"),
-        gopher=step.get("gopher"),
-        min_tokens=step.get("min_tokens", 3),
-        max_tokens=step.get("max_tokens", 10_000),
-        chunk_tokens=step.get("chunk_tokens", 64),
-        overlap=step.get("overlap", 8),
-    )
-
-
-def _a_near_dup_survivors(spark, env, step, cfg):
-    from ml4logs_spark.operators import dedup
-
-    return dedup.near_dup_survivors(
-        env[step.get("from", "documents")], step.get("threshold", 0.8)
-    )
-
-
-def _a_source_mix(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.source_mix_sample(
-        env[step.get("from", "documents")], step["weights"]
-    )
-
-
-def _a_drain(spark, env, step, cfg):
-    from ml4logs_spark.operators import drain
-
-    src = env[step.get("from", "transcripts")]
-    tpls = drain.fit_templates(src, sample_size=step.get("sample_size", 50_000))
-    return drain.match_templates(src, tpls)
-
-
-def _a_pack_sequences(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    src = env[step.get("from", "documents")]
+def _pack_sequences(src, **kw):
     # accepts either a chunk frame (doc_id, chunk_idx, n_tokens) or raw
     # documents (chunked first with the step's chunking params)
+    pack = {k: kw.pop(k) for k in ("seq_tokens",) if k in kw}
     if "chunk_idx" not in src.columns:
-        src = textqa.chunk_documents(
-            src,
-            chunk_tokens=step.get("chunk_tokens", 64),
-            overlap=step.get("overlap", 8),
-        )
-    return textqa.pack_sequences(src, seq_tokens=step.get("seq_tokens", 512))
+        src = textqa.chunk_documents(src, **kw)
+    return textqa.pack_sequences(src, **pack)
 
 
-def _a_boilerplate_filter(spark, env, step, cfg):
-    from ml4logs_spark.operators import dedup
-
-    return dedup.boilerplate_span_filter(
-        env[step.get("from", "documents")],
-        max_doc_freq=step.get("max_doc_freq", 2),
-        span_tokens=step.get("span_tokens", 16),
-    )
+def _nb_classify(docs, train=None, **fit_kw):
+    # fit on one frame, classify another (defaults to the split-query
+    # even/odd day-2 framing when only one frame is named)
+    if train is None:
+        return classify.nb_source_classify_split(docs)
+    return classify.nb_classify(docs, *classify.nb_fit(train, **fit_kw))
 
 
-def _a_temperature_mix(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
+def _lm_score(docs, model=None):
+    # score one frame under the LM carried by another frame's
+    # vocab_counts state (defaults to self-scoring == unigram_logprob)
+    return textqa.lm_score(docs, textqa.vocab_counts(docs if model is None else model))
 
+
+def _bpe_encode(docs, merges=None, **fit_kw):
+    if merges is None:
+        merges = bpe.bpe_fit(docs, **fit_kw)
+    return bpe.bpe_encode(docs, merges)
+
+
+def _conv_bands(turns):
+    # LSH band table over the conv-as-document adapter: half of the
+    # day-2 conversation near-dup state (fixed-width rows, no text)
+    return dedup.lsh_bands(dedup.minhash_signatures(dedup.conv_text_docs(turns)))
+
+
+def _conv_shingle_store(turns):
+    # hashed-shingle store over the conv adapter: the other half of
+    # the day-2 state (exact-Jaccard verification without the text)
+    return dedup.shingle_store(dedup.conv_text_docs(turns))
+
+
+_T, _D, _E = "transcripts", "documents", "embeddings"
+_AB = {"a": "a", "b": "b"}
+_QUALITY = "min_turns max_turns max_role_run min_user_frac max_tool_frac"
+_ATTRITION = "min_score min_tokens max_tokens mix_weights max_dup_bigram_frac gopher"
+_PQ = "m dim ksub n_iters sample_mod"
+
+ACTIONS: dict[str, Action] = {
+    "transcripts": _row(_transcripts, keys="input"),
+    "template_dim": _row(parse.template_dim, _T),
+    "parse": _row(parse.parsed_turns, _T, frames={"dim": "dim"},
+                  defaults={"dim": "template_dim"}),
+    "enrich": _row(_enrich, "parse"),
+    "route": _row(_route, "enrich"),
+    "sink_counts": _row(route.sink_counts, "parse"),
+    "counts": _row(feat.conv_tool_counts, "parse"),
+    "tfidf": _row(_tfidf, "counts"),
+    "timedeltas": _row(_timedeltas, _T),
+    "sessions": _row(windows.with_sessions, _T, "gap_seconds"),
+    "encode": _row(encode.turn_embeddings, _T, "dim"),
+    "array_maxpool": _row(feat.array_maxpool, "encode", "key vec_col dim",
+                          defaults={"key": "conv_id", "vec_col": "embedding",
+                                    "dim": 8}),
+    "merge_features": _row(feat.merge_features, None, "keys feat_col",
+                           {"left": "a", "right": "b"},
+                           defaults={"keys": ["conv_id", "turn_idx"]}),
+    "drain": _row(_drain, _T, "sample_size"),
+    "documents": _row(_parquet("documents"), keys="input"),
+    "embeddings": _row(_parquet("embeddings"), keys="input"),
+    "dedup_exact": _row(dedup.exact_dedup, _D),
+    "near_dups": _row(dedup.near_dups, _D, "threshold"),
+    "near_dup_survivors": _row(dedup.near_dup_survivors, _D, "threshold"),
+    "source_mix": _row(textqa.source_mix_sample, _D, "weights"),
+    "doc_stats": _row(textqa.doc_stats, _D),
+    "repetition_stats": _row(textqa.repetition_stats, _D),
+    "unigram_logprob": _row(textqa.unigram_logprob, _D),
+    "bigram_counts": _row(textqa.bigram_counts, _D, "min_count"),
+    "span_dedup": _row(dedup.span_dedup, _D, "span_tokens"),
+    "incremental_span_dedup": _row(dedup.incremental_span_dedup, _D, "span_tokens",
+                                   {"store": "store"}),
+    "gopher_quality": _row(textqa.gopher_quality_flags, _D,
+                           "min_words max_words min_mean_word_len max_mean_word_len "
+                           "max_symbol_ratio min_alpha_word_frac min_stop_hits"),
+    "length_histogram": _row(textqa.doc_length_histogram, _D),
+    "merge_length_histograms": _row(textqa.merge_doc_length_histograms, frames=_AB),
+    "top_ngrams": _row(textqa.top_ngrams_per_source, _D, "k min_count"),
+    "curate": _row(_held_out(curate.curate_corpus), _D,
+                   f"{_ATTRITION} near_threshold span_tokens mix_alpha "
+                   "chunk_tokens overlap", {"benchmark": "benchmark"}),
+    "curate_attrition": _row(_held_out(curate.curate_attrition), _D, _ATTRITION,
+                             {"benchmark": "benchmark"}),
+    "pack_sequences": _row(_pack_sequences, _D, "chunk_tokens overlap seq_tokens"),
+    "boilerplate_filter": _row(dedup.boilerplate_span_filter, _D,
+                               "max_doc_freq span_tokens"),
+    "dataset_split": _row(textqa.dataset_split, _D, "val_hex test_hex"),
     # full rows by default so the action composes with downstream
     # doc-consuming steps (the slim (doc_id, source) form is the
     # driver-query shape, selectable with full_rows: false)
-    return textqa.temperature_mix_sample(
-        env[step.get("from", "documents")],
-        alpha=step.get("alpha", 0.75),
-        full_rows=step.get("full_rows", True),
-    )
-
-
-def _a_ivf_cell_summary(spark, env, step, cfg):
-    from ml4logs_spark.operators import similarity
-
-    return similarity.ivf_cell_summary(
-        env[step.get("from", "embeddings")],
-        n_centroids=step.get("n_centroids", 16),
-    )
-
-
-def _a_knn_label_vote(spark, env, step, cfg):
-    from ml4logs_spark.operators import similarity
-
-    return similarity.knn_label_vote(
-        env[step.get("from", "embeddings")],
-        k=step.get("k", 5),
-        seed_rate_hex=step.get("seed_rate_hex", "2000"),
-    )
-
-
-def _a_bigram_logprob(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.bigram_logprob(env[step.get("from", "documents")])
-
-
-def _a_perplexity_buckets(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.perplexity_buckets(
-        env[step.get("from", "documents")],
-        n_buckets=step.get("n_buckets", 3),
-    )
-
-
-def _a_nb_classify(spark, env, step, cfg):
-    # fit on one frame, classify another (defaults to the split-query
-    # even/odd day-2 framing when only one frame is named)
-    from ml4logs_spark.operators import classify
-
-    src = env[step.get("from", "documents")]
-    if "train_from" in step:
-        loglik, priors = classify.nb_fit(
-            env[step["train_from"]], label_col=step.get("label_col", "source")
-        )
-        return classify.nb_classify(src, loglik, priors)
-    return classify.nb_source_classify_split(src)
-
-
-def _a_source_kl(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.source_kl_divergence(env[step.get("from", "documents")])
-
-
-def _a_bigram_novelty(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.bigram_novelty(env[step.get("from", "documents")])
-
-
-def _a_pq_encode(spark, env, step, cfg):
-    from ml4logs_spark.operators import similarity
-
-    return similarity.pq_encode(
-        env[step.get("from", "embeddings")],
-        m=step.get("m", 4),
-        dim=step.get("dim", 64),
-        ksub=step.get("ksub", 16),
-        n_iters=step.get("n_iters", 2),
-        sample_mod=step.get("sample_mod", 5),
-    )
-
-
-def _a_pq_topk(spark, env, step, cfg):
-    from ml4logs_spark.operators import similarity
-
-    return similarity.pq_topk(
-        env[step.get("from", "embeddings")],
-        query_ids=step.get("query_ids", list(range(5))),
-        k=step.get("k", 10),
-        m=step.get("m", 4),
-        dim=step.get("dim", 64),
-        ksub=step.get("ksub", 16),
-        n_iters=step.get("n_iters", 2),
-        sample_mod=step.get("sample_mod", 5),
-    )
-
-
-def _a_nb_confusion(spark, env, step, cfg):
-    from ml4logs_spark.operators import classify
-
-    return classify.nb_confusion(env[step.get("from", "documents")])
-
-
-def _a_lm_score(spark, env, step, cfg):
-    # score one frame under the LM carried by another frame's
-    # vocab_counts state (defaults to self-scoring == unigram_logprob)
-    from ml4logs_spark.operators import textqa
-
-    src = env[step.get("from", "documents")]
-    model_src = env[step["model_from"]] if "model_from" in step else src
-    return textqa.lm_score(src, textqa.vocab_counts(model_src))
-
-
-def _a_bpe_fit(spark, env, step, cfg):
-    from ml4logs_spark.operators import bpe
-
-    return bpe.bpe_fit(
-        env[step.get("from", "documents")],
-        n_merges=step.get("n_merges", 32),
-    )
-
-
-def _a_bpe_encode(spark, env, step, cfg):
-    from ml4logs_spark.operators import bpe
-
-    src = env[step.get("from", "documents")]
-    merges = env[step["merges_from"]] if "merges_from" in step else bpe.bpe_fit(
-        src, n_merges=step.get("n_merges", 32)
-    )
-    return bpe.bpe_encode(src, merges)
-
-
-def _a_dataset_split(spark, env, step, cfg):
-    from ml4logs_spark.operators import textqa
-
-    return textqa.dataset_split(
-        env[step.get("from", "documents")],
-        val_hex=step.get("val_hex", "0800"),
-        test_hex=step.get("test_hex", "0800"),
-    )
-
-
-def _a_incremental_conv_dedup(spark, env, step, cfg):
-    # day-2 conversation dedup: the FROM frame is the new batch of
-    # turns, the state table named by "state" is the historical
-    # conv_hash dim (emit conv_hashes(out) back to advance it)
-    from ml4logs_spark.operators import dedup
-
-    return dedup.incremental_conv_dedup(
-        env[step.get("from", "transcripts")],
-        env[step["state"]],
-    )
-
-
-def _a_conv_near_dups(spark, env, step, cfg):
-    from ml4logs_spark.operators import dedup
-
-    return dedup.conv_near_dups(
-        env[step.get("from", "transcripts")],
-        threshold=step.get("threshold", 0.8),
-    )
-
-
-def _a_incremental_conv_near_dups(spark, env, step, cfg):
-    # day-2 conversation NEAR-dup: the FROM frame is the new batch of
-    # turns; "bands" / "store" name the historical conversations' LSH
-    # band table and hashed-shingle store (over conv_text_docs) — emit
-    # the new batch's band/store rows back to advance the frontier
-    from ml4logs_spark.operators import dedup
-
-    return dedup.incremental_conv_near_dups(
-        _turns_slice(env, step),
-        env[step["bands"]],
-        env[step["store"]],
-        threshold=step.get("threshold", 0.8),
-    )
-
-
-def _a_conv_prefix_dups(spark, env, step, cfg):
-    # branch/retry detection: pairs where one complete conversation is
-    # a proper turn-prefix of a longer one; min_shared prunes
-    # boilerplate-depth matches (shared system-prompt openers)
-    from ml4logs_spark.operators import dedup
-
-    return dedup.conv_prefix_dups(
-        env[step.get("from", "transcripts")],
-        min_shared=step.get("min_shared", 1),
-    )
-
-
-def _a_conv_branch_survivors(spark, env, step, cfg):
-    from ml4logs_spark.operators import dedup
-
-    return dedup.conv_branch_survivors(
-        env[step.get("from", "transcripts")],
-        min_shared=step.get("min_shared", 1),
-    )
-
-
-def _a_tool_latency_stats(spark, env, step, cfg):
-    return windows.tool_latency_stats(env[step.get("from", "transcripts")])
-
-
-def _a_daily_health_rollup(spark, env, step, cfg):
-    return windows.daily_health_rollup(env[step.get("from", "transcripts")])
-
-
-def _a_tool_latency_percentiles(spark, env, step, cfg):
-    return windows.tool_latency_percentiles(
-        env[step.get("from", "transcripts")],
-        qs=tuple(step.get("qs", (0.5, 0.95))),
-    )
-
-
-def _a_merge_slowest_tool_calls(spark, env, step, cfg):
-    return windows.merge_slowest_tool_calls(
-        env[step["a"]], env[step["b"]], k=int(step.get("k", 20))
-    )
-
-
-def _a_tool_error_attribution(spark, env, step, cfg):
-    return windows.tool_error_attribution(_turns_slice(env, step))
-
-
-def _a_conv_ending_rollup(spark, env, step, cfg):
-    return windows.conv_ending_rollup(_turns_slice(env, step))
-
-
-def _a_conv_ending_drift(spark, env, step, cfg):
-    return windows.conv_ending_drift(
-        _turns_slice(env, step), jump_pct=int(step.get("jump_pct", 50))
-    )
-
-
-def _a_tool_retry_runs(spark, env, step, cfg):
-    return windows.tool_retry_runs(
-        _turns_slice(env, step), min_run=int(step.get("min_run", 2))
-    )
-
-
-def _a_tool_transition_counts(spark, env, step, cfg):
-    return windows.tool_transition_counts(_turns_slice(env, step))
-
-
-def _a_conv_endings(spark, env, step, cfg):
-    return windows.conv_endings(_turns_slice(env, step))
-
-
-def _a_slowest_tool_calls(spark, env, step, cfg):
-    return windows.slowest_tool_calls(
-        _turns_slice(env, step), k=int(step.get("k", 20))
-    )
-
-
-def _a_time_to_first_tool(spark, env, step, cfg):
-    return windows.time_to_first_tool(_turns_slice(env, step))
-
-
-def _a_daily_health_drift(spark, env, step, cfg):
-    # day-over-day error-rate drift with the integer jump flag
-    return windows.daily_health_drift(
-        _turns_slice(env, step), jump_pct=int(step.get("jump_pct", 50))
-    )
-
-
-def _a_tool_latency_histogram(spark, env, step, cfg):
-    # bounded-state latency histogram — the day-2/dashboard percentile
-    # state; "where" slices the turns frame for history/new splits
-    return windows.tool_latency_histogram_state(_turns_slice(env, step))
-
-
-def _a_merge_latency_histograms(spark, env, step, cfg):
-    return windows.merge_tool_latency_histograms(env[step["a"]], env[step["b"]])
-
-
-def _a_latency_drift(spark, env, step, cfg):
-    # percentile drift between two bounded histogram states (a=then,
-    # b=now)
-    return windows.latency_drift_from_histograms(
-        env[step["a"]], env[step["b"]],
-        qs=tuple(step.get("qs", (0.5, 0.95))),
-    )
-
-
-def _a_latency_percentiles_from_histogram(spark, env, step, cfg):
-    return windows.latency_percentiles_from_histogram(
-        env[step.get("from", "tool_latency_histogram")],
-        qs=tuple(step.get("qs", (0.5, 0.95))),
-    )
-
-
-def _a_daily_health_state(spark, env, step, cfg):
-    # mergeable per-(day, conv) counts — the telemetry day-2 state;
-    # the optional "where" slice expresses the history/new split
-    return windows.daily_health_state(_turns_slice(env, step))
-
-
-def _a_merge_daily_health_state(spark, env, step, cfg):
-    return windows.merge_daily_health_state(env[step["a"]], env[step["b"]])
-
-
-def _a_daily_health_from_state(spark, env, step, cfg):
-    return windows.daily_health_from_state(
-        env[step.get("from", "daily_health_state")]
-    )
-
-
-def _a_conv_prefix_state(spark, env, step, cfg):
-    # branch-dedup day-2 state, candidate half (per-depth prefix
-    # hashes); the optional "where" slice expresses the history/new
-    # split in one config, like the near-dup state actions
-    from ml4logs_spark.operators import dedup
-
-    return dedup.conv_prefix_state(_turns_slice(env, step))
-
-
-def _a_conv_frame_store(spark, env, step, cfg):
-    # branch-dedup day-2 state, verification half (per-turn frame
-    # hashes)
-    from ml4logs_spark.operators import dedup
-
-    return dedup.conv_frame_store(_turns_slice(env, step))
-
-
-def _a_incremental_conv_prefix_dups(spark, env, step, cfg):
-    # day-2 branch dedup: FROM = the new batch of turns; "state" /
-    # "frames" name the historical conv_prefix_state and
-    # conv_frame_store tables — emit the batch's own state/store rows
-    # back to advance the frontier
-    from ml4logs_spark.operators import dedup
-
-    return dedup.incremental_conv_prefix_dups(
-        _turns_slice(env, step),
-        env[step["state"]],
-        env[step["frames"]],
-        min_shared=step.get("min_shared", 1),
-    )
-
-
-def _a_curate_transcripts_attrition(spark, env, step, cfg):
-    from ml4logs_spark.operators import curate
-
-    return curate.curate_transcripts_attrition(
-        env[step.get("from", "transcripts")],
-        min_turns=step.get("min_turns", 2),
-        max_turns=step.get("max_turns", 512),
-        max_role_run=step.get("max_role_run", 4),
-        min_user_frac=step.get("min_user_frac", 0.1),
-        max_tool_frac=step.get("max_tool_frac", 0.6),
-    )
-
-
-def _a_conv_hashes(spark, env, step, cfg):
-    from ml4logs_spark.operators import dedup
-
-    return dedup.conv_hashes(env[step.get("from", "transcripts")])
-
-
-def _turns_slice(env, step):
-    # shared by the conversation near-dup state/apply actions: an
-    # optional "where" SQL boolean expr slices the turns frame, so one
-    # config can split history vs new batch (e.g. the md5(conv_id)
-    # hex-nibble split) without a separate generic filter step
-    t = env[step.get("from", "transcripts")]
-    return t.filter(F.expr(step["where"])) if step.get("where") else t
-
-
-def _a_conv_bands(spark, env, step, cfg):
-    # LSH band table over the conv-as-document adapter: half of the
-    # day-2 conversation near-dup state (fixed-width rows, no text)
-    from ml4logs_spark.operators import dedup
-
-    return dedup.lsh_bands(
-        dedup.minhash_signatures(dedup.conv_text_docs(_turns_slice(env, step)))
-    )
-
-
-def _a_conv_shingle_store(spark, env, step, cfg):
-    # hashed-shingle store over the conv adapter: the other half of
-    # the day-2 state (exact-Jaccard verification without the text)
-    from ml4logs_spark.operators import dedup
-
-    return dedup.shingle_store(dedup.conv_text_docs(_turns_slice(env, step)))
-
-
-def _a_conv_quality(spark, env, step, cfg):
-    return windows.conv_quality_flags(
-        env[step.get("from", "transcripts")],
-        min_turns=step.get("min_turns", 2),
-        max_turns=step.get("max_turns", 512),
-        max_role_run=step.get("max_role_run", 4),
-        min_user_frac=step.get("min_user_frac", 0.1),
-        max_tool_frac=step.get("max_tool_frac", 0.6),
-    )
-
-
-def _a_curate_transcripts(spark, env, step, cfg):
-    from ml4logs_spark.operators import curate
-
-    return curate.curate_transcripts(
-        env[step.get("from", "transcripts")],
-        min_turns=step.get("min_turns", 2),
-        max_turns=step.get("max_turns", 512),
-        max_role_run=step.get("max_role_run", 4),
-        min_user_frac=step.get("min_user_frac", 0.1),
-        max_tool_frac=step.get("max_tool_frac", 0.6),
-        near_threshold=step.get("near_threshold"),
-        branch_min_shared=step.get("branch_min_shared"),
-        seq_tokens=step.get("seq_tokens", 2048),
-    )
-
-
-ACTIONS: dict[str, Callable] = {
-    "transcripts": _a_transcripts,
-    "template_dim": _a_template_dim,
-    "parse": _a_parse,
-    "enrich": _a_enrich,
-    "route": _a_route,
-    "sink_counts": _a_sink_counts,
-    "counts": _a_counts,
-    "tfidf": _a_tfidf,
-    "timedeltas": _a_timedeltas,
-    "sessions": _a_sessions,
-    "encode": _a_encode,
-    "array_maxpool": _a_array_maxpool,
-    "merge_features": _a_merge_features,
-    "drain": _a_drain,
-    "documents": _a_documents,
-    "embeddings": _a_embeddings,
-    "dedup_exact": _a_dedup_exact,
-    "near_dups": _a_near_dups,
-    "near_dup_survivors": _a_near_dup_survivors,
-    "source_mix": _a_source_mix,
-    "doc_stats": _a_doc_stats,
-    "repetition_stats": _a_repetition_stats,
-    "unigram_logprob": _a_unigram_logprob,
-    "bigram_counts": _a_bigram_counts,
-    "span_dedup": _a_span_dedup,
-    "incremental_span_dedup": _a_incremental_span_dedup,
-    "gopher_quality": _a_gopher_quality,
-    "length_histogram": _a_length_histogram,
-    "merge_length_histograms": _a_merge_length_histograms,
-    "top_ngrams": _a_top_ngrams,
-    "curate": _a_curate,
-    "curate_attrition": _a_curate_attrition,
-    "pack_sequences": _a_pack_sequences,
-    "boilerplate_filter": _a_boilerplate_filter,
-    "dataset_split": _a_dataset_split,
-    "temperature_mix": _a_temperature_mix,
-    "knn_label_vote": _a_knn_label_vote,
-    "ivf_cell_summary": _a_ivf_cell_summary,
-    "bigram_logprob": _a_bigram_logprob,
-    "perplexity_buckets": _a_perplexity_buckets,
-    "nb_classify": _a_nb_classify,
-    "source_kl": _a_source_kl,
-    "bigram_novelty": _a_bigram_novelty,
-    "bpe_fit": _a_bpe_fit,
-    "bpe_encode": _a_bpe_encode,
-    "nb_confusion": _a_nb_confusion,
-    "lm_score": _a_lm_score,
-    "pq_encode": _a_pq_encode,
-    "pq_topk": _a_pq_topk,
-    "conv_quality": _a_conv_quality,
-    "curate_transcripts": _a_curate_transcripts,
-    "conv_hashes": _a_conv_hashes,
-    "conv_bands": _a_conv_bands,
-    "conv_shingle_store": _a_conv_shingle_store,
-    "incremental_conv_dedup": _a_incremental_conv_dedup,
-    "conv_near_dups": _a_conv_near_dups,
-    "incremental_conv_near_dups": _a_incremental_conv_near_dups,
-    "conv_prefix_dups": _a_conv_prefix_dups,
-    "conv_branch_survivors": _a_conv_branch_survivors,
-    "tool_latency_stats": _a_tool_latency_stats,
-    "daily_health_rollup": _a_daily_health_rollup,
-    "tool_latency_percentiles": _a_tool_latency_percentiles,
-    "daily_health_drift": _a_daily_health_drift,
-    "slowest_tool_calls": _a_slowest_tool_calls,
-    "tool_transition_counts": _a_tool_transition_counts,
-    "tool_retry_runs": _a_tool_retry_runs,
-    "tool_error_attribution": _a_tool_error_attribution,
-    "merge_slowest_tool_calls": _a_merge_slowest_tool_calls,
-    "conv_ending_rollup": _a_conv_ending_rollup,
-    "conv_ending_drift": _a_conv_ending_drift,
-    "conv_endings": _a_conv_endings,
-    "time_to_first_tool": _a_time_to_first_tool,
-    "tool_latency_histogram": _a_tool_latency_histogram,
-    "merge_latency_histograms": _a_merge_latency_histograms,
-    "latency_percentiles_from_histogram": _a_latency_percentiles_from_histogram,
-    "latency_drift": _a_latency_drift,
-    "daily_health_state": _a_daily_health_state,
-    "merge_daily_health_state": _a_merge_daily_health_state,
-    "daily_health_from_state": _a_daily_health_from_state,
-    "conv_prefix_state": _a_conv_prefix_state,
-    "conv_frame_store": _a_conv_frame_store,
-    "incremental_conv_prefix_dups": _a_incremental_conv_prefix_dups,
-    "curate_transcripts_attrition": _a_curate_transcripts_attrition,
+    "temperature_mix": _row(textqa.temperature_mix_sample, _D, "alpha full_rows",
+                            defaults={"full_rows": True}),
+    "knn_label_vote": _row(similarity.knn_label_vote, _E, "k seed_rate_hex"),
+    "ivf_cell_summary": _row(similarity.ivf_cell_summary, _E, "n_centroids"),
+    "bigram_logprob": _row(textqa.bigram_logprob, _D),
+    "perplexity_buckets": _row(textqa.perplexity_buckets, _D, "n_buckets"),
+    "nb_classify": _row(_nb_classify, _D, "label_col", {"train_from": "train"}),
+    "source_kl": _row(textqa.source_kl_divergence, _D),
+    "bigram_novelty": _row(textqa.bigram_novelty, _D),
+    "bpe_fit": _row(bpe.bpe_fit, _D, "n_merges"),
+    "bpe_encode": _row(_bpe_encode, _D, "n_merges", {"merges_from": "merges"}),
+    "nb_confusion": _row(classify.nb_confusion, _D),
+    "lm_score": _row(_lm_score, _D, frames={"model_from": "model"}),
+    "pq_encode": _row(similarity.pq_encode, _E, _PQ),
+    "pq_topk": _row(similarity.pq_topk, _E, f"query_ids k {_PQ}",
+                    defaults={"query_ids": list(range(5))}),
+    "conv_quality": _row(windows.conv_quality_flags, _T, _QUALITY),
+    "curate_transcripts": _row(curate.curate_transcripts, _T, f"{_QUALITY} "
+                               "near_threshold branch_min_shared seq_tokens"),
+    "conv_hashes": _row(dedup.conv_hashes, _T),
+    "conv_bands": _row(_conv_bands, _T, where=True),
+    "conv_shingle_store": _row(_conv_shingle_store, _T, where=True),
+    # day-2 conversation dedup: FROM = the new batch of turns, "state"
+    # = the historical conv_hash dim (emit conv_hashes(out) back to
+    # advance it)
+    "incremental_conv_dedup": _row(dedup.incremental_conv_dedup, _T,
+                                   frames={"state": "seen_hashes"}),
+    "conv_near_dups": _row(dedup.conv_near_dups, _T, "threshold"),
+    # "bands" / "store" name the historical conversations' LSH band
+    # table and hashed-shingle store (conv_bands / conv_shingle_store)
+    "incremental_conv_near_dups": _row(
+        dedup.incremental_conv_near_dups, _T, "threshold",
+        {"bands": "seen_bands", "store": "seen_store"}, where=True),
+    "conv_prefix_dups": _row(dedup.conv_prefix_dups, _T, "min_shared"),
+    "conv_branch_survivors": _row(dedup.conv_branch_survivors, _T, "min_shared"),
+    "tool_latency_stats": _row(windows.tool_latency_stats, _T),
+    "daily_health_rollup": _row(windows.daily_health_rollup, _T),
+    "tool_latency_percentiles": _row(windows.tool_latency_percentiles, _T, "qs"),
+    "daily_health_drift": _row(windows.daily_health_drift, _T, "jump_pct", where=True),
+    "slowest_tool_calls": _row(windows.slowest_tool_calls, _T, "k", where=True),
+    "tool_transition_counts": _row(windows.tool_transition_counts, _T, where=True),
+    "tool_retry_runs": _row(windows.tool_retry_runs, _T, "min_run", where=True),
+    "tool_error_attribution": _row(windows.tool_error_attribution, _T, where=True),
+    "merge_slowest_tool_calls": _row(windows.merge_slowest_tool_calls, None, "k", _AB),
+    "conv_ending_rollup": _row(windows.conv_ending_rollup, _T, where=True),
+    "conv_ending_drift": _row(windows.conv_ending_drift, _T, "jump_pct", where=True),
+    "conv_endings": _row(windows.conv_endings, _T, where=True),
+    "time_to_first_tool": _row(windows.time_to_first_tool, _T, where=True),
+    "tool_latency_histogram": _row(windows.tool_latency_histogram_state, _T,
+                                   where=True),
+    "merge_latency_histograms": _row(windows.merge_tool_latency_histograms, frames=_AB),
+    "latency_percentiles_from_histogram": _row(
+        windows.latency_percentiles_from_histogram, "tool_latency_histogram", "qs"),
+    # percentile drift between two histogram states (a = then, b = now)
+    "latency_drift": _row(windows.latency_drift_from_histograms, None, "qs",
+                          {"a": "hist_a", "b": "hist_b"}),
+    "daily_health_state": _row(windows.daily_health_state, _T, where=True),
+    "merge_daily_health_state": _row(windows.merge_daily_health_state, frames=_AB),
+    "daily_health_from_state": _row(windows.daily_health_from_state,
+                                    "daily_health_state"),
+    "conv_prefix_state": _row(dedup.conv_prefix_state, _T, where=True),
+    "conv_frame_store": _row(dedup.conv_frame_store, _T, where=True),
+    # day-2 branch dedup: "state" / "frames" name the historical
+    # conv_prefix_state and conv_frame_store tables
+    "incremental_conv_prefix_dups": _row(
+        dedup.incremental_conv_prefix_dups, _T, "min_shared",
+        {"state": "seen_state", "frames": "seen_frames"}, where=True),
+    "curate_transcripts_attrition": _row(curate.curate_transcripts_attrition, _T,
+                                         _QUALITY),
 }
 
 
+def accepted_keys(name: str) -> list[str]:
+    """Every step key the ``name`` action accepts."""
+    a = ACTIONS[name]
+    keys = [*STEP_KEYS, *a.keys, *a.frames]
+    if a.src:
+        keys.append("from")
+    if a.where:
+        keys.append("where")
+    return sorted(keys)
+
+
+def _arguments(a: Action, step: dict, cfg: dict, env, spark) -> tuple[tuple, dict]:
+    """Positional and keyword arguments of ``a.op`` for ``step``. ``env``
+    maps frame names to frames; validation passes a stand-in that
+    returns the names themselves."""
+    s = {**a.defaults, **step}
+    if "input" in a.keys and "input" in cfg:
+        s.setdefault("input", cfg["input"])
+    kw = {k: s[k] for k in a.keys if k in s}
+    for key, param in a.frames.items():
+        if key in step:
+            kw[param] = env[step[key]]
+        elif key in s:  # a frame named by a row default may be unbound
+            kw[param] = env.get(s[key])
+    if "spark" in inspect.signature(a.op).parameters:
+        kw["spark"] = spark
+    return ((env[step.get("from", a.src)],) if a.src else ()), kw
+
+
+class _Names(dict):
+    # validation stand-in for the frame env: every name resolves to itself
+    def __missing__(self, name):
+        return name
+
+
 def validate_config(cfg: dict) -> None:
+    """Check every step before any Spark work runs: a known action, only
+    keys its row accepts, and arguments that bind to the operator."""
     if "pipeline" not in cfg or not isinstance(cfg["pipeline"], list):
         raise ValueError("config needs a 'pipeline' list")
     for i, step in enumerate(cfg["pipeline"]):
@@ -830,6 +331,27 @@ def validate_config(cfg: dict) -> None:
             raise ValueError(
                 f"step {i}: unknown action {name!r}; known: {sorted(ACTIONS)}"
             )
+        accepted = accepted_keys(name)
+        unknown = sorted(set(step) - set(accepted))
+        if unknown:
+            raise ValueError(
+                f"step {i} ({name}): unknown key(s) {unknown}; accepted: {accepted}"
+            )
+        a = ACTIONS[name]
+        args, kw = _arguments(a, step, cfg, _Names(), None)
+        try:
+            inspect.signature(a.op).bind(*args, **kw)
+        except TypeError as e:
+            raise ValueError(f"step {i} ({name}): {e}") from None
+
+
+def step_frame(spark: SparkSession, env: dict, step: dict, cfg: dict) -> DataFrame:
+    """The DataFrame one validated step binds, read from the ``env`` frames."""
+    a = ACTIONS[step["action"]]
+    args, kw = _arguments(a, step, cfg, env, spark)
+    if a.where and step.get("where"):
+        args = (args[0].filter(F.expr(step["where"])),)
+    return a.op(*args, **kw)
 
 
 def run_config(spark: SparkSession, cfg: dict | str) -> dict:
@@ -847,7 +369,7 @@ def run_config(spark: SparkSession, cfg: dict | str) -> dict:
         if step.get("skip"):
             result[out] = "skipped"
             continue
-        df = ACTIONS[name](spark, env, step, cfg)
+        df = step_frame(spark, env, step, cfg)
         env[out] = df
         if step.get("save"):
             if wh is None:

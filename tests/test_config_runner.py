@@ -1,8 +1,21 @@
 """Config-driven dispatch parity (reference __main__.py:20-51 UX)."""
 
-import pytest
+import inspect
+import json
+from pathlib import Path
 
-from ml4logs_spark.plans.config_runner import run_config, validate_config
+import pytest
+from pyspark.sql import functions as F
+
+from ml4logs_spark.datagen import transcripts as tx
+from ml4logs_spark.operators import (
+    bpe, classify, curate, dedup, drain, encode, enrich, parse, route, similarity,
+    textqa, windows,
+)
+from ml4logs_spark.operators import features as feat
+from ml4logs_spark.plans.config_runner import (
+    ACTIONS, run_config, step_frame, validate_config,
+)
 from tests.conftest import SF_DIR
 
 
@@ -344,3 +357,250 @@ def test_config_conv_near_dup_actions(spark, tmp_path):
         threshold=0.15,
     )
     assert result["incremental_conv_near_dups"] == direct.count() > 0
+
+
+def test_validate_rejects_unknown_step_key():
+    """A misspelt key fails validation with the accepted list instead of
+    silently running at the operator's default threshold."""
+    cfg = {"pipeline": [{"action": "documents", "input": SF_DIR},
+                        {"action": "near_dups", "threshhold": 0.95}]}
+    with pytest.raises(ValueError, match="threshhold") as err:
+        validate_config(cfg)
+    msg = str(err.value)
+    assert "accepted" in msg and "'threshold'" in msg and "'from'" in msg
+    validate_config({"pipeline": [{"action": "documents", "input": SF_DIR},
+                                  {"action": "near_dups", "threshold": 0.95}]})
+
+
+def test_validate_rejects_where_on_non_slicing_action():
+    slice_ = "substring(md5(conv_id), 1, 1) < '8'"
+    validate_config({"pipeline": [{"action": "transcripts", "input": SF_DIR},
+                                  {"action": "daily_health_state", "where": slice_}]})
+    with pytest.raises(ValueError, match="'where'"):
+        validate_config({"pipeline": [{"action": "documents", "input": SF_DIR},
+                                      {"action": "doc_stats", "where": "doc_id > 3"}]})
+
+
+def test_validate_rejects_missing_required_key():
+    with pytest.raises(ValueError, match="weights"):
+        validate_config({"pipeline": [{"action": "documents", "input": SF_DIR},
+                                      {"action": "source_mix"}]})
+
+
+_CONFIGS = Path(__file__).resolve().parent.parent / "configs"
+
+
+@pytest.mark.parametrize("path", sorted(p.name for p in _CONFIGS.glob("*.json")))
+def test_shipped_config_validates(path):
+    """Every shipped config binds every step without a Spark session."""
+    validate_config(json.loads((_CONFIGS / path).read_text()))
+
+
+def test_action_rows_name_operator_parameters():
+    """Every scalar key and frame key of a row binds to its operator."""
+    for name, a in ACTIONS.items():
+        params = {**{k: None for k in a.keys}, **{p: None for p in a.frames.values()}}
+        if "spark" in inspect.signature(a.op).parameters:
+            params["spark"] = None
+        args = (None,) if a.src else ()
+        inspect.signature(a.op).bind_partial(*args, **params)
+
+
+# extra step keys an action needs before it builds: the env frames it
+# merges or probes, and required scalar keys
+_STEPS = {
+    "merge_features": {"left": "feats", "right": "feats"},
+    "incremental_span_dedup": {"store": "block_store"},
+    "merge_length_histograms": {"a": "length_histogram", "b": "length_histogram"},
+    "source_mix": {"weights": {f"src{i}": "80" for i in range(20)}},
+    "incremental_conv_dedup": {"state": "conv_hashes"},
+    "incremental_conv_near_dups": {"bands": "conv_bands",
+                                   "store": "conv_shingle_store"},
+    "merge_slowest_tool_calls": {"a": "slowest_tool_calls", "b": "slowest_tool_calls"},
+    "merge_latency_histograms": {"a": "tool_latency_histogram",
+                                 "b": "tool_latency_histogram"},
+    "latency_drift": {"a": "tool_latency_histogram", "b": "tool_latency_histogram"},
+    "merge_daily_health_state": {"a": "daily_health_state", "b": "daily_health_state"},
+    "incremental_conv_prefix_dups": {"state": "conv_prefix_state",
+                                     "frames": "conv_frame_store"},
+}
+
+
+def _held_out_split(docs):
+    nib = F.substring(F.md5("text"), 1, 1)
+    return docs.filter(nib != "0"), docs.filter(nib == "0")
+
+
+# the direct operator call each action stands for, at the operator's
+# defaults plus the config-level defaults its row declares
+_DIRECT = {
+    "transcripts": lambda s, e: tx.transcripts(s, SF_DIR),
+    "template_dim": lambda s, e: parse.template_dim(e["transcripts"]),
+    "parse": lambda s, e: parse.parsed_turns(e["transcripts"], e["template_dim"]),
+    "enrich": lambda s, e: enrich.enrich(e["parse"], tx.role_dim(s), tx.tool_dim(s)),
+    "route": lambda s, e: route.with_sink_key(e["enrich"]).drop("sink_key"),
+    "sink_counts": lambda s, e: route.sink_counts(e["parse"]),
+    "counts": lambda s, e: feat.conv_tool_counts(e["parse"]),
+    "tfidf": lambda s, e: feat.apply_tfidf(e["counts"], feat.fit_idf(e["counts"])),
+    "timedeltas": lambda s, e: windows.with_timedeltas(e["transcripts"]).select(
+        "conv_id", "turn_idx", "td"),
+    "sessions": lambda s, e: windows.with_sessions(e["transcripts"]),
+    "encode": lambda s, e: encode.turn_embeddings(e["transcripts"]),
+    "array_maxpool": lambda s, e: feat.array_maxpool(
+        e["encode"], key="conv_id", vec_col="embedding", dim=8),
+    "merge_features": lambda s, e: feat.merge_features(
+        e["feats"], e["feats"], keys=["conv_id", "turn_idx"]),
+    "drain": lambda s, e: drain.match_templates(
+        e["transcripts"], drain.fit_templates(e["transcripts"])),
+    "documents": lambda s, e: s.read.parquet(f"{SF_DIR}/documents.parquet"),
+    "embeddings": lambda s, e: s.read.parquet(f"{SF_DIR}/embeddings.parquet"),
+    "dedup_exact": lambda s, e: dedup.exact_dedup(e["documents"]),
+    "near_dups": lambda s, e: dedup.near_dups(e["documents"]),
+    "near_dup_survivors": lambda s, e: dedup.near_dup_survivors(e["documents"]),
+    "source_mix": lambda s, e: textqa.source_mix_sample(
+        e["documents"], _STEPS["source_mix"]["weights"]),
+    "doc_stats": lambda s, e: textqa.doc_stats(e["documents"]),
+    "repetition_stats": lambda s, e: textqa.repetition_stats(e["documents"]),
+    "unigram_logprob": lambda s, e: textqa.unigram_logprob(e["documents"]),
+    "bigram_counts": lambda s, e: textqa.bigram_counts(e["documents"]),
+    "span_dedup": lambda s, e: dedup.span_dedup(e["documents"]),
+    "incremental_span_dedup": lambda s, e: dedup.incremental_span_dedup(
+        e["documents"], e["block_store"]),
+    "gopher_quality": lambda s, e: textqa.gopher_quality_flags(e["documents"]),
+    "length_histogram": lambda s, e: textqa.doc_length_histogram(e["documents"]),
+    "merge_length_histograms": lambda s, e: textqa.merge_doc_length_histograms(
+        e["length_histogram"], e["length_histogram"]),
+    "top_ngrams": lambda s, e: textqa.top_ngrams_per_source(e["documents"]),
+    "curate": lambda s, e: curate.curate_corpus(*_held_out_split(e["documents"])),
+    "curate_attrition": lambda s, e: curate.curate_attrition(
+        *_held_out_split(e["documents"])),
+    "pack_sequences": lambda s, e: textqa.pack_sequences(
+        textqa.chunk_documents(e["documents"])),
+    "boilerplate_filter": lambda s, e: dedup.boilerplate_span_filter(e["documents"]),
+    "dataset_split": lambda s, e: textqa.dataset_split(e["documents"]),
+    "temperature_mix": lambda s, e: textqa.temperature_mix_sample(
+        e["documents"], full_rows=True),
+    "knn_label_vote": lambda s, e: similarity.knn_label_vote(e["embeddings"]),
+    "ivf_cell_summary": lambda s, e: similarity.ivf_cell_summary(e["embeddings"]),
+    "bigram_logprob": lambda s, e: textqa.bigram_logprob(e["documents"]),
+    "perplexity_buckets": lambda s, e: textqa.perplexity_buckets(e["documents"]),
+    "nb_classify": lambda s, e: classify.nb_source_classify_split(e["documents"]),
+    "source_kl": lambda s, e: textqa.source_kl_divergence(e["documents"]),
+    "bigram_novelty": lambda s, e: textqa.bigram_novelty(e["documents"]),
+    "bpe_fit": lambda s, e: bpe.bpe_fit(e["documents"]),
+    "bpe_encode": lambda s, e: bpe.bpe_encode(
+        e["documents"], bpe.bpe_fit(e["documents"])),
+    "nb_confusion": lambda s, e: classify.nb_confusion(e["documents"]),
+    "lm_score": lambda s, e: textqa.lm_score(
+        e["documents"], textqa.vocab_counts(e["documents"])),
+    "pq_encode": lambda s, e: similarity.pq_encode(e["embeddings"]),
+    "pq_topk": lambda s, e: similarity.pq_topk(
+        e["embeddings"], query_ids=list(range(5))),
+    "conv_quality": lambda s, e: windows.conv_quality_flags(e["transcripts"]),
+    "curate_transcripts": lambda s, e: curate.curate_transcripts(e["transcripts"]),
+    "conv_hashes": lambda s, e: dedup.conv_hashes(e["transcripts"]),
+    "conv_bands": lambda s, e: e["conv_bands"],
+    "conv_shingle_store": lambda s, e: e["conv_shingle_store"],
+    "incremental_conv_dedup": lambda s, e: dedup.incremental_conv_dedup(
+        e["transcripts"], e["conv_hashes"]),
+    "conv_near_dups": lambda s, e: dedup.conv_near_dups(e["transcripts"]),
+    "incremental_conv_near_dups": lambda s, e: dedup.incremental_conv_near_dups(
+        e["transcripts"], e["conv_bands"], e["conv_shingle_store"]),
+    "conv_prefix_dups": lambda s, e: dedup.conv_prefix_dups(e["transcripts"]),
+    "conv_branch_survivors": lambda s, e: dedup.conv_branch_survivors(e["transcripts"]),
+    "tool_latency_stats": lambda s, e: windows.tool_latency_stats(e["transcripts"]),
+    "daily_health_rollup": lambda s, e: windows.daily_health_rollup(e["transcripts"]),
+    "tool_latency_percentiles": lambda s, e: windows.tool_latency_percentiles(
+        e["transcripts"]),
+    "daily_health_drift": lambda s, e: windows.daily_health_drift(e["transcripts"]),
+    "slowest_tool_calls": lambda s, e: e["slowest_tool_calls"],
+    "tool_transition_counts": lambda s, e: windows.tool_transition_counts(
+        e["transcripts"]),
+    "tool_retry_runs": lambda s, e: windows.tool_retry_runs(e["transcripts"]),
+    "tool_error_attribution": lambda s, e: windows.tool_error_attribution(
+        e["transcripts"]),
+    "merge_slowest_tool_calls": lambda s, e: windows.merge_slowest_tool_calls(
+        e["slowest_tool_calls"], e["slowest_tool_calls"]),
+    "conv_ending_rollup": lambda s, e: windows.conv_ending_rollup(e["transcripts"]),
+    "conv_ending_drift": lambda s, e: windows.conv_ending_drift(e["transcripts"]),
+    "conv_endings": lambda s, e: windows.conv_endings(e["transcripts"]),
+    "time_to_first_tool": lambda s, e: windows.time_to_first_tool(e["transcripts"]),
+    "tool_latency_histogram": lambda s, e: e["tool_latency_histogram"],
+    "merge_latency_histograms": lambda s, e: windows.merge_tool_latency_histograms(
+        e["tool_latency_histogram"], e["tool_latency_histogram"]),
+    "latency_percentiles_from_histogram": lambda s, e: (
+        windows.latency_percentiles_from_histogram(e["tool_latency_histogram"])),
+    "latency_drift": lambda s, e: windows.latency_drift_from_histograms(
+        e["tool_latency_histogram"], e["tool_latency_histogram"]),
+    "daily_health_state": lambda s, e: e["daily_health_state"],
+    "merge_daily_health_state": lambda s, e: windows.merge_daily_health_state(
+        e["daily_health_state"], e["daily_health_state"]),
+    "daily_health_from_state": lambda s, e: windows.daily_health_from_state(
+        e["daily_health_state"]),
+    "conv_prefix_state": lambda s, e: e["conv_prefix_state"],
+    "conv_frame_store": lambda s, e: e["conv_frame_store"],
+    "incremental_conv_prefix_dups": lambda s, e: dedup.incremental_conv_prefix_dups(
+        e["transcripts"], e["conv_prefix_state"], e["conv_frame_store"]),
+    "curate_transcripts_attrition": lambda s, e: curate.curate_transcripts_attrition(
+        e["transcripts"]),
+}
+
+
+@pytest.fixture(scope="module")
+def action_env(spark):
+    """The env frames the actions read by default or by name, built
+    directly from the operators (lazily: nothing here runs a job)."""
+    t = tx.transcripts(spark, SF_DIR)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    env = {"transcripts": t, "documents": docs,
+           "embeddings": spark.read.parquet(f"{SF_DIR}/embeddings.parquet"),
+           "template_dim": parse.template_dim(t)}
+    env["parse"] = parse.parsed_turns(t, env["template_dim"])
+    env["enrich"] = enrich.enrich(env["parse"], tx.role_dim(spark), tx.tool_dim(spark))
+    env["counts"] = feat.conv_tool_counts(env["parse"])
+    env["encode"] = encode.turn_embeddings(t)
+    env["feats"] = env["encode"].withColumnRenamed("embedding", "features")
+    env["block_store"] = dedup.block_store(docs)
+    env["length_histogram"] = textqa.doc_length_histogram(docs)
+    env["conv_hashes"] = dedup.conv_hashes(t)
+    conv_docs = dedup.conv_text_docs(t)
+    env["conv_bands"] = dedup.lsh_bands(dedup.minhash_signatures(conv_docs))
+    env["conv_shingle_store"] = dedup.shingle_store(conv_docs)
+    env["slowest_tool_calls"] = windows.slowest_tool_calls(t)
+    env["tool_latency_histogram"] = windows.tool_latency_histogram_state(t)
+    env["daily_health_state"] = windows.daily_health_state(t)
+    env["conv_prefix_state"] = dedup.conv_prefix_state(t)
+    env["conv_frame_store"] = dedup.conv_frame_store(t)
+    return env
+
+
+def test_direct_calls_cover_every_action():
+    assert sorted(_DIRECT) == sorted(ACTIONS)
+
+
+# builds that plant a fresh data leaf (a collected fit broadcast into a
+# UDF, a created dim frame, a checkpointed loop): two builds of the same
+# call are never the same plan, so only their schemas compare
+_FRESH_LEAF = {"bpe_fit", "drain", "near_dup_survivors", "source_mix"}
+
+
+@pytest.mark.parametrize("name", sorted(ACTIONS))
+def test_action_builds_its_operator_frame(spark, action_env, name):
+    """Each action, bound with no keys beyond the frames and required
+    values it needs, builds the frame of the direct operator call at the
+    operator's own defaults (plus the row's config-level defaults): the
+    same schema, and the same canonical plan wherever the build is
+    repeatable, which pins every scalar default the plan embeds."""
+    from ml4logs_spark import cache
+
+    step = {"action": name, **_STEPS.get(name, {})}
+    cfg = {"input": SF_DIR, "pipeline": [step]}
+    validate_config(cfg)
+    try:
+        got = step_frame(spark, action_env, step, cfg)
+        want = _DIRECT[name](spark, action_env)
+        assert got.schema == want.schema
+        if name not in _FRESH_LEAF:
+            assert got.sameSemantics(want)
+    finally:
+        cache.release_all()

@@ -156,6 +156,8 @@ def _conv_shingle_store(turns):
     return dedup.shingle_store(dedup.conv_text_docs(turns))
 
 
+# shorthands for the rows: the three source frames, the two-frame merge
+# keys, and key lists several rows share
 _T, _D, _E = "transcripts", "documents", "embeddings"
 _AB = {"a": "a", "b": "b"}
 _QUALITY = "min_turns max_turns max_role_run min_user_frac max_tool_frac"

@@ -29,11 +29,12 @@ def track(df: DataFrame, storage_level: StorageLevel | None = None) -> DataFrame
     return df
 
 
-def release_all() -> int:
-    """Unpersist every tracked frame; returns how many were released.
-    Safe to call repeatedly — already-unpersisted frames are a no-op."""
+def release_all(mark: int = 0) -> int:
+    """Unpersist every frame tracked after the first ``mark``; returns
+    how many were released. Safe to call repeatedly — already-unpersisted
+    frames are a no-op."""
     n = 0
-    while _TRACKED:
+    while len(_TRACKED) > mark:
         df = _TRACKED.pop()
         try:
             df.unpersist()
@@ -57,9 +58,4 @@ def scope():
     try:
         yield
     finally:
-        while len(_TRACKED) > mark:
-            df = _TRACKED.pop()
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        release_all(mark)

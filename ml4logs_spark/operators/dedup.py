@@ -781,34 +781,6 @@ def near_dup_survivors(
     return docs.join(losers, "doc_id", "left_anti")
 
 
-def incremental_exact_dedup(
-    new_docs: DataFrame, seen_hashes: DataFrame
-) -> DataFrame:
-    """Cross-batch exact dedup: rows of ``new_docs`` whose content hash
-    is NOT already in ``seen_hashes`` (a (text_hash) dim maintained by
-    prior ingest runs, e.g. ``exact_dup_groups().select("text_hash")``),
-    deduped within the batch as well.
-
-    The daily-ingest shape at 100 TB: the historical side is a compact
-    hash dim (one row per distinct content ever seen), the new batch
-    anti-joins against it on the uniform digest key and never rescans
-    the historical corpus. Emit ``exact_dup_groups(new_out)`` back into
-    the dim to advance the frontier. The anti-join is null-safe so a
-    historically-seen NULL-text row stays deduplicated (plain equality
-    would never match a NULL key); each row is hashed exactly once and
-    the in-batch dedup reuses that hash."""
-    hashed = with_text_hash(new_docs)
-    fresh = hashed.join(
-        seen_hashes.select(F.col("text_hash").alias("_seen_hash")),
-        F.col("text_hash").eqNullSafe(F.col("_seen_hash")),
-        "left_anti",
-    )
-    keep = fresh.groupBy("text_hash").agg(F.min("doc_id").alias("doc_id"))
-    return fresh.join(keep.select("doc_id"), "doc_id", "left_semi").drop(
-        "text_hash"
-    )
-
-
 def _band_pairs(bands: DataFrame) -> DataFrame:
     """Bucket-colliding (doc_a < doc_b) pairs from a (doc_id, band, h)
     band table — shared by whole-corpus and incremental candidate

@@ -1,11 +1,12 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Image/audio decode libraries are not in this container, so the decode
-kernel is STUBBED (deterministic fake features, or NotImplementedError
-for real codecs) — but the Spark-side plumbing is real and tested:
-binary columns, typed metadata struct, Arrow-batched ``mapInPandas``
-with a stable output schema, and partition-count preservation. Swapping
-the stub for a real decoder (PIL/librosa/ffmpeg) changes only
+``docs_as_media`` models documents as payload binaries with a typed
+metadata struct, ``media_meta`` flattens that struct (oracle-checked),
+and ``extract_features`` runs an Arrow-batched ``mapInPandas`` decode
+over the payloads with a stable output schema, map-only. Image/audio
+decode libraries are not in this container, so the decode kernel is
+STUBBED (deterministic fake features, or NotImplementedError for real
+codecs); swapping in a real decoder (PIL/librosa/ffmpeg) changes only
 ``_decode_batch``.
 """
 
@@ -94,81 +95,6 @@ def extract_features(media: DataFrame, batch_rows: int = 1024) -> DataFrame:
             yield _decode_batch(pdf)
 
     return media.select("doc_id", "payload").mapInPandas(run, schema=_FEATURE_SCHEMA)
-
-
-_FRAME_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("frame_idx", T.IntegerType()),
-    T.StructField("frame", T.BinaryType()),
-    T.StructField("n_bytes", T.IntegerType()),
-])
-
-
-def sample_frames(
-    media: DataFrame, n_frames: int = 4, use_real_codecs: bool = False
-) -> DataFrame:
-    """Frame sampling: one payload row -> ``n_frames`` frame rows.
-
-    The decode is STUBBED (equal byte-range chunks stand in for decoded
-    I-frames; a real ffmpeg/PyAV sampler replaces only the chunking
-    line); the plumbing is real: Arrow-batched ``mapInPandas`` with a
-    1->N exploding output schema, map-only (no shuffle) — the shape a
-    video pipeline needs at scale (frames stay co-partitioned with
-    their source row; downstream per-frame UDFs chain map-only).
-    """
-    if use_real_codecs:
-        raise NotImplementedError("no video codecs in this container")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                step = max(len(payload) // n_frames, 1)
-                for i in range(n_frames):
-                    chunk = bytes(payload[i * step:(i + 1) * step])
-                    rows.append((doc_id, i, chunk, len(chunk)))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame", "n_bytes"])
-
-    return media.select("doc_id", "payload").mapInPandas(run, schema=_FRAME_SCHEMA)
-
-
-_RESIZE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("thumb", T.BinaryType()),
-    T.StructField("n_bytes", T.IntegerType()),
-])
-
-
-def resize_media(
-    media: DataFrame, width: int = 8, height: int = 8, use_real_codecs: bool = False
-) -> DataFrame:
-    """Resize/thumbnail kernel: payload -> fixed-size representation.
-
-    STUB: a deterministic byte downsample (every len/(w*h)-th byte) in
-    place of a real PIL resize; schema, batch shape, and the map-only
-    plan are the real deliverable.
-    """
-    if use_real_codecs:
-        raise NotImplementedError("no image codecs in this container")
-    size = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if len(payload):
-                    step = max(len(payload) // size, 1)
-                    thumb = bytes(payload[::step][:size])
-                else:
-                    thumb = b""
-                rows.append((doc_id, width, height, thumb, len(thumb)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "thumb", "n_bytes"]
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(run, schema=_RESIZE_SCHEMA)
 
 
 def media_meta(docs: DataFrame) -> DataFrame:

@@ -1,19 +1,18 @@
-"""Route stage: skew-defused fan-out to (template_bucket, role) sinks.
+"""Route stage: fan-out to (template_bucket, role) sinks.
 
 The reference fans blocks out to per-split log files in a Python loop
 (/root/reference/src/ml4logs/data/hdfs.py:43-50, 70-74, 99-104); here a
 single pass computes the sink key and one partitioned write commits every
-sink atomically — no per-sink scan.
+sink atomically — no per-sink scan. The write is the pipeline's
+``routed_turns`` stage (plans/pipeline.py, ``partition_by=["template_bucket",
+"role"]``) or a config ``route`` step saved with the same ``partition_by``.
 
-Skew handling (explicit per the north rule, not AQE-only):
-- conversations are salted: ``repartition(P, conv_id, salt)`` where
-  salt = pmod(hash(turn_idx), SALT_BUCKETS). Per-turn stages (parse,
-  enrich, route) are embarrassingly parallel in turns, so splitting a
-  giant conversation across SALT_BUCKETS tasks is semantics-preserving.
-- stages that need per-conversation state (windows, per-conv aggs) use
-  the unsalted conv_id exchange; their per-row O(1) window state keeps
-  the giant conversation from OOMing a task, and AQE skew-join splitting
-  covers the join side.
+Skew: the partitioned write needs no exchange on the sink key — every
+task writes the sinks its own rows fall into, so the biggest sink is
+spread over all input tasks instead of pinned to one. Stages that need
+per-conversation state (windows, per-conv aggs) use the conv_id
+exchange; their per-row O(1) window state keeps a giant conversation
+from OOMing a task, and AQE skew-join splitting covers the join side.
 """
 
 from __future__ import annotations
@@ -21,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SALT_BUCKETS = 16
 TEMPLATE_BUCKETS = 8
 
 
@@ -32,37 +30,6 @@ def with_sink_key(parsed: DataFrame) -> DataFrame:
     ).withColumn(
         "sink_key",
         F.concat_ws("/", F.col("template_bucket").cast("string"), F.col("role")),
-    )
-
-
-def salted(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Explicit salted repartition for per-turn stages."""
-    salt = F.pmod(F.hash("turn_idx"), F.lit(SALT_BUCKETS))
-    if partitions:
-        return df.repartition(partitions, F.col("conv_id"), salt)
-    return df.repartition(F.col("conv_id"), salt)
-
-
-def route_write(parsed: DataFrame, out_dir: str, mode: str = "overwrite") -> None:
-    """One-pass fan-out write partitioned by sink key.
-
-    At cluster scale this is an Iceberg ``writeTo(...).append`` with the
-    same partition spec (see sources/tables.py for the format seam); the
-    directory-partitioned parquet layout is the offline fallback.
-
-    The pre-write exchange is salted: repartitioning on the sink key
-    alone (32 distinct values) would pin each sink to ONE task — the
-    biggest sink becomes the straggler. Salting by hashed (conv_id,
-    turn_idx) spreads every sink over SALT_BUCKETS tasks while
-    partitionBy still lays out one directory per sink.
-    """
-    salt = F.pmod(F.hash("conv_id", "turn_idx"), F.lit(SALT_BUCKETS))
-    (
-        with_sink_key(parsed)
-        .repartition(F.col("template_bucket"), F.col("role"), salt)
-        .write.mode(mode)
-        .partitionBy("template_bucket", "role")
-        .parquet(out_dir)
     )
 
 

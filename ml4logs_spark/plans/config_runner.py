@@ -52,6 +52,7 @@ from ml4logs_spark.operators import bpe, classify, curate, dedup, drain, encode
 from ml4logs_spark.operators import enrich as enrich_op
 from ml4logs_spark.operators import features as feat
 from ml4logs_spark.operators import parse, route, similarity, textqa, windows
+from ml4logs_spark.sources import rawlog
 from ml4logs_spark.sources.tables import Warehouse
 
 # keys any step may carry; run_config reads them itself
@@ -73,6 +74,11 @@ def _row(op, src=None, keys="", frames=None, where=False, defaults=None) -> Acti
 
 def _transcripts(spark, input):
     return tx.transcripts(spark, input)
+
+
+def _hdfs_log(spark, input, **kw):
+    # raw HDFS log text (a file, directory or glob) as transcript turns
+    return rawlog.read_hdfs_log(spark, input, **kw)
 
 
 def _parquet(table: str) -> Callable:
@@ -166,6 +172,7 @@ _PQ = "m dim ksub n_iters sample_mod"
 
 ACTIONS: dict[str, Action] = {
     "transcripts": _row(_transcripts, keys="input"),
+    "hdfs_log": _row(_hdfs_log, keys="input labeled order"),
     "template_dim": _row(parse.template_dim, _T),
     "parse": _row(parse.parsed_turns, _T, frames={"dim": "dim"},
                   defaults={"dim": "template_dim"}),

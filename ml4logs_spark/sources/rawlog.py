@@ -156,13 +156,3 @@ def read_hdfs_log(
         F.nullif("tool", F.lit("")).alias("tool"),
         "ts",
     )
-
-
-def read_labels_csv(spark: SparkSession, path: str) -> DataFrame:
-    """labels.csv scan with 'Anomaly'/'Normal' -> boolean
-    (/root/reference/src/ml4logs/data/hdfs.py:120-123, S4)."""
-    raw = spark.read.option("header", True).csv(path)
-    return raw.select(
-        F.col("BlockId").alias("conv_id"),
-        (F.col("Label") == "Anomaly").alias("label"),
-    )

@@ -61,23 +61,6 @@ class Warehouse:
             return self.spark.read.table(f"{self.catalog}.{name}")
         return self.spark.read.parquet(self.path(name))
 
-    def export(self, df: DataFrame, name: str, fmt: str = "csv") -> str:
-        """Interchange export — the analog of the reference's .csv/.npy
-        step outputs (S9; e.g. data/hdfs.py label/count csv writes).
-        ``fmt``: csv (header) or json (lines). Arrays/structs are not
-        csv-representable — callers flatten first (the reference's
-        dense matrices become long-form or element columns). Exports
-        are terminal interchange artifacts, not pipeline state: resume
-        and lineage stay on the table formats above."""
-        p = self.path(f"{name}.{fmt}")
-        if fmt == "csv":
-            df.write.mode("overwrite").option("header", True).csv(p)
-        elif fmt == "json":
-            df.write.mode("overwrite").json(p)
-        else:
-            raise ValueError(f"unknown export format: {fmt}")
-        return p
-
     def committed(self, name: str) -> bool:
         if self.use_iceberg:
             try:

@@ -1,11 +1,13 @@
-"""Structured Streaming variant of parse -> enrich -> windowed aggregate.
+"""Streaming transcript source shared by the streaming operators.
 
 The reference is strictly batch (SURVEY.md §2.9 — no watermarks, windows,
-or state anywhere in its tree), so this module is a capability extension,
-not a parity requirement: the same parse/enrich expressions run over
-``readStream`` with event-time windows + watermark for late turns. The
-static dims join as stream-static broadcast joins; per-sink counts become
-windowed streaming aggregations.
+or state anywhere in its tree), so streaming is a capability extension,
+not a parity requirement. This module is the file-source side of it: the
+explicit transcript schema, ``stream_transcripts`` (new parquet files =
+new micro-batch) and ``stamp_file_order`` (a deterministic delivery
+order for multi-batch drains). The same parse/enrich expressions then
+run over the stream in ``route_sink`` (per-sink fan-out with
+exactly-once checkpoints) and ``latency`` (cross-batch turn pairing).
 """
 
 from __future__ import annotations
@@ -15,10 +17,7 @@ import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ml4logs_spark.functions.masking import mask_text
 
 TRANSCRIPT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -59,85 +58,4 @@ def stream_transcripts(spark: SparkSession, in_dir: str) -> DataFrame:
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 4)
         .parquet(in_dir)
-    )
-
-
-def windowed_sink_counts(
-    stream: DataFrame,
-    template_dim: DataFrame,
-    watermark: str = "10 minutes",
-    window: str = "1 hour",
-) -> DataFrame:
-    """Per-(event-time window, template_bucket, role) streaming counts.
-
-    Late turns beyond the watermark are dropped (state-bounded); the
-    template dim is a static broadcast side.
-    """
-    parsed = stream.withColumn("template", mask_text()).join(
-        F.broadcast(template_dim.select("template_id", "template")),
-        "template",
-        "left",
-    )
-    bucket = F.pmod(F.coalesce(F.col("template_id"), F.lit(0)), F.lit(8))
-    return (
-        parsed.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", window).alias("w"),
-            bucket.alias("template_bucket"),
-            F.col("role"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "template_bucket", "role", "n_rows",
-        )
-    )
-
-
-def run_to_memory(counts: DataFrame, name: str = "stream_counts"):
-    """Drain all available input into an in-memory table (test harness);
-    production sinks would be ``toTable``/Kafka with checkpointing."""
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def streaming_daily_health(
-    stream: DataFrame,
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Streaming variant of the per-day health rollup
-    (operators/windows.py daily_health_rollup): event-time 1-day
-    windows with a watermark bounding state, per-day turns /
-    error-ppm / tool-ppm exactly as the batch op, conversations as
-    ``approx_convs`` (HLL — exact distinct is unsupported in
-    streaming aggregations; the exact count lives in the batch and
-    day-2 state paths). Late turns beyond the watermark drop; at
-    scale this is the live ops dashboard feed while
-    daily_health_state remains the ledger of record."""
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 day").alias("w"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_turns"),
-            F.approx_count_distinct("conv_id").alias("approx_convs"),
-            F.sum(
-                F.when(F.col("text").like("error code %"), 1).otherwise(0)
-            ).cast("long").alias("n_error_turns"),
-            F.sum(
-                F.when(F.col("tool").isNotNull(), 1).otherwise(0)
-            ).cast("long").alias("n_tool_turns"),
-        )
-    )
-    return agg.select(
-        F.unix_micros(F.col("w.start")).alias("day_us"),
-        "n_turns", "approx_convs", "n_error_turns", "n_tool_turns",
-        F.expr("(n_error_turns * 1000000) div n_turns").alias("error_ppm"),
-        F.expr("(n_tool_turns * 1000000) div n_turns").alias("tool_ppm"),
     )

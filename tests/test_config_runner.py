@@ -16,7 +16,12 @@ from ml4logs_spark.operators import features as feat
 from ml4logs_spark.plans.config_runner import (
     ACTIONS, run_config, step_frame, validate_config,
 )
+from ml4logs_spark.sources import rawlog
 from tests.conftest import SF_DIR
+
+_REPO = Path(__file__).resolve().parent.parent
+_CONFIGS = _REPO / "configs"
+_HDFS_LOG = str(_CONFIGS / "hdfs_sample.log")
 
 
 def test_config_pipeline_end_to_end(spark, tmp_path):
@@ -66,36 +71,6 @@ def test_config_skip_and_unknown_action(spark, tmp_path):
         validate_config({"pipeline": [{"action": "not_a_step"}]})
     with pytest.raises(ValueError, match="pipeline"):
         validate_config({})
-
-
-def test_export_and_jsonl_roundtrip(spark, turns, tmp_path):
-    """export(json) -> read_jsonl_transcripts is a lossless roundtrip of
-    the fact table (csv export covered for a flat aggregate)."""
-    from ml4logs_spark.sources.jsonl import read_jsonl_transcripts
-    from ml4logs_spark.sources.tables import Warehouse
-    from pyspark.sql import functions as F
-
-    wh = Warehouse(spark, str(tmp_path / "wh3"))
-    sample = turns.limit(200)
-    p = wh.export(
-        sample.withColumn("ts", F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")),
-        "transcripts", fmt="json",
-    )
-    back = read_jsonl_transcripts(spark, p)
-    key = ["conv_id", "turn_idx"]
-    a = sample.select("conv_id", "turn_idx", "text", F.unix_micros("ts").alias("us")) \
-        .toPandas().sort_values(key).reset_index(drop=True)
-    b = back.select("conv_id", "turn_idx", "text", F.unix_micros("ts").alias("us")) \
-        .toPandas().sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b) == 200
-    assert (a.us.values == b.us.values).all()
-    assert (a.text.values == b.text.values).all()
-
-    # csv export of a flat aggregate reads back with identical counts
-    agg = sample.groupBy("role").count()
-    p2 = wh.export(agg, "role_counts", fmt="csv")
-    back2 = spark.read.option("header", True).csv(p2)
-    assert back2.count() == agg.count()
 
 
 def test_config_documents_curation_path(spark, tmp_path):
@@ -387,13 +362,32 @@ def test_validate_rejects_missing_required_key():
                                       {"action": "source_mix"}]})
 
 
-_CONFIGS = Path(__file__).resolve().parent.parent / "configs"
-
-
 @pytest.mark.parametrize("path", sorted(p.name for p in _CONFIGS.glob("*.json")))
 def test_shipped_config_validates(path):
     """Every shipped config binds every step without a Spark session."""
     validate_config(json.loads((_CONFIGS / path).read_text()))
+
+
+def test_shipped_hdfs_config_runs(spark, tmp_path):
+    """The shipped HDFS config routes every line that carries a block id
+    from the committed sample log, and mines the PacketResponder
+    template from it."""
+    import re
+
+    cfg = json.loads((_CONFIGS / "hdfs_preprocess.json").read_text())
+    cfg["input"] = str(_REPO / cfg["input"])  # relative to the repo root
+    cfg["warehouse"] = str(tmp_path / "wh")
+    result = run_config(spark, cfg)
+
+    lines = Path(cfg["input"]).read_text().splitlines()
+    n_block_lines = sum(bool(re.search(rawlog.BLOCK_RE, line)) for line in lines)
+    assert 0 < n_block_lines < len(lines)
+    sinks = spark.read.parquet(str(tmp_path / "wh" / "sink_counts"))
+    assert sinks.agg(F.sum("n_rows")).first()[0] == n_block_lines
+    assert result["route"] == result["timedeltas"] == n_block_lines
+    templates = {r.template for r in spark.read.parquet(
+        str(tmp_path / "wh" / "template_dim")).collect()}
+    assert "PacketResponder <*> for block blk_<*> terminating" in templates
 
 
 def test_action_rows_name_operator_parameters():
@@ -409,6 +403,7 @@ def test_action_rows_name_operator_parameters():
 # extra step keys an action needs before it builds: the env frames it
 # merges or probes, and required scalar keys
 _STEPS = {
+    "hdfs_log": {"input": _HDFS_LOG},
     "merge_features": {"left": "feats", "right": "feats"},
     "incremental_span_dedup": {"store": "block_store"},
     "merge_length_histograms": {"a": "length_histogram", "b": "length_histogram"},
@@ -435,6 +430,7 @@ def _held_out_split(docs):
 # defaults plus the config-level defaults its row declares
 _DIRECT = {
     "transcripts": lambda s, e: tx.transcripts(s, SF_DIR),
+    "hdfs_log": lambda s, e: rawlog.read_hdfs_log(s, _HDFS_LOG),
     "template_dim": lambda s, e: parse.template_dim(e["transcripts"]),
     "parse": lambda s, e: parse.parsed_turns(e["transcripts"], e["template_dim"]),
     "enrich": lambda s, e: enrich.enrich(e["parse"], tx.role_dim(s), tx.tool_dim(s)),

@@ -379,28 +379,6 @@ def test_connected_components_long_chain_and_guard(spark):
         dedup.connected_components(chain, max_iter=1)
 
 
-def test_incremental_exact_dedup_across_batches(spark):
-    """Batch 2 drops content already seen in batch 1 (via the hash dim)
-    AND its own in-batch duplicates."""
-    from ml4logs_spark.operators import dedup
-
-    b1 = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], "doc_id long, text string"
-    )
-    seen = dedup.exact_dup_groups(b1).select("text_hash")
-    b2 = spark.createDataFrame(
-        [(10, "alpha beta"),      # seen in batch 1 -> dropped
-         (11, "epsilon zeta"),    # new
-         (12, "epsilon zeta"),    # in-batch dup of 11 -> dropped
-         (13, "eta theta")],      # new
-        "doc_id long, text string",
-    )
-    out = sorted(
-        r.doc_id for r in dedup.incremental_exact_dedup(b2, seen).collect()
-    )
-    assert out == [11, 13]
-
-
 def test_incremental_near_dups_across_batches(spark):
     """A new doc collides with the HISTORICAL band table without
     rescanning historical text; new-vs-new pairs are also produced."""
@@ -564,22 +542,6 @@ def test_incremental_near_dup_verified_replay_safe(spark):
     )
     assert replay == first
     assert all(a < b for a, b, _ in replay)
-
-
-def test_incremental_exact_dedup_null_text_cross_batch(spark):
-    """A historically-seen NULL-text row stays deduplicated: the
-    anti-join is null-safe (plain equality never matches NULL keys)."""
-    from ml4logs_spark.operators import dedup
-
-    b1 = spark.createDataFrame([(1, None)], "doc_id long, text string")
-    seen = dedup.exact_dup_groups(b1).select("text_hash")
-    b2 = spark.createDataFrame(
-        [(10, None), (11, "fresh content")], "doc_id long, text string"
-    )
-    out = sorted(
-        r.doc_id for r in dedup.incremental_exact_dedup(b2, seen).collect()
-    )
-    assert out == [11]
 
 
 def test_near_dup_survivors_max_quality_policy(spark):

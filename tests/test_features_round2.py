@@ -1,9 +1,7 @@
 """Round-2 operator tests: array max-pool (A6 full), feature merge (J3
-full), embedding production (F2), dense fit-schema counts, sessionizer
-multi-chunk ordering."""
+full), embedding production (F2), dense fit-schema counts."""
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -119,64 +117,6 @@ def test_dense_fit_counts_schema_evolution(spark):
     # zero-fill: apply-only conv has rows for every fit template, cnt 0
     z = out[out.conv_id == apply_only_conv]
     assert len(z) == len(fit_templates) and (z.cnt == 0).all()
-
-
-def test_multimodal_frame_sample_and_resize(spark):
-    from ml4logs_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(20)
-    m = multimodal.docs_as_media(docs)
-    frames = multimodal.sample_frames(m, n_frames=4).toPandas()
-    assert len(frames) == 20 * 4  # 1 -> N explode
-    assert set(frames.frame_idx) == {0, 1, 2, 3}
-    assert (frames.n_bytes == frames.frame.map(len)).all()
-    # deterministic: rerun identical
-    again = multimodal.sample_frames(m, n_frames=4).toPandas()
-    k = ["doc_id", "frame_idx"]
-    assert frames.sort_values(k).frame.tolist() == again.sort_values(k).frame.tolist()
-
-    thumbs = multimodal.resize_media(m, 4, 4).toPandas()
-    assert len(thumbs) == 20
-    assert (thumbs.n_bytes <= 16).all() and (thumbs.width == 4).all()
-
-    import pytest as _pytest
-    with _pytest.raises(NotImplementedError):
-        multimodal.sample_frames(m, use_real_codecs=True)
-
-
-def test_sessionizer_multichunk_order():
-    """Rows of one conversation split across Arrow chunks (and delivered
-    with turn order split across the chunks) must still sessionize in
-    turn order."""
-    fn = __import__(
-        "ml4logs_spark.streaming.sessionize", fromlist=["make_sessionizer"]
-    ).make_sessionizer(gap_seconds=10)
-
-    class FakeState:
-        exists = False
-        hasTimedOut = False
-
-        def update(self, v):
-            self.exists, self._v = True, v
-
-        @property
-        def get(self):
-            return self._v
-
-    base = pd.Timestamp("2026-01-01")
-    # turns 0,2 in chunk A; turn 1 in chunk B; gap>10s between 1 and 2
-    chunk_a = pd.DataFrame({
-        "conv_id": ["c", "c"], "turn_idx": [0, 2],
-        "ts": [base, base + pd.Timedelta(seconds=30)],
-    })
-    chunk_b = pd.DataFrame({
-        "conv_id": ["c"], "turn_idx": [1],
-        "ts": [base + pd.Timedelta(seconds=5)],
-    })
-    out = pd.concat(list(fn(("c",), iter([chunk_a, chunk_b]), FakeState())))
-    got = dict(zip(out.turn_idx, out.session_idx))
-    # turn0 starts s0; turn1 (+5s) stays s0; turn2 (+25s gap) -> s1
-    assert got == {0: 0, 1: 0, 2: 1}
 
 
 def test_rolling_fingerprint_winnowing_property(spark):

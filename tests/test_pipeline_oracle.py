@@ -12,6 +12,8 @@ import re
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
+
 
 def _mask(s: str) -> str:
     return re.sub(r"[0-9]+", "<*>", s)
@@ -38,16 +40,16 @@ def test_template_dim_matches_pandas_oracle(spark, turns, turns_pdf):
 
 
 def test_routed_row_equality(spark, turns, turns_pdf, tmp_path):
-    """For each (template_bucket, role) sink: exact row set with per-turn
-    text equality under (conv_id, turn_idx) ordering — the north rule's
-    core invariant."""
-    from ml4logs_spark.operators import parse, route
+    """For each (template_bucket, role) sink of the pipeline's
+    partitioned ``routed_turns`` write: exact row set with per-turn text
+    equality under (conv_id, turn_idx) ordering — the north rule's core
+    invariant."""
+    from ml4logs_spark.plans.pipeline import run_pipeline
 
-    p = parse.parsed_turns(turns)
-    out = str(tmp_path / "sinks")
-    route.route_write(p, out)
+    wh = tmp_path / "wh"
+    run_pipeline(spark, SF_DIR, str(wh))
 
-    back = spark.read.parquet(out).toPandas()
+    back = spark.read.parquet(str(wh / "routed_turns")).toPandas()
 
     # pandas oracle for sink assignment
     exp = turns_pdf.assign(template=turns_pdf.text.map(_mask))

@@ -40,15 +40,6 @@ def test_labeled_split(spark, tmp_path):
     assert out.role.tolist() == ["normal", "anomaly"]
 
 
-def test_labels_csv(spark, tmp_path):
-    from ml4logs_spark.sources.rawlog import read_labels_csv
-
-    p = tmp_path / "labels.csv"
-    p.write_text("BlockId,Label\nblk_1,Normal\nblk_2,Anomaly\n")
-    out = read_labels_csv(spark, str(p)).toPandas().sort_values("conv_id")
-    assert out.label.tolist() == [False, True]
-
-
 def test_multifile_glob_stable_order(spark, tmp_path):
     """turn_idx must be a physical property of the files — identical
     across a multi-file glob, recompute after repartition, and both

@@ -1,105 +1,9 @@
-"""Streaming parse->enrich->windowed aggregate equals the batch answer
-once the stream drains (availableNow)."""
+"""Streaming operators equal their batch answers once the stream drains
+(availableNow)."""
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
-
-
-def test_stream_counts_match_batch(spark, turns, tmp_path):
-    from ml4logs_spark.operators import parse
-    from ml4logs_spark.streaming import stream_pipeline as sp
-
-    # stage input as multiple files to force several micro-batches
-    in_dir = str(tmp_path / "stream_in")
-    turns.repartition(8).write.parquet(in_dir)
-
-    dim = parse.template_dim(turns)
-    stream = sp.stream_transcripts(spark, in_dir)
-    counts = sp.windowed_sink_counts(stream, dim, window="24 hours")
-    q = sp.run_to_memory(counts, name="t_stream_counts")
-    got = spark.table("t_stream_counts").toPandas()
-    q.stop()
-
-    # batch oracle with the same windowing
-    p = parse.parsed_turns(turns, dim)
-    batch = (
-        p.groupBy(
-            F.window("ts", "24 hours").alias("w"),
-            F.pmod("template_id", F.lit(8)).alias("template_bucket"),
-            "role",
-        )
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .select(F.col("w.start").alias("window_start"), "template_bucket", "role", "n_rows")
-        .toPandas()
-    )
-    key = ["window_start", "template_bucket", "role"]
-    a = got.sort_values(key).reset_index(drop=True)
-    b = batch.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    assert (a.n_rows.values == b.n_rows.values).all()
-
-
-def test_stream_exact_dedup_matches_batch(spark, turns, tmp_path):
-    """Streaming dropDuplicates on the content hash keeps exactly one
-    row per distinct text once the stream drains (all data inside one
-    watermark horizon -> identical to the batch exact dedup)."""
-    from ml4logs_spark.streaming import dedup as sdedup
-    from ml4logs_spark.streaming import stream_pipeline as sp
-
-    in_dir = str(tmp_path / "dedup_in")
-    turns.repartition(6).write.parquet(in_dir)
-
-    stream = sp.stream_transcripts(spark, in_dir)
-    deduped = sdedup.stream_exact_dedup(stream, watermark="365 days")
-    q = (
-        deduped.select("text_hash")
-        .writeStream.format("memory")
-        .queryName("t_stream_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("t_stream_dedup").toPandas()
-    q.stop()
-
-    from pyspark.sql import functions as F2
-    n_distinct = turns.select(
-        F2.md5(F2.coalesce("text", F2.lit(""))).alias("h")
-    ).distinct().count()
-    # exactly one survivor per distinct content, no hash appears twice
-    assert len(got) == n_distinct
-    assert got.text_hash.nunique() == n_distinct
-
-
-def test_stream_first_seen_counts_bounded(spark, turns, tmp_path):
-    from ml4logs_spark.streaming import dedup as sdedup
-    from ml4logs_spark.streaming import stream_pipeline as sp
-
-    in_dir = str(tmp_path / "dedup_counts_in")
-    turns.repartition(4).write.parquet(in_dir)
-    stream = sp.stream_transcripts(spark, in_dir)
-    counts = sdedup.stream_first_seen_counts(
-        stream, watermark="365 days", window="24 hours"
-    )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("t_first_seen")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("t_first_seen").toPandas()
-    q.stop()
-    assert len(got) > 0
-    # unique-content counts can never exceed total distinct texts
-    from pyspark.sql import functions as F2
-    n_distinct = turns.select(
-        F2.md5(F2.coalesce("text", F2.lit(""))).alias("h")
-    ).distinct().count()
-    assert got.n_unique.sum() <= n_distinct
 
 
 def test_stream_template_match_and_encode(spark, turns, tmp_path):
@@ -284,31 +188,3 @@ def test_stream_quality_gate_and_mix_sample_match_batch(spark, tmp_path):
     assert len(a) == len(b) > 0
     assert (a.doc_id == b.doc_id).all() and (a.source == b.source).all()
     assert set(a.source) <= {"s0", "s1"}
-
-
-def test_streaming_daily_health_matches_batch(spark, turns, tmp_path):
-    """Once the stream drains, the streaming health rollup's exact
-    columns (turns, error/tool counts and ppm rates) equal the batch
-    daily_health_rollup per day, and the HLL conv estimate is within
-    its documented error of the exact count."""
-    from ml4logs_spark.operators import windows
-    from ml4logs_spark.streaming import stream_pipeline as sp
-
-    in_dir = str(tmp_path / "health_in")
-    turns.repartition(8).write.parquet(in_dir)
-
-    health = sp.streaming_daily_health(sp.stream_transcripts(spark, in_dir))
-    q = sp.run_to_memory(health, name="t_stream_health")
-    got = spark.table("t_stream_health").toPandas().set_index("day_us")
-    q.stop()
-
-    batch = windows.daily_health_rollup(turns).toPandas().set_index("day_us")
-    assert set(got.index) == set(batch.index)
-    for day, b in batch.iterrows():
-        g = got.loc[day]
-        for c in ("n_turns", "n_error_turns", "n_tool_turns",
-                  "error_ppm", "tool_ppm"):
-            assert g[c] == b[c], (day, c)
-        assert abs(g["approx_convs"] - b["n_convs"]) <= max(
-            2, 0.1 * b["n_convs"]
-        )

@@ -102,7 +102,7 @@ def main() -> None:
     }
     bench_dir = REPO / "BENCH"
     bench_dir.mkdir(exist_ok=True)
-    (bench_dir / "scaling.json").write_text(json.dumps(result, indent=2))
+    (bench_dir / "scaling.json").write_text(json.dumps(result, indent=2) + "\n")
 
     # append to the durable datapoint log (rendered by write_bench_md.py
     # so regeneration never drops committed evidence)
@@ -118,7 +118,7 @@ def main() -> None:
         "efficiency": eff,
         "efficiency_range": [eff_min, eff_max],
     })
-    dp_path.write_text(json.dumps(dps, indent=2))
+    dp_path.write_text(json.dumps(dps, indent=2) + "\n")
 
     # BENCH/BASELINE.md is generated ONLY by write_bench_md.py, from the
     # JSON artifacts — no hand-written numbers to drift.

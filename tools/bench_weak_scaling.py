@@ -43,7 +43,7 @@ def main() -> None:
     }
     bench_dir = REPO / "BENCH"
     bench_dir.mkdir(exist_ok=True)
-    (bench_dir / "weak_scaling.json").write_text(json.dumps(result, indent=2))
+    (bench_dir / "weak_scaling.json").write_text(json.dumps(result, indent=2) + "\n")
     print(f"weak_scaling_efficiency={eff}")
 
 

@@ -50,7 +50,7 @@ def main() -> None:
     }
     bench = REPO / "BENCH"
     bench.mkdir(exist_ok=True)
-    (bench / "cpu_microbench.json").write_text(json.dumps(out, indent=2))
+    (bench / "cpu_microbench.json").write_text(json.dumps(out, indent=2) + "\n")
     print(json.dumps(out))
 
 

@@ -2,6 +2,7 @@
 
 import inspect
 import json
+import re
 from pathlib import Path
 
 import pytest
@@ -372,8 +373,6 @@ def test_shipped_hdfs_config_runs(spark, tmp_path):
     """The shipped HDFS config routes every line that carries a block id
     from the committed sample log, and mines the PacketResponder
     template from it."""
-    import re
-
     cfg = json.loads((_CONFIGS / "hdfs_preprocess.json").read_text())
     cfg["input"] = str(_REPO / cfg["input"])  # relative to the repo root
     cfg["warehouse"] = str(tmp_path / "wh")

@@ -2,7 +2,8 @@
 process, on bench.py's session and bucketed input table.
 
 Usage: python tools/profiler.py <component> [reps] [--split]
-(run without arguments to list the components)
+SPARK_GRAFT_SF_DIR (required) and SPARK_GRAFT_CPUS mean what they mean
+for bench.py; run without arguments to list the components.
 
 Default (cold): the component's state is built untimed, then its timed
 region runs ``reps`` times (default 1) — bench.py times each region
@@ -290,14 +291,15 @@ def timed(thunk: Callable, reps: int) -> list[float]:
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--split"]
     split = "--split" in sys.argv[1:]
-    if not args or args[0] not in COMPONENTS:
-        raise SystemExit(f"usage: python tools/profiler.py <component> [reps] "
-                         f"[--split]\ncomponents: {' '.join(COMPONENTS)}")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not args or args[0] not in COMPONENTS or not sf_dir:
+        raise SystemExit("usage: SPARK_GRAFT_SF_DIR=<sf dir> python tools/profiler.py "
+                         "<component> [reps] [--split]\n"
+                         f"components: {' '.join(COMPONENTS)}")
     which = args[0]
     reps = int(args[1]) if len(args) > 1 else (3 if split else 1)
 
     os.chdir(REPO)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     n_parts = max(16, 2 * (int(cores) if str(cores).isdigit() else 32))
 

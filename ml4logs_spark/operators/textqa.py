@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ml4logs_spark.operators import twophase
+
 # tiny marker-word lists for the n-gram/stopword language heuristic;
 # checked in priority order, strict-greater wins, default 'unk'
 LANG_MARKERS: dict[str, list[str]] = {
@@ -852,21 +854,10 @@ def perplexity_buckets(
     avg_logprob, ppl_rank, ppl_bucket).
 
     Shape at scale: scoring is ``unigram_logprob``'s shape; the
-    per-source ranking is the DISTRIBUTED two-phase shape of
-    ``build_vocab`` — range-partition by (source, key, doc_id), local
-    row_number, per-(partition, source) counts prefix-summed (a window
-    over #partitions × #sources rows, tiny) and broadcast back as base
-    offsets — because a per-source Window would sort a dominant
-    source's billions of docs in ONE task. The ntile itself is then
-    pure arithmetic on (rank, source_count): bucket = (rank-1)·n DIV
-    count + 1, with per-source counts riding back as a broadcast dim.
-    ``ranged`` is persisted (cache.track) before its three consumers
-    branch — repartitionByRange samples boundaries, so evaluating it
-    twice risks inconsistent ``_pid`` assignments."""
-    from pyspark.sql.window import Window
-
-    from ml4logs_spark.operators import twophase
-
+    per-source rank is ``twophase.positions`` grouped by source —
+    a per-source Window would sort a dominant source's billions of docs
+    in ONE task. The ntile is then arithmetic on (rank, source count):
+    bucket = (rank-1)·n DIV count + 1."""
     scored = (
         docs.select("doc_id", "source")
         .join(unigram_logprob(docs, text_col), "doc_id")
@@ -876,27 +867,17 @@ def perplexity_buckets(
             F.coalesce(-F.col("avg_logprob"), F.lit(float("inf"))),
         )
     )
-    parts = n_parts or docs.sparkSession.sparkContext.defaultParallelism
-    ranged = twophase.ranged(scored, ["source", "_key", "doc_id"], parts)
-    w_local = Window.partitionBy("_pid", "source").orderBy("_key", "doc_id")
-    local = ranged.withColumn("_local", F.row_number().over(w_local))
-    bases = twophase.bases(ranged, F.count(F.lit(1)), ("source",))
-    totals = ranged.groupBy("source").agg(F.count(F.lit(1)).alias("_c"))
-    return (
-        local.join(F.broadcast(bases), ["_pid", "source"])
-        .withColumn(
-            "ppl_rank", (F.col("_base") + F.col("_local")).cast("long")
-        )
-        .join(F.broadcast(totals), "source")
-        .select(
-            "doc_id",
-            "source",
-            "avg_logprob",
-            "ppl_rank",
-            F.expr(
-                f"CAST((ppl_rank - 1) * {int(n_buckets)} DIV _c + 1 AS INT)"
-            ).alias("ppl_bucket"),
-        )
+    ranked = twophase.positions(
+        scored, ["_key", "doc_id"], group_cols=["source"], n_parts=n_parts
+    )
+    return ranked.select(
+        "doc_id",
+        "source",
+        "avg_logprob",
+        F.col("_pos").alias("ppl_rank"),
+        F.expr(
+            f"CAST((_pos - 1) * {int(n_buckets)} DIV _total + 1 AS INT)"
+        ).alias("ppl_bucket"),
     )
 
 
@@ -925,18 +906,9 @@ def doc_length_histogram(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def merge_doc_length_histograms(a: DataFrame, b: DataFrame) -> DataFrame:
     """Additive merge of two length-histogram states — the corpus
-    report's day-2 path (the latency-histogram/vocab-counts mergeable
-    contract): day N+1 histograms only its own batch and folds into
-    the ~60-row stored state; the caller's ingest dedup owns
-    exactly-once."""
-    return (
-        a.unionByName(b)
-        .groupBy("bucket_lo")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_tokens_total").cast("long").alias("n_tokens_total"),
-        )
-    )
+    report's day-2 path (``twophase.sum_by``): day N+1 histograms only
+    its own batch and folds into the ~60-row stored state."""
+    return twophase.sum_by(a.unionByName(b), ["bucket_lo"])
 
 
 def top_ngrams_per_source(
@@ -993,11 +965,8 @@ def merge_vocab_counts(
     that). Thresholding into a vocabulary stays a downstream read
     (build_vocab's filter over the counts), so min_df/max_df can be
     retuned without re-ingesting."""
-    nc = vocab_counts(new_docs, text_col)
-    return (
-        state.unionByName(nc)
-        .groupBy("token")
-        .agg(F.sum("df").alias("df"), F.sum("tf").alias("tf"))
+    return twophase.sum_by(
+        state.unionByName(vocab_counts(new_docs, text_col)), ["token"]
     )
 
 
@@ -1017,43 +986,19 @@ def build_vocab(
     Shape at scale: explode + one partial+final hash aggregate on
     token; the corpus-size divisor rides along as a broadcast 1-row
     aggregate (fully lazy, no driver count). Dense 1-based ids ordered
-    by token text come from a DISTRIBUTED two-phase ranking — the same
-    shape as windows.conv_offsets — because unlike template grammars a
-    web-corpus vocabulary is NOT bounded (10^8-10^9 distinct tokens
-    pass min_df=2 at 100 TB) and a single-partition rank would sort it
-    all in one task:
-
-    1. range-partition the filtered vocab by token; row_number WITHIN
-       each range partition (tokens are distinct post-aggregate, so
-       row_number == dense_rank);
-    2. per-partition counts (#partitions rows — tiny) get an exclusive
-       prefix sum and broadcast-join back as the base offset.
-
-    Range partitions compose in token order, so base + local rank is
-    the global dense rank. The only single-partition window left runs
-    over #partitions rows. ``ranged`` is persisted (cache.track) before
-    the two consumers branch — repartitionByRange samples boundaries,
-    so evaluating it twice risks inconsistent ``_pid`` assignments."""
-    from pyspark.sql.window import Window
-
-    from ml4logs_spark.operators import twophase
-
+    by token text are ``twophase.positions`` ranks (tokens are distinct
+    post-aggregate, so the rank is the dense rank) — unlike template
+    grammars a web-corpus vocabulary is NOT bounded (10^8-10^9 distinct
+    tokens pass min_df=2 at 100 TB), so a single-partition rank would
+    sort it all in one task."""
     vocab = vocab_counts(docs, text_col)
     total = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
     kept = vocab.crossJoin(F.broadcast(total)).filter(
         (F.col("df") >= min_df)
         & (F.col("df") <= F.lit(max_df_ratio) * F.col("n_docs"))
     )
-    parts = n_parts or docs.sparkSession.sparkContext.defaultParallelism
-    ranged = twophase.ranged(kept, ["token"], parts)
-    w_local = Window.partitionBy("_pid").orderBy("token")
-    local = ranged.withColumn("_local", F.row_number().over(w_local))
-    bases = twophase.bases(ranged, F.count(F.lit(1)))
-    return local.join(F.broadcast(bases), "_pid").select(
-        (F.col("_base") + F.col("_local")).cast("long").alias("token_id"),
-        "token",
-        "df",
-        "tf",
+    return twophase.positions(kept, ["token"], n_parts=n_parts).select(
+        F.col("_pos").alias("token_id"), "token", "df", "tf"
     )
 
 
@@ -1070,19 +1015,14 @@ def pack_sequences(
     a boundary belongs to the sequence where its first token lands
     (stream packing, not bin packing — deterministic and order-exact).
 
-    Shape at scale: the global ordered prefix sum is the
-    ``conv_offsets`` two-phase shape (range-partition by (doc_id,
-    chunk_idx), per-partition window, broadcast base offsets) computed
-    over a SLIM (doc_id, chunk_idx, n_tokens) projection — three narrow
-    columns, so neither the tracked persist nor the window sort ever
-    carries chunk text; the text joins back on the unique chunk key at
-    the end. No single-partition window touches the corpus."""
+    Shape at scale: the global ordered prefix sum is
+    ``twophase.positions`` over a SLIM (doc_id, chunk_idx, n_tokens)
+    projection, so neither its persists nor its window sort ever carry
+    chunk text; the text joins back on the unique chunk key at the
+    end."""
     if seq_tokens <= 0:
         raise ValueError(f"seq_tokens must be positive, got {seq_tokens}")
-    from pyspark.sql.window import Window
-
     from ml4logs_spark import cache
-    from ml4logs_spark.operators import twophase
 
     # diamond node: the chunk frame feeds the slim offset computation
     # AND the final text join-back — without the persist the caller's
@@ -1090,21 +1030,12 @@ def pack_sequences(
     # (guide §2.4). Tracked; looping callers release via cache.scope().
     chunks = cache.track(chunks)
     slim = chunks.select("doc_id", "chunk_idx", "n_tokens")
-    parts = n_parts or chunks.sparkSession.sparkContext.defaultParallelism
-    ranged = twophase.ranged(slim, ["doc_id", "chunk_idx"], parts)
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy("doc_id", "chunk_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = ranged.withColumn(
-        "_local", F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-    )
-    bases = twophase.bases(ranged, F.sum("n_tokens"))
-    off = local.join(F.broadcast(bases), "_pid").select(
+    off = twophase.positions(
+        slim, ["doc_id", "chunk_idx"], "n_tokens", n_parts=n_parts
+    ).select(
         "doc_id",
         "chunk_idx",
-        (F.col("_local") + F.col("_base")).cast("long").alias("token_offset"),
+        (F.col("_pos") - F.col("n_tokens")).alias("token_offset"),
     )
     out = chunks.join(off, ["doc_id", "chunk_idx"])
     return (

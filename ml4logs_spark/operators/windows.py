@@ -17,6 +17,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ml4logs_spark.operators import twophase
+
+
 def w_conv():
     """Per-conversation ordered window (needs an active SparkSession)."""
     return Window.partitionBy("conv_id").orderBy("turn_idx")
@@ -91,47 +94,14 @@ def conv_offsets(turns: DataFrame, n_parts: int | None = None) -> DataFrame:
     """Per-conversation size + exclusive prefix-sum offset.
 
     Parity with the reference's BlockSize/BlockOffset bookkeeping
-    (/root/reference/src/ml4logs/data/hdfs.py:106-115), computed as a
-    DISTRIBUTED two-phase prefix sum — no global un-partitioned window
-    (round 1 used ``Window.orderBy(conv_id)``: one task sorts all #convs
-    rows, a scale-killer at 10^9+ conversations):
-
-    1. range-partition sizes by conv_id; exclusive running sum WITHIN
-       each range partition (window partitioned by the range id);
-    2. per-partition totals (#partitions rows — tiny) get their own
-       exclusive prefix sum and broadcast-join back as the base offset.
-
-    Range partitions compose in conv_id order, so base + local == the
-    global exclusive prefix sum. The only ordered-unpartitioned window
-    left runs over #partitions rows, not #convs.
-
-    ``ranged`` is persisted before the two consumers branch: the range
-    boundaries come from sampling and Spark documents
-    ``repartitionByRange`` output as potentially inconsistent across
-    evaluations, so evaluating it twice (local prefix sums vs
-    per-partition totals) risks mismatched ``_pid`` assignments and
-    silently wrong offsets. The persisted relation is one row per
-    conversation (two small long columns), so the materialization is
-    cheap even at 10^9 conversations; a cluster-scale alternative is a
-    deterministic boundary fit (sample conv_ids once, broadcast the cut
-    points, assign buckets by range lookup) — same shape as the drain
-    fit — which trades the cache for an extra sampling job.
-    """
-    from ml4logs_spark.operators import twophase
-
+    (ml4logs ``data/hdfs.py``), computed by ``twophase.positions`` over
+    one row per conversation — no global sort."""
     sizes = turns.groupBy("conv_id").agg(F.count(F.lit(1)).alias("conv_size"))
-    parts = n_parts or turns.sparkSession.sparkContext.defaultParallelism
-    ranged = twophase.ranged(sizes, ["conv_id"], parts)
-    w_local = (
-        Window.partitionBy("_pid").orderBy("conv_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = ranged.withColumn(
-        "_local", F.coalesce(F.sum("conv_size").over(w_local), F.lit(0))
-    )
-    bases = twophase.bases(ranged, F.sum("conv_size"))
-    return local.join(F.broadcast(bases), "_pid").select(
-        "conv_id", "conv_size", (F.col("_local") + F.col("_base")).alias("conv_offset")
+    return twophase.positions(
+        sizes, ["conv_id"], "conv_size", n_parts=n_parts
+    ).select(
+        "conv_id", "conv_size",
+        (F.col("_pos") - F.col("conv_size")).alias("conv_offset"),
     )
 
 
@@ -421,14 +391,10 @@ def pack_conversations(
     Returns (conv_id, conv_tokens, token_offset, seq_id, seq_pos).
 
     Shape at scale: one conv_id aggregate for per-conversation token
-    totals, then the two-phase distributed prefix sum over the
-    conv-count-sized totals frame (operators/twophase.py — no global
-    sort, no single-partition window over conversations); the division
-    into sequences is map-side arithmetic."""
+    totals, then ``twophase.positions`` over that conv-count-sized
+    frame; the division into sequences is map-side arithmetic."""
     if seq_tokens <= 0:
         raise ValueError(f"seq_tokens must be positive, got {seq_tokens}")
-    from ml4logs_spark.operators import twophase
-
     n_tok = F.size(
         F.filter(
             F.split(F.coalesce(F.col("text"), F.lit("")), " "),
@@ -438,31 +404,16 @@ def pack_conversations(
     sizes = turns.groupBy("conv_id").agg(
         F.sum(n_tok).cast("long").alias("conv_tokens")
     )
-    parts = n_parts or turns.sparkSession.sparkContext.defaultParallelism
-    ranged = twophase.ranged(sizes, ["conv_id"], parts)
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy("conv_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = ranged.withColumn(
-        "_local", F.coalesce(F.sum("conv_tokens").over(w_local), F.lit(0))
-    )
-    bases = twophase.bases(ranged, F.sum("conv_tokens"))
-    return local.join(F.broadcast(bases), "_pid").select(
+    off = F.col("_pos") - F.col("conv_tokens")
+    seq_id = F.floor(off / F.lit(seq_tokens))
+    return twophase.positions(
+        sizes, ["conv_id"], "conv_tokens", n_parts=n_parts
+    ).select(
         "conv_id",
         "conv_tokens",
-        (F.col("_local") + F.col("_base")).cast("long").alias("token_offset"),
-        F.floor((F.col("_local") + F.col("_base")) / F.lit(seq_tokens))
-        .cast("long")
-        .alias("seq_id"),
-        (
-            (F.col("_local") + F.col("_base"))
-            - F.floor((F.col("_local") + F.col("_base")) / F.lit(seq_tokens))
-            * seq_tokens
-        )
-        .cast("long")
-        .alias("seq_pos"),
+        off.cast("long").alias("token_offset"),
+        seq_id.cast("long").alias("seq_id"),
+        (off - seq_id * seq_tokens).cast("long").alias("seq_pos"),
     )
 
 
@@ -557,19 +508,8 @@ def daily_health_state(turns: DataFrame) -> DataFrame:
 
 
 def merge_daily_health_state(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Additive merge of two daily-health states (replays are NOT
-    idempotent by construction — the caller's ingest dedup owns
-    exactly-once, same as the vocab-count state contract)."""
-    cols = ["day_us", "conv_id"]
-    return (
-        a.unionByName(b)
-        .groupBy(cols)
-        .agg(
-            F.sum("n_turns").cast("long").alias("n_turns"),
-            F.sum("n_error_turns").cast("long").alias("n_error_turns"),
-            F.sum("n_tool_turns").cast("long").alias("n_tool_turns"),
-        )
-    )
+    """Additive merge of two daily-health states (``twophase.sum_by``)."""
+    return twophase.sum_by(a.unionByName(b), ["day_us", "conv_id"])
 
 
 def daily_health_from_state(state: DataFrame) -> DataFrame:
@@ -752,17 +692,10 @@ def tool_latency_percentiles(
     DuckDB oracle matches bit-for-bit; the rank is computed in integer
     arithmetic, (n*p + 99) div 100, never float ceil). approx
     percentile sketches are the wrong contract for an oracle-gated
-    engine; this is the exact path, and it still scales:
-
-    Never a per-tool global sort — the shared two-phase ranking core
-    (operators/twophase.py, the build_vocab / ppl-tier shape)
-    range-partitions on (tool, latency) so one tool's billions of
-    timed calls rank in parallel partition-local windows; the only
-    non-parallel stage is the prefix sum over #partitions x #tools
-    rows. Ties rank arbitrarily but the VALUE at any tie rank is
+    engine; this is the exact path, and it still scales: the per-tool
+    rank is ``twophase.positions`` grouped by tool, never a per-tool
+    global sort. Ties rank arbitrarily but the VALUE at any tie rank is
     identical, so the output is deterministic."""
-    from ml4logs_spark.operators import twophase
-
     pcts = []
     for q in qs:
         p = int(round(q * 100))
@@ -775,16 +708,15 @@ def tool_latency_percentiles(
         turns.select("tool", lat.alias("_lat"))
         .filter(F.col("tool").isNotNull() & F.col("_lat").isNotNull())
     )
-    parts = n_parts or turns.sparkSession.sparkContext.defaultParallelism
-    ranged = twophase.ranged(timed, ["tool", "_lat"], parts)
-    w_local = Window.partitionBy("_pid", "tool").orderBy("_lat")
-    local = ranged.withColumn("_local", F.row_number().over(w_local))
-    bases = twophase.bases(ranged, F.count(F.lit(1)), ("tool",))
+    ranked = twophase.positions(
+        timed, ["_lat"], group_cols=["tool"], n_parts=n_parts
+    )
+    # positions has persisted ``timed``; this aggregate reads the cache
     targets = (
-        ranged.groupBy("tool")
+        timed.groupBy("tool")
         .agg(F.count(F.lit(1)).alias("_n"))
         .select(
-            "tool",
+            F.col("tool").alias("_tool"),
             F.col("_n").alias("n_timed"),
             F.explode(
                 F.array(*[
@@ -797,22 +729,14 @@ def tool_latency_percentiles(
                 ])
             ).alias("_t"),
         )
-        .select(
-            "tool", F.col("_t.q_pct").alias("q_pct"),
-            F.col("_t._r").alias("_r"), "n_timed",
-        )
+        .select("_tool", "n_timed", "_t.q_pct", "_t._r")
     )
-    return (
-        local.join(F.broadcast(bases), ["_pid", "tool"])
-        .withColumn("_rank", (F.col("_base") + F.col("_local")).cast("long"))
-        .join(
-            F.broadcast(targets),
-            (F.col("_rank") == F.col("_r")) & (local["tool"] == targets["tool"]),
-        )
-        .select(
-            local["tool"], "q_pct", "n_timed",
-            F.col("_lat").cast("long").alias("latency_us"),
-        )
+    return ranked.join(
+        F.broadcast(targets),
+        (F.col("_pos") == F.col("_r")) & (F.col("tool") == F.col("_tool")),
+    ).select(
+        "tool", "q_pct", "n_timed",
+        F.col("_lat").cast("long").alias("latency_us"),
     )
 
 
@@ -861,14 +785,9 @@ def histogram_from_latencies(lats: DataFrame) -> DataFrame:
 
 
 def merge_tool_latency_histograms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Additive merge of two latency-histogram states (the mergeable
-    vocab/health-count contract: the caller's ingest dedup owns
-    exactly-once)."""
-    return (
-        a.unionByName(b)
-        .groupBy("tool", "bucket_lo")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+    """Additive merge of two latency-histogram states
+    (``twophase.sum_by``)."""
+    return twophase.sum_by(a.unionByName(b), ["tool", "bucket_lo"])
 
 
 def latency_percentiles_from_histogram(

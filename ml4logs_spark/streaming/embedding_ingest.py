@@ -96,7 +96,7 @@ def make_batch_ingester(
             )
         batch = batch.persist()
         try:
-            if batch.rdd.isEmpty():
+            if batch.isEmpty():
                 marker.mkdir()
                 return
             quant_path = root / "quant"

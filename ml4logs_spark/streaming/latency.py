@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ml4logs_spark.operators import twophase
+
 LATENCY_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
     T.StructField("turn_idx", T.IntegerType()),
@@ -142,10 +144,8 @@ def read_latency_state(spark: SparkSession, state_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "tool string, bucket_lo long, n long"
         )
-    return (
-        spark.read.parquet(str(hist))
-        .groupBy("tool", "bucket_lo")
-        .agg(F.sum("n").cast("long").alias("n"))
+    return twophase.sum_by(
+        spark.read.parquet(str(hist)).drop("batch"), ["tool", "bucket_lo"]
     )
 
 

@@ -479,6 +479,39 @@ def test_perplexity_buckets_matches_single_partition_ntile(spark):
         assert got == expect, f"n_parts={parts}"
 
 
+def test_perplexity_buckets_null_source_matches_oracle(spark):
+    """Documents with a NULL source form one source of their own, as
+    the oracle's PARTITION BY treats them: all five documents come back,
+    ranked and bucketed exactly as DuckDB ranks them."""
+    import duckdb
+    import pandas as pd
+
+    from ml4logs_spark.operators import textqa
+    from ml4logs_spark.oracle.docs_sql import DOC_ORACLES
+
+    rows = [
+        (0, "a a b", "s"),
+        (1, "a b", None),
+        (2, "b c", "s"),
+        (3, "a", None),
+        (4, "c c", "t"),
+    ]
+    got = sorted(
+        tuple(r) for r in textqa.perplexity_buckets(_docs(spark, rows))
+        .select("doc_id", "source", "avg_logprob", "ppl_rank", "ppl_bucket")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
+    )
+    want = sorted(con.execute(DOC_ORACLES["perplexity_buckets"]).fetchall())
+    con.close()
+    assert len(want) == 5
+    assert [r[:2] + r[3:] for r in got] == [r[:2] + r[3:] for r in want]
+    assert [r[2] for r in got] == pytest.approx([r[2] for r in want], abs=1e-6)
+
+
 def test_source_kl_divergence_hand_computed(spark):
     """KL(P_s || Q) against hand-folded terms; a source matching the
     corpus marginal sits at ~0, a skewed source is positive; NULL-text

@@ -3,9 +3,12 @@ golden fixtures can't sweep: arbitrary conversation-size multisets for
 the distributed prefix sum, arbitrary float distributions (including
 constant/degenerate groups) for the fit/apply scalers."""
 
+import datetime
 import math
+from collections import Counter
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -43,6 +46,57 @@ def test_conv_offsets_prefix_sum_property(spark, sizes, parts):
     expect["conv_offset"] = expect.conv_size.cumsum().shift(1, fill_value=0)
     assert got.conv_size.tolist() == expect.conv_size.tolist()
     assert got.conv_offset.tolist() == expect.conv_offset.tolist()
+
+
+@settings(**SLOW)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from([None, "g1", "g2"]),  # group key, NULL included
+            st.integers(min_value=0, max_value=4),  # order key with ties
+            st.integers(min_value=0, max_value=9),  # weight
+        ),
+        min_size=1, max_size=40,
+    ),
+    grouped=st.booleans(),
+    weighted=st.booleans(),
+    # 48 is more than any drawn row count, so some range partitions
+    # are empty
+    parts=st.sampled_from([1, 3, 48]),
+)
+def test_positions_matches_pandas_cumsum_property(
+    spark, rows, grouped, weighted, parts
+):
+    """twophase.positions == a pandas per-group cumsum over (order key,
+    unique id) order, _total == the group sum, and no row is lost — for
+    NULL group keys, ties broken by the id, zero weights and partition
+    counts above the row count."""
+    from ml4logs_spark.operators import twophase
+
+    data = [(i, g, k, w) for i, (g, k, w) in enumerate(rows)]
+    df = spark.createDataFrame(data, "id long, g string, k int, w long")
+    got = (
+        twophase.positions(
+            df, ["k", "id"],
+            weight="w" if weighted else None,
+            group_cols=["g"] if grouped else (),
+            n_parts=parts,
+        )
+        .toPandas().sort_values("id").reset_index(drop=True)
+    )
+    pdf = pd.DataFrame(data, columns=["id", "g", "k", "w"])
+    pdf["_w"] = pdf.w if weighted else 1
+    pdf = pdf.sort_values(["k", "id"])
+    by = pdf.g if grouped else pd.Series(0, index=pdf.index)
+    grp = pdf.groupby(by, dropna=False)["_w"]
+    pdf["_pos"] = grp.cumsum()
+    pdf["_total"] = grp.transform("sum")
+    pdf = pdf.sort_values("id").reset_index(drop=True)
+    assert list(got.columns) == ["id", "g", "k", "w", "_pos", "_total"]
+    assert got.id.tolist() == pdf.id.tolist()
+    assert got.g.tolist() == pdf.g.tolist()
+    assert got._pos.tolist() == pdf._pos.tolist()
+    assert got._total.tolist() == pdf._total.tolist()
 
 
 @settings(**SLOW)
@@ -293,6 +347,116 @@ def test_vocab_merge_chain_equals_batch_property(spark, texts, n_batches):
         for r in textqa.vocab_counts(docs).collect()
     }
     assert merged == batch
+
+
+_MERGE_STATES = [
+    "vocab_counts",
+    "doc_length_histogram",
+    "daily_health_state",
+    "tool_latency_histogram_state",
+    "read_latency_state",
+]
+
+
+def _merged_and_whole(spark, state, docs, convs, lats, state_dir):
+    """(merge of state(A) and state(B), state(A ∪ B)) for one additive
+    state; the ``_a`` flag drawn with each row (or conversation) splits
+    the input into A and B. The latency ledger is written under
+    ``state_dir``."""
+    from ml4logs_spark.operators import textqa
+    from ml4logs_spark.streaming import latency
+
+    def split(df):
+        return (df.filter("_a").drop("_a"), df.filter("NOT _a").drop("_a"),
+                df.drop("_a"))
+
+    if state in ("vocab_counts", "doc_length_histogram"):
+        a, b, whole = split(spark.createDataFrame(
+            [(i, t, "s", side) for i, (t, side) in enumerate(docs)],
+            "doc_id long, text string, source string, _a boolean",
+        ))
+        if state == "vocab_counts":  # doc_ids are disjoint by construction
+            return (textqa.merge_vocab_counts(textqa.vocab_counts(a), b),
+                    textqa.vocab_counts(whole))
+        h = textqa.doc_length_histogram
+        return textqa.merge_doc_length_histograms(h(a), h(b)), h(whole)
+    if state == "read_latency_state":
+        a, b, whole = split(spark.createDataFrame(
+            lats, "tool string, lat_us long, _a boolean"
+        ))
+        ingest = latency.make_latency_ingester(state_dir)
+        ingest(a, 0)
+        ingest(b, 1)
+        return (latency.read_latency_state(spark, state_dir),
+                windows.histogram_from_latencies(whole))
+    t0 = datetime.datetime(2024, 1, 1, 20)
+    rows = []
+    for c, (conv_side, turns) in enumerate(convs):
+        ts = t0
+        for i, (gap_s, tool, err, turn_side) in enumerate(turns):
+            ts += datetime.timedelta(seconds=gap_s)
+            # latency pairs a turn with its successor, so that state
+            # splits whole conversations; the health counts split rows
+            side = conv_side if state == "tool_latency_histogram_state" \
+                else turn_side
+            rows.append((f"c{c:03d}", i, "u", "error code 7" if err else "ok",
+                         tool, ts, side))
+    a, b, whole = split(spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp, _a boolean",
+    ))
+    if state == "daily_health_state":
+        f = windows.daily_health_state
+        return windows.merge_daily_health_state(f(a), f(b)), f(whole)
+    f = windows.tool_latency_histogram_state
+    return windows.merge_tool_latency_histograms(f(a), f(b)), f(whole)
+
+
+@pytest.mark.parametrize("state", _MERGE_STATES)
+@settings(**SLOW)
+@given(
+    docs=st.lists(
+        st.tuples(st.text(alphabet="ab c", max_size=12), st.booleans()),
+        min_size=1, max_size=20,
+    ),
+    convs=st.lists(
+        st.tuples(
+            st.booleans(),
+            st.lists(
+                st.tuples(
+                    st.integers(min_value=0, max_value=30 * 3600),  # gap s
+                    st.sampled_from([None, "grep", "edit"]),
+                    st.booleans(),  # error turn
+                    st.booleans(),
+                ),
+                min_size=1, max_size=6,
+            ),
+        ),
+        min_size=1, max_size=8,
+    ),
+    lats=st.lists(
+        st.tuples(
+            st.sampled_from(["grep", "edit"]),
+            st.integers(min_value=-5, max_value=2**40),
+            st.booleans(),
+        ),
+        min_size=1, max_size=30,
+    ),
+)
+def test_additive_state_merge_law_property(spark, state, docs, convs, lats):
+    """For every additive day-2 state and any split of its input into A
+    and B, merging state(A) with state(B) equals state(A ∪ B) exactly:
+    same column names and types, same rows."""
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as state_dir:
+        merged, whole = _merged_and_whole(
+            spark, state, docs, convs, lats, state_dir
+        )
+        assert merged.dtypes == whole.dtypes
+        assert Counter(tuple(r) for r in merged.collect()) == Counter(
+            tuple(r) for r in whole.collect()
+        )
 
 
 @settings(**SLOW)

@@ -15,14 +15,24 @@ Scale notes
   into #bands rows and shuffles by (band, hash) —
   candidate generation cost is O(docs x bands), never O(docs^2); only
   bucket-colliding pairs are joined and Jaccard-verified.
+- every banded family (MinHash, SimHash, embedding LSH) turns its band
+  table into pairs through ``bucket_pairs``: one persisted band frame,
+  a self-join within the batch, a probe (never a self-join) of the
+  historical bands, one final distinct. Every Jaccard verify is
+  ``store_jaccard_pairs`` over distinct-set arrays.
 - lexicographic min of md5 hex strings == numeric min of the 128-bit
   hash value, so signatures avoid any engine-specific int conversion.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from ml4logs_spark import cache
 
 N_MINHASH = 8
 LSH_BANDS = 4  # rows-per-band = N_MINHASH / LSH_BANDS = 2
@@ -111,34 +121,57 @@ def lsh_bands(sig: DataFrame, bands: int = LSH_BANDS, n: int = N_MINHASH) -> Dat
     ).select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
 
 
+def bucket_pairs(
+    bands: DataFrame,
+    keys: list[str],
+    seen: DataFrame | None = None,
+    ids: tuple[str, str, str] = ("doc_id", "doc_a", "doc_b"),
+    score: Callable[[str, str], Column] | None = None,
+) -> DataFrame:
+    """Distinct canonical pairs (lo < hi) of rows that share the bucket
+    ``keys`` — the candidate step of every banded near-dup family.
+    ``ids`` = (row id column, lo output, hi output). Within ``bands``
+    the table self-joins with ``a < b``; given ``seen`` (a historical
+    band table) ``bands`` also probes it with ``a != b`` (a replayed
+    row never pairs with itself) and the pair is ordered by
+    least/greatest — history is probed, never self-joined. ``score``
+    maps the two join aliases to a named, symmetric pair column
+    (SimHash's hamming distance) carried into the output.
+
+    ``bands`` feeds both sides of the self-join and the probe, so it is
+    tracked-persisted (guide §2.4: no cross-branch CSE; without it the
+    upstream signature pipeline runs once per consumer); re-persisting
+    a frame the caller already holds is a no-op. One final distinct
+    dedups a pair that collides in several bands or on both sides; a
+    caller's filter on a pair column (hamming <= r) is pushed below it
+    by Catalyst, so only surviving pairs reach that shuffle."""
+    i, lo, hi = ids
+    a, b = F.col(f"a.{i}"), F.col(f"b.{i}")
+    extra = [score("a", "b")] if score is not None else []
+    bands = cache.track(bands)
+    pairs = (
+        bands.alias("a").join(bands.alias("b"), keys)
+        .filter(a < b)
+        .select(a.alias(lo), b.alias(hi), *extra)
+    )
+    if seen is not None:
+        pairs = pairs.unionByName(
+            bands.alias("a").join(seen.alias("b"), keys)
+            .filter(a != b)
+            .select(F.least(a, b).alias(lo), F.greatest(a, b).alias(hi), *extra)
+        )
+    return pairs.distinct()
+
+
 def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup candidate pairs: docs sharing any LSH band bucket."""
-    return _band_pairs(lsh_bands(minhash_signatures(docs)))
+    return bucket_pairs(lsh_bands(minhash_signatures(docs)), ["band", "h"])
 
 
 def jaccard_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact shingle-Jaccard for candidate pairs (verification step).
-    The shingle-set frame feeds both sides of the pair join (sh_a, sh_b),
-    so it is tracked-persisted — without it the shingle pass over the
-    corpus text runs twice per action (guide §2.4)."""
-    from ml4logs_spark import cache
-
-    sh = cache.track(_gram_sets(docs, F.col("gram"), "shingles"))
-    out = (
-        pairs.join(sh.withColumnRenamed("doc_id", "doc_a")
-                     .withColumnRenamed("shingles", "sh_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b")
-                .withColumnRenamed("shingles", "sh_b"), "doc_b")
-    )
-    # |A ∪ B| = |A| + |B| - |A ∩ B| exactly (both arrays are distinct
-    # sets), so the union array never materializes — one hash-set pass
-    # per pair instead of two (guide §1.2 per-task work).
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return out.select(
-        "doc_a", "doc_b",
-        F.round(inter / union, 6).alias("jaccard"),
-    )
+    """Exact shingle-Jaccard for candidate pairs (verification step):
+    ``store_jaccard_pairs`` over the docs' distinct shingle sets."""
+    return store_jaccard_pairs(_gram_sets(docs, F.col("gram"), "sh_sig"), pairs)
 
 
 def near_dups(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
@@ -197,17 +230,23 @@ def span_dedup(
     to reassemble — O(tokens/span) rows throughout, no all-pairs
     anything. The reassembly collect_list is bounded by doc length
     (blocks-per-doc), not corpus size."""
-    b = span_blocks(docs, span_tokens, text_col)
-    winners = b.groupBy("block_hash").agg(
+    kept = _first_blocks(span_blocks(docs, span_tokens, text_col), "block_hash")
+    return _reassemble_blocks(kept, text_col)
+
+
+def _first_blocks(b: DataFrame, key: str) -> DataFrame:
+    """Rows of block frame ``b`` at the canonical first occurrence
+    (minimum (doc_id, block_idx)) of their ``key`` — the winner
+    aggregate shuffled on the uniform block hash, joined back and
+    filtered; shared by span_dedup and incremental_span_dedup."""
+    winners = b.groupBy(key).agg(
         F.min(F.struct("doc_id", "block_idx")).alias("w")
     ).select(
-        "block_hash", F.col("w.doc_id").alias("_wdoc"),
-        F.col("w.block_idx").alias("_widx"),
+        key, F.col("w.doc_id").alias("_wdoc"), F.col("w.block_idx").alias("_widx"),
     )
-    kept = b.join(winners, "block_hash").filter(
+    return b.join(winners, key).filter(
         (F.col("doc_id") == F.col("_wdoc")) & (F.col("block_idx") == F.col("_widx"))
     )
-    return _reassemble_blocks(kept, text_col)
 
 
 def _reassemble_blocks(kept: DataFrame, text_col: str = "text") -> DataFrame:
@@ -325,17 +364,7 @@ def incremental_span_dedup(
         F.col("_bh") == F.col("_seen"),
         "left_anti",
     )
-    winners = fresh.groupBy("_bh").agg(
-        F.min(F.struct("doc_id", "block_idx")).alias("w")
-    ).select(
-        "_bh", F.col("w.doc_id").alias("_wdoc"),
-        F.col("w.block_idx").alias("_widx"),
-    )
-    kept = fresh.join(winners, "_bh").filter(
-        (F.col("doc_id") == F.col("_wdoc"))
-        & (F.col("block_idx") == F.col("_widx"))
-    )
-    return _reassemble_blocks(kept, text_col)
+    return _reassemble_blocks(_first_blocks(fresh, "_bh"), text_col)
 
 
 SIMHASH_CHUNKS = 4  # 4 x 16-bit chunks = 64-bit signature
@@ -454,29 +483,20 @@ def simhash_candidate_pairs(docs: DataFrame) -> DataFrame:
     simhash64 aggregate extends to 128 bits as 8 sum columns more) and
     band into 4x32-bit chunks: hamming<=3 still guarantees one clean
     chunk, with 2^32 buckets per band. Chunk width is the knob; no
-    structural change.
+    structural change. The band table's persist and the pair join are
+    ``bucket_pairs``."""
+    return bucket_pairs(
+        _simhash_bands(simhash64(docs)), ["band", "chunk"], score=_hamming
+    )
 
-    The band table is tracked-persisted: it feeds both sides of the
-    self-join, and the simhash64 explode+aggregate would otherwise run
-    twice per action (guide §2.4)."""
-    from ml4logs_spark import cache
 
-    bands = cache.track(_simhash_bands(simhash64(docs)))
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = sum(
-        F.bit_count(F.col(f"a.c{i}").bitwiseXOR(F.col(f"b.c{i}")))
+def _hamming(a: str, b: str) -> Column:
+    """Exact signature distance between join aliases ``a`` and ``b``:
+    four sign-safe 16-bit xor + popcounts, no UDF."""
+    return sum(
+        F.bit_count(F.col(f"{a}.c{i}").bitwiseXOR(F.col(f"{b}.c{i}")))
         for i in range(SIMHASH_CHUNKS)
-    )
-    return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .distinct()
-    )
+    ).cast("int").alias("hamming")
 
 
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -513,49 +533,15 @@ def incremental_simhash_near_dups(
     batch whose signatures were already appended collides with its own
     identical state rows — self-pairs are filtered, cross pairs
     canonicalize and distinct away, and the output is unchanged.
-
-    The batch band table is tracked-persisted (it feeds the historical
-    probe AND both sides of the within-batch self-join — the simhash64
-    explode+aggregate would otherwise run 3x per action, guide §2.4),
-    and the hamming radius filter runs BEFORE the distinct so only
-    within-radius pairs reach the dedup shuffle (hamming is a pure
-    function of the pair, so filter and distinct commute — guide §2.3
-    'shuffle fewer bytes')."""
-    from ml4logs_spark import cache
-
-    nb = cache.track(_simhash_bands(simhash64(new_docs)))
+    Candidates are ``bucket_pairs`` of the batch bands probing the
+    historical ones; the radius filter runs below its distinct."""
     hb = _simhash_bands(
         seen_sigs.select("doc_id", *[f"c{b}" for b in range(SIMHASH_CHUNKS)])
     )
-    hamming = sum(
-        F.bit_count(F.col(f"a.c{i}").bitwiseXOR(F.col(f"b.c{i}")))
-        for i in range(SIMHASH_CHUNKS)
-    ).cast("int")
-    hist_hits = (
-        nb.alias("a")
-        .join(hb.alias("b"), ["band", "chunk"])
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-    )
-    new_new = (
-        nb.alias("a")
-        .join(nb.alias("b"), ["band", "chunk"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-    )
-    return (
-        hist_hits.unionByName(new_new)
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return bucket_pairs(
+        _simhash_bands(simhash64(new_docs)), ["band", "chunk"], seen=hb,
+        score=_hamming,
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 def contaminated_ids(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
@@ -781,29 +767,6 @@ def near_dup_survivors(
     return docs.join(losers, "doc_id", "left_anti")
 
 
-def _band_pairs(bands: DataFrame) -> DataFrame:
-    """Bucket-colliding (doc_a < doc_b) pairs from a (doc_id, band, h)
-    band table — shared by whole-corpus and incremental candidate
-    generation. The band frame feeds both sides of the self-join, so
-    it is tracked-persisted — without it the upstream minhash pipeline
-    evaluates twice per action (guide §2.4); fixed-width rows, corpus x
-    bands sized (the same table the incremental path keeps as state
-    anyway). Re-persisting an already-persisted frame is a no-op."""
-    from ml4logs_spark import cache
-
-    bands = cache.track(bands)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, ["band", "h"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-
-
 def incremental_near_dups(
     new_docs: DataFrame, seen_bands: DataFrame
 ) -> DataFrame:
@@ -811,36 +774,18 @@ def incremental_near_dups(
     the HISTORICAL LSH band table (doc_id, band, h), plus new-vs-new
     candidates within the batch. Returns (doc_a, doc_b) with
     doc_a < doc_b (canonical order, self-pairs from replayed batches
-    filtered); run the result through ``jaccard_pairs`` on whichever
-    sides still carry text for exact verification.
+    filtered); run the result through ``store_jaccard_pairs`` for exact
+    verification.
 
     At scale the historical band table is the only state kept (bands x
     docs rows, no text), the equi-join on (band, h) touches matching
     buckets only, and appending ``lsh_bands(minhash_signatures(new))``
     advances the frontier. Canonical ordering means a batch replayed
     after its bands were already appended yields each pair once, never
-    a (x, x) self-pair.
-
-    The new batch's band table is a diamond node — it feeds BOTH the
-    historical-bucket probe and the within-batch pair join — so it is
-    tracked-persisted (guide §2.4: Catalyst has no cross-branch CSE;
-    without the persist the whole minhash pipeline over the batch text
-    evaluates twice per action). Fixed-width rows, batch-sized. The
-    final distinct dedups the union, so hist_hits needs no inner
-    distinct of its own (one less shuffle, identical result set)."""
-    from ml4logs_spark import cache
-
-    nb = cache.track(lsh_bands(minhash_signatures(new_docs)))
-    hist_hits = (
-        nb.withColumnRenamed("doc_id", "new_id")
-        .join(seen_bands.withColumnRenamed("doc_id", "hist_id"), ["band", "h"])
-        .filter(F.col("new_id") != F.col("hist_id"))
-        .select(
-            F.least("new_id", "hist_id").alias("doc_a"),
-            F.greatest("new_id", "hist_id").alias("doc_b"),
-        )
+    a (x, x) self-pair. Both joins are ``bucket_pairs``."""
+    return bucket_pairs(
+        lsh_bands(minhash_signatures(new_docs)), ["band", "h"], seen=seen_bands
     )
-    return hist_hits.unionByName(_band_pairs(nb)).distinct()
 
 
 STORE_HASH_CHARS = 8  # 32-bit hashed shingles in the verification store
@@ -873,12 +818,14 @@ def shingle_store(
 
 
 def store_jaccard_pairs(store: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact hashed-shingle Jaccard for candidate pairs, joined against
-    a ``shingle_store`` frame instead of document text — the
-    verification step when one (or both) sides only exist as state.
-    Same two doc_id equi-joins as ``jaccard_pairs``; the store side is
-    compact fixed-width arrays."""
-    s = store.select("doc_id", "sh_sig")
+    """Exact set-Jaccard for candidate pairs against ``store`` — any
+    (doc_id, sh_sig) frame of distinct-set arrays: a ``shingle_store``
+    when a side only exists as state, or the raw shingle sets
+    (``jaccard_pairs``). The one verify body: two doc_id equi-joins.
+    The store feeds both of them (sig_a and sig_b), so it is
+    tracked-persisted (guide §2.4 — without it the shingle pass runs
+    twice per action); re-persisting a held frame is a no-op."""
+    s = cache.track(store).select("doc_id", "sh_sig")
     out = (
         pairs.join(
             s.withColumnRenamed("doc_id", "doc_a")
@@ -890,9 +837,9 @@ def store_jaccard_pairs(store: DataFrame, pairs: DataFrame) -> DataFrame:
             "doc_b",
         )
     )
-    # same set identity as jaccard_pairs: |A ∪ B| = |A| + |B| - |A ∩ B|
-    # (sh_sig is array_distinct'd at build time), skipping the union
-    # array materialization per pair.
+    # |A ∪ B| = |A| + |B| - |A ∩ B| exactly (both arrays are distinct
+    # sets), so the union array never materializes — one hash-set pass
+    # per pair instead of two (guide §1.2 per-task work).
     inter = F.size(F.array_intersect("sig_a", "sig_b"))
     union = F.size("sig_a") + F.size("sig_b") - inter
     return out.select(
@@ -924,20 +871,10 @@ def incremental_near_dup_verified(
     entries out of the union, candidate pairs stay canonical with no
     self-pairs, and the verified output is unchanged. Assumes doc_ids
     are stable content ids (a doc_id reused for different text is an
-    upstream bug this operator does not referee).
-
-    The unioned store is tracked-persisted: it feeds both sides of the
-    verification join (sig_a and sig_b), and without the persist the
-    batch's shingle hashing and the anti-join run twice per action
-    (guide §2.4 — no cross-branch CSE). Compact fixed-width arrays."""
-    from ml4logs_spark import cache
-
+    upstream bug this operator does not referee)."""
     cands = incremental_near_dups(new_docs, seen_bands)
-    new_store = shingle_store(new_docs)
-    store = cache.track(
-        seen_store.select("doc_id", "sh_sig").unionByName(
-            new_store.join(seen_store.select("doc_id"), "doc_id", "left_anti")
-        )
+    store = seen_store.select("doc_id", "sh_sig").unionByName(
+        shingle_store(new_docs).join(seen_store.select("doc_id"), "doc_id", "left_anti")
     )
     return store_jaccard_pairs(store, cands).filter(
         F.col("jaccard") >= threshold
@@ -1097,8 +1034,6 @@ def incremental_conv_near_dups(
     and each would otherwise replay the full conv_id text aggregation
     (guide §2.4 — no cross-branch CSE). One text row per conversation,
     batch-sized."""
-    from ml4logs_spark import cache
-
     new_docs = cache.track(conv_text_docs(new_turns))
     return incremental_near_dup_verified(
         new_docs, seen_bands, seen_store, threshold
@@ -1127,8 +1062,6 @@ def _prefix_terms(turns: DataFrame) -> DataFrame:
     polynomial prefix hash computable by one streaming window pass —
     O(1) state per row, never a per-row running array (which would be
     O(turns^2) bytes on the planted giant conversation)."""
-    from pyspark.sql.window import Window
-
     t = F.coalesce(F.col("text"), F.lit(""))
     frame = F.concat_ws(":", F.length(t).cast("string"), t)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
@@ -1169,8 +1102,6 @@ def conv_prefix_state(turns: DataFrame) -> DataFrame:
     the pair core derives it as max(depth), so a conversation extended
     by a later batch merges cleanly (its old rows are a subset of the
     new ones)."""
-    from pyspark.sql.window import Window
-
     run = (
         Window.partitionBy("conv_id")
         .orderBy("pos")
@@ -1207,8 +1138,6 @@ def _branch_pairs_from_state(
     action (guide §2.4; measured 56 parquet scans in one plan before
     this fix). Both are fixed-width per-turn rows — the same
     materialization the day-2 state tables pay anyway."""
-    from ml4logs_spark import cache
-
     state = cache.track(
         state.select("conv_id", "depth", "p1", "p2").distinct()
     )
@@ -1275,11 +1204,7 @@ def conv_prefix_dups(turns: DataFrame, min_shared: int = 1) -> DataFrame:
     the same system prompt) before the join. The reference has no
     branch dedup (its HDFS blocks are flat: data/hdfs.py:58-66); this
     extends the conv_dedup family for agent-transcript ingest."""
-    from ml4logs_spark import cache
-
     terms = cache.track(_prefix_terms(turns))
-    from pyspark.sql.window import Window
-
     run = (
         Window.partitionBy("conv_id")
         .orderBy("pos")
@@ -1335,9 +1260,6 @@ def incremental_conv_prefix_dups(
     their own window pass over the batch, and the downstream diamond
     consumers multiplied that further (guide §2.4; the same
     shared-terms shape ``conv_prefix_dups`` already uses)."""
-    from ml4logs_spark import cache
-    from pyspark.sql.window import Window
-
     terms = cache.track(_prefix_terms(new_turns))
     run = (
         Window.partitionBy("conv_id")

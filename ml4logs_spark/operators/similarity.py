@@ -21,6 +21,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ml4logs_spark import cache
+from ml4logs_spark.operators.dedup import bucket_pairs, connected_components
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -226,21 +229,15 @@ def embedding_near_dups(
     """Embedding-cosine near-duplicate pairs — the vector analog of
     dedup.near_dups: candidates collide in any LSH band (equi-join on
     buckets, O(n x bands), never all-pairs), then exact cosine verify
-    against the threshold. Symmetric (doc_a < doc_b), whole-corpus."""
+    against the threshold. Symmetric (vec_a < vec_b), whole-corpus; the
+    band frame's persist and the pair join are ``dedup.bucket_pairs``."""
     bs = (
         bands
         if bands is not None
         else band_signatures(emb, n_planes=n_planes, n_bands=n_bands,
                              dim=dim, vec_col=vec_col)
     )
-    a = bs.alias("a")
-    b = bs.alias("b")
-    pairs = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    pairs = bucket_pairs(bs, ["band", "sig"], ids=("vec_id", "vec_a", "vec_b"))
     # per-row norm hoist, same rationale as cosine_topk
     ea = emb.select(
         F.col("vec_id").alias("vec_a"),
@@ -272,8 +269,6 @@ def embedding_near_dup_clusters(
     the vector analog of dedup.near_dup_clusters, sharing the same
     min-label-propagation operator (semantic dedup collapses chains
     a~b~c that pairwise similarity alone under-deletes)."""
-    from ml4logs_spark.operators.dedup import connected_components
-
     return connected_components(
         embedding_near_dups(emb, threshold),
         src="vec_a",
@@ -391,8 +386,6 @@ def _ivf_candidates(
     equi-join. One definition keeps ivf_topk and ivf_candidate_fraction
     grading the SAME candidate set; ``codebook=None`` fits fresh."""
     if codebook is None:
-        from ml4logs_spark import cache
-
         codebook = cache.track(fit_ivf_codebook(emb, n_centroids, vec_col=vec_col))
     cells = ivf_cells(emb, codebook, vec_col=vec_col)
     q_scored = (
@@ -830,8 +823,6 @@ def ivf_cell_summary(
     aggregate against the broadcast codebook (same shape as
     _assign_cells), then two cell-keyed aggregates over
     codebook-sized frames. The corpus never self-joins."""
-    from ml4logs_spark import cache
-
     if codebook is None:
         codebook = cache.track(
             fit_ivf_codebook(emb, n_centroids, vec_col=vec_col)
@@ -935,8 +926,6 @@ def incremental_embedding_near_dups(
     sf0.1 fixture with identical exact-dup recall (bench.py uses
     16x4); the state must be WRITTEN with the same banding it is
     probed with."""
-    from ml4logs_spark import cache
-
     nb = (
         new_bands
         if new_bands is not None
@@ -1023,8 +1012,6 @@ def semantic_dedup_survivors(
     1.56x faster than 16 at sf0.1 with near-identical survivors;
     bench.py uses 64), never an all-pairs product; losers reduce to a
     distinct id set and the corpus anti-joins once on vec_id."""
-    from ml4logs_spark import cache
-
     if codebook is None:
         codebook = cache.track(
             fit_ivf_codebook(emb, n_centroids, vec_col=vec_col)
@@ -1268,8 +1255,6 @@ def pq_topk(
     float32 exact baseline, the quantized_topk pattern). The codebook
     is a tracked diamond (encode's assign join + decode's lookup both
     consume it)."""
-    from ml4logs_spark import cache
-
     if codebook is None:
         codebook = cache.track(
             fit_pq_codebooks(emb, m=m, dim=dim, vec_col=vec_col, **fit_kw)

@@ -711,32 +711,23 @@ def tool_latency_percentiles(
     ranked = twophase.positions(
         timed, ["_lat"], group_cols=["tool"], n_parts=n_parts
     )
-    # positions has persisted ``timed``; this aggregate reads the cache
-    targets = (
-        timed.groupBy("tool")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            F.col("tool").alias("_tool"),
-            F.col("_n").alias("n_timed"),
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(p).alias("q_pct"),
-                        F.expr(f"CAST((_n * {p} + 99) DIV 100 AS LONG)")
-                        .alias("_r"),
-                    )
-                    for p in pcts
-                ])
-            ).alias("_t"),
+    # every row carries its tool's count (_total), so each row checks
+    # itself against the per-percentile target ranks
+    targets = F.explode(F.array(*[
+        F.struct(
+            F.lit(p).alias("q_pct"),
+            F.expr(f"CAST((_total * {p} + 99) DIV 100 AS LONG)").alias("_r"),
         )
-        .select("_tool", "n_timed", "_t.q_pct", "_t._r")
-    )
-    return ranked.join(
-        F.broadcast(targets),
-        (F.col("_pos") == F.col("_r")) & (F.col("tool") == F.col("_tool")),
-    ).select(
-        "tool", "q_pct", "n_timed",
-        F.col("_lat").cast("long").alias("latency_us"),
+        for p in pcts
+    ])).alias("_t")
+    return (
+        ranked.select("tool", "_lat", "_pos", "_total", targets)
+        .filter(F.col("_pos") == F.col("_t._r"))
+        .select(
+            "tool", F.col("_t.q_pct").alias("q_pct"),
+            F.col("_total").alias("n_timed"),
+            F.col("_lat").cast("long").alias("latency_us"),
+        )
     )
 
 

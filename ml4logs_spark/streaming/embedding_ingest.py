@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ml4logs_spark import cache
+
 EMBEDDING_SCHEMA = T.StructType([
     T.StructField("vec_id", T.LongType()),
     T.StructField("embedding", T.ArrayType(T.FloatType())),
@@ -67,94 +69,97 @@ def make_batch_ingester(
     root.mkdir(parents=True, exist_ok=True)
 
     def _ingest(bdf: DataFrame, batch_id: int) -> None:
-        marker = root / f"_batch_{batch_id}"
-        if marker.exists():  # replayed batch: already committed
-            return
-        spark = bdf.sparkSession
-        batch = bdf.select("vec_id", "embedding").dropDuplicates(["vec_id"])
-        bands_path, codes_path = root / "bands", root / "codes"
-
-        def _state(path: Path) -> DataFrame:
-            # exclude this batch's own partition: a retried PARTIAL
-            # batch may have written it before crashing, and the
-            # probe must never see the batch's own vectors as
-            # history (partition pruning makes the filter free)
-            df = spark.read.parquet(str(path))
-            return df.filter(F.col("batch") != batch_id).drop("batch")
-
-        has_history = bands_path.exists() and any(
-            p.name != f"batch={batch_id}"
-            for p in bands_path.glob("batch=*")
-        )
-        if has_history:
-            # a producer may re-deliver a logical batch under a NEW
-            # filename (new batch_id, so the marker cannot catch it);
-            # already-ingested vec_ids must not re-enter the state or
-            # re-emit their pairs
-            batch = batch.join(
-                _state(codes_path).select("vec_id"), "vec_id", "left_anti"
-            )
-        batch = batch.persist()
-        try:
-            if batch.isEmpty():
-                marker.mkdir()
+        # the operators track diamond persists (the history probe, the
+        # band frame); they are released with the batch, not the session
+        with cache.scope():
+            marker = root / f"_batch_{batch_id}"
+            if marker.exists():  # replayed batch: already committed
                 return
-            quant_path = root / "quant"
-            if not quant_path.exists():
-                # first batch fits the quantizer, frozen thereafter.
-                # Committed by ATOMIC directory rename: a crash mid-write
-                # leaves only the tmp dir, so a retry re-fits instead of
-                # reading a partial parquet as the committed params.
-                tmp = root / f"_quant_tmp_{batch_id}"
-                similarity.fit_quantizer(batch).write.mode(
-                    "overwrite"
-                ).parquet(str(tmp))
-                try:
-                    tmp.rename(quant_path)
-                except OSError:
-                    pass  # concurrent retry already committed it
-            quant = spark.read.parquet(str(quant_path))
-            # band signatures computed ONCE per batch and threaded into
-            # the probe, the within-batch search, and the state write
-            # (each would otherwise recompute the n_planes dot products)
-            nb = similarity.band_signatures(
-                batch, n_planes=n_planes, n_bands=n_bands, dim=dim
-            ).persist()
-            try:
-                if has_history:
-                    pairs = similarity.incremental_embedding_near_dups(
-                        batch,
-                        band_state=_state(bands_path),
-                        code_state=_state(codes_path),
-                        quant=quant,
-                        threshold=threshold,
-                        n_planes=n_planes,
-                        n_bands=n_bands,
-                        dim=dim,
-                        new_bands=nb,
-                    )
-                else:
-                    # first batch: only within-batch pairs exist
-                    pairs = similarity.embedding_near_dups(
-                        batch, threshold, n_planes, n_bands, dim, bands=nb
-                    )
-                # batch-scoped partitions + overwrite: a retry after a
-                # partial failure rewrites its own output rather than
-                # appending a second copy (the marker only commits a
-                # batch whose every write completed)
-                part = f"batch={batch_id}"
-                pairs.write.mode("overwrite").parquet(
-                    str(root / "pairs" / part)
+            spark = bdf.sparkSession
+            batch = bdf.select("vec_id", "embedding").dropDuplicates(["vec_id"])
+            bands_path, codes_path = root / "bands", root / "codes"
+
+            def _state(path: Path) -> DataFrame:
+                # exclude this batch's own partition: a retried PARTIAL
+                # batch may have written it before crashing, and the
+                # probe must never see the batch's own vectors as
+                # history (partition pruning makes the filter free)
+                df = spark.read.parquet(str(path))
+                return df.filter(F.col("batch") != batch_id).drop("batch")
+
+            has_history = bands_path.exists() and any(
+                p.name != f"batch={batch_id}"
+                for p in bands_path.glob("batch=*")
+            )
+            if has_history:
+                # a producer may re-deliver a logical batch under a NEW
+                # filename (new batch_id, so the marker cannot catch it);
+                # already-ingested vec_ids must not re-enter the state or
+                # re-emit their pairs
+                batch = batch.join(
+                    _state(codes_path).select("vec_id"), "vec_id", "left_anti"
                 )
-                nb.write.mode("overwrite").parquet(str(bands_path / part))
-                similarity.quantize_embeddings(batch, quant).write.mode(
-                    "overwrite"
-                ).parquet(str(codes_path / part))
-                marker.mkdir()
+            batch = batch.persist()
+            try:
+                if batch.isEmpty():
+                    marker.mkdir()
+                    return
+                quant_path = root / "quant"
+                if not quant_path.exists():
+                    # first batch fits the quantizer, frozen thereafter.
+                    # Committed by ATOMIC directory rename: a crash mid-write
+                    # leaves only the tmp dir, so a retry re-fits instead of
+                    # reading a partial parquet as the committed params.
+                    tmp = root / f"_quant_tmp_{batch_id}"
+                    similarity.fit_quantizer(batch).write.mode(
+                        "overwrite"
+                    ).parquet(str(tmp))
+                    try:
+                        tmp.rename(quant_path)
+                    except OSError:
+                        pass  # concurrent retry already committed it
+                quant = spark.read.parquet(str(quant_path))
+                # band signatures computed ONCE per batch and threaded into
+                # the probe, the within-batch search, and the state write
+                # (each would otherwise recompute the n_planes dot products)
+                nb = similarity.band_signatures(
+                    batch, n_planes=n_planes, n_bands=n_bands, dim=dim
+                ).persist()
+                try:
+                    if has_history:
+                        pairs = similarity.incremental_embedding_near_dups(
+                            batch,
+                            band_state=_state(bands_path),
+                            code_state=_state(codes_path),
+                            quant=quant,
+                            threshold=threshold,
+                            n_planes=n_planes,
+                            n_bands=n_bands,
+                            dim=dim,
+                            new_bands=nb,
+                        )
+                    else:
+                        # first batch: only within-batch pairs exist
+                        pairs = similarity.embedding_near_dups(
+                            batch, threshold, n_planes, n_bands, dim, bands=nb
+                        )
+                    # batch-scoped partitions + overwrite: a retry after a
+                    # partial failure rewrites its own output rather than
+                    # appending a second copy (the marker only commits a
+                    # batch whose every write completed)
+                    part = f"batch={batch_id}"
+                    pairs.write.mode("overwrite").parquet(
+                        str(root / "pairs" / part)
+                    )
+                    nb.write.mode("overwrite").parquet(str(bands_path / part))
+                    similarity.quantize_embeddings(batch, quant).write.mode(
+                        "overwrite"
+                    ).parquet(str(codes_path / part))
+                    marker.mkdir()
+                finally:
+                    nb.unpersist()
             finally:
-                nb.unpersist()
-        finally:
-            batch.unpersist()
+                batch.unpersist()
 
     return _ingest
 

@@ -9,7 +9,7 @@ from collections import Counter
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from ml4logs_spark.operators import features as feat
@@ -247,6 +247,56 @@ def test_span_dedup_matches_reference_property(spark, docs, span):
     assert got == want
 
 
+_BUCKET_ROW = st.tuples(
+    st.integers(0, 5), st.integers(0, 1), st.integers(0, 2)  # id, band, h
+)
+
+
+@settings(**SLOW)
+@given(
+    bands=st.lists(_BUCKET_ROW, max_size=25),
+    seen=st.one_of(st.none(), st.lists(_BUCKET_ROW, max_size=25)),
+)
+@example(bands=[(1, 0, 0)], seen=[(1, 0, 0)])  # a replayed row
+def test_bucket_pairs_matches_reference_property(spark, bands, seen):
+    """bucket_pairs == the canonical (a < b) pairs of distinct ids that
+    share a (band, h) bucket with at least one row from ``bands``, each
+    pair once — with and without a historical ``seen`` table, ids
+    repeating within and across the two."""
+    from ml4logs_spark.operators import dedup
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_id long, band int, h int")
+
+    got = dedup.bucket_pairs(
+        frame(bands), ["band", "h"], seen=None if seen is None else frame(seen)
+    ).collect()
+    want = {
+        (min(x[0], y[0]), max(x[0], y[0]))
+        for x in bands for y in bands + (seen or [])
+        if x[1:] == y[1:] and x[0] != y[0]
+    }
+    assert sorted(tuple(r) for r in got) == sorted(want)
+
+
+def _minhash_day2(dedup, df, hist, new):
+    batch = dedup.near_dups(df, threshold=0.5)
+    inc = dedup.incremental_near_dup_verified(
+        new,
+        dedup.lsh_bands(dedup.minhash_signatures(hist)),
+        dedup.shingle_store(hist),
+        threshold=0.5,
+    )
+    return batch, inc
+
+
+def _simhash_day2(dedup, df, hist, new):
+    return (dedup.simhash_near_dups(df),
+            dedup.incremental_simhash_near_dups(new, dedup.simhash64(hist)))
+
+
+@pytest.mark.parametrize("family", [_minhash_day2, _simhash_day2],
+                         ids=["minhash", "simhash"])
 @settings(**SLOW)
 @given(
     docs=st.lists(
@@ -255,30 +305,20 @@ def test_span_dedup_matches_reference_property(spark, docs, span):
         min_size=2, max_size=8,
     ),
 )
-def test_incremental_near_dup_equals_batch_property(spark, docs):
+def test_incremental_near_dup_equals_batch_property(spark, family, docs):
     """For ANY corpus split into history (even ids, state only) and a
-    new batch (odd ids), the store-verified incremental pairs equal the
-    text-verified batch pairs restricted to pairs touching a new doc —
-    same LSH banding, same Jaccard values, no extra or missing pairs."""
+    new batch (odd ids), the incremental pairs equal the batch pairs
+    restricted to pairs touching a new doc — same banding, same
+    verified score (store Jaccard for MinHash, hamming for SimHash), no
+    extra or missing pairs."""
     from ml4logs_spark.operators import dedup
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    batch = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.near_dups(df, threshold=0.5).collect()
-    }
-    hist = df.filter("doc_id % 2 = 0")
-    new = df.filter("doc_id % 2 = 1")
-    inc = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.incremental_near_dup_verified(
-            new,
-            dedup.lsh_bands(dedup.minhash_signatures(hist)),
-            dedup.shingle_store(hist),
-            threshold=0.5,
-        ).collect()
-    }
+    batch, inc = family(dedup, df, df.filter("doc_id % 2 = 0"),
+                        df.filter("doc_id % 2 = 1"))
+    batch = {(r[0], r[1]): r[2] for r in batch.collect()}
+    inc = {(r[0], r[1]): r[2] for r in inc.collect()}
     want = {p: j for p, j in batch.items() if p[0] % 2 == 1 or p[1] % 2 == 1}
     assert inc == want
 

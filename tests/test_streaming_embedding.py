@@ -133,3 +133,15 @@ def test_redelivered_batch_under_new_id_is_deduped(spark, emb_batches, tmp_path)
     ingest(spark.read.parquet(emb_batches + "/b2"), 99)  # fresh id, same rows
     assert spark.read.parquet(str(state / "codes")).count() == n_codes
     assert spark.read.parquet(str(state / "pairs")).count() == n_pairs
+
+
+def test_streaming_ingest_releases_its_persists(spark, emb_batches, tmp_path):
+    """Each micro-batch releases what the near-dup operators persist
+    (the history probe, the band frame): the session holds as many
+    cached RDDs after a four-batch run as before it."""
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    _run(spark, emb_batches, tmp_path, "e")
+    assert persisted() == before

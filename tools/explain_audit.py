@@ -38,14 +38,18 @@ def main() -> int:
     from ml4logs_spark.operators import features as feat
     from ml4logs_spark.operators import parse, windows
 
-    spark = get_spark(cores=4, shuffle_partitions=8)
+    spark = get_spark(cores=4, shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     audit_dir = ".data/audit"
     if not os.path.exists(f"{audit_dir}/transcripts.parquet"):
         tx.materialize(spark, sf_dir, audit_dir)
     t = tx.read_materialized(spark, audit_dir)
     failures = []
+    n_checks = 0
 
     def check(name, cond, detail=""):
+        nonlocal n_checks
+        n_checks += 1
         print(("PASS " if cond else "FAIL ") + name + (f"  [{detail}]" if detail and not cond else ""))
         if not cond:
             failures.append(name)
@@ -593,16 +597,17 @@ def main() -> int:
 
     # 8c. tool_latency_percentiles: the grouped two-phase ranking must
     # never collapse the latency sort to one partition (the per-group
-    # prefix window partitions by tool), and the targets/bases ride
-    # back as broadcasts.
+    # prefix window partitions by tool), the bases ride back as a
+    # broadcast and nothing joins by sort-merge (the percentile targets
+    # are computed per row from the group total, no join at all).
     from ml4logs_spark.operators import windows as _tw
 
     lp = plan_of(_tw.tool_latency_percentiles(t))
     _c.release_all()
     check("tool_latency_percentiles: no single-partition stage",
           "SinglePartition" not in lp)
-    check("tool_latency_percentiles: broadcast rank joins",
-          lp.count("BroadcastHashJoin") >= 2)
+    check("tool_latency_percentiles: broadcast bases, no sort-merge join",
+          "BroadcastHashJoin" in lp and "SortMergeJoin" not in lp)
     check("tool_latency_percentiles: range partitioning on (tool, lat)",
           "rangepartitioning(tool" in lp)
 
@@ -640,7 +645,8 @@ def main() -> int:
     check("filtered scan: ReadSchema 2 cols",
           "ReadSchema: struct<conv_id:string,role:string>" in p)
 
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    print(f"\n{n_checks} checks, {len(failures)} failures"
+          + (f": {failures}" if failures else ""))
     spark.stop()
     return 1 if failures else 0
 

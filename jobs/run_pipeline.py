@@ -30,12 +30,15 @@ def main() -> None:
 
     from ml4logs_spark.plans.pipeline import run_pipeline
     from ml4logs_spark.session import get_spark
+    from ml4logs_spark.sources.manifest import Manifest
+    from ml4logs_spark.sources.tables import Warehouse
 
     spark = get_spark(app_name="ml4logs_pipeline", cores=args.cores)
     t0 = time.perf_counter()
     ran = run_pipeline(spark, args.input, args.warehouse)
     wall = time.perf_counter() - t0
-    n = spark.read.parquet(f"{args.warehouse}/routed_turns").count()
+    # the row count the routed_turns commit recorded: no Spark job, any table format
+    n = Manifest(Warehouse(spark, args.warehouse)).latest("routed_turns")["row_count"]
     print(json.dumps({
         "stages_ran": ran,
         "wall_sec": round(wall, 2),

@@ -3,9 +3,10 @@
 The reference fans blocks out to per-split log files in a Python loop
 (/root/reference/src/ml4logs/data/hdfs.py:43-50, 70-74, 99-104); here a
 single pass computes the sink key and one partitioned write commits every
-sink atomically — no per-sink scan. The write is the pipeline's
-``routed_turns`` stage (plans/pipeline.py, ``partition_by=["template_bucket",
-"role"]``) or a config ``route`` step saved with the same ``partition_by``.
+sink atomically — no per-sink scan. The write is a config ``route`` step
+saved with ``partition_by=["template_bucket", "role"]``: a manifest
+commit whose record keeps the row count of each sink. In plans/pipeline.py
+that step's ``out`` is ``routed_turns`` and its ``stage`` is ``route``.
 
 Skew: the partitioned write needs no exchange on the sink key — every
 task writes the sinks its own rows fall into, so the biggest sink is
@@ -24,10 +25,10 @@ TEMPLATE_BUCKETS = 8
 
 
 def with_sink_key(parsed: DataFrame) -> DataFrame:
-    """sink_key = (template_bucket, role); bucket = template_id % 8."""
-    return parsed.withColumn(
-        "template_bucket", F.pmod(F.col("template_id"), F.lit(TEMPLATE_BUCKETS))
-    ).withColumn(
+    """sink_key = (template_bucket, role); bucket = template_id % 8, an
+    int: the type a table partitioned by it reads back."""
+    bucket = F.pmod(F.col("template_id"), F.lit(TEMPLATE_BUCKETS)).cast("int")
+    return parsed.withColumn("template_bucket", bucket).withColumn(
         "sink_key",
         F.concat_ws("/", F.col("template_bucket").cast("string"), F.col("role")),
     )

@@ -25,6 +25,13 @@ def w_conv():
     return Window.partitionBy("conv_id").orderBy("turn_idx")
 
 
+def tool_latency() -> Column:
+    """Microseconds from a turn to the next turn of its conversation
+    (NULL on the last turn): a tool call's latency, over ``w_conv``."""
+    us = F.unix_micros(F.col("ts"))
+    return F.lead(us).over(w_conv()) - us
+
+
 def timedelta_col(ts_col: str = "ts") -> Column:
     """log10(1 + Δseconds) with first turn -> 0.0.
 
@@ -433,9 +440,7 @@ def tool_latency_stats(turns: DataFrame) -> DataFrame:
     Shape at scale: the ONE conv_id window exchange shared by the
     whole family (lead is O(1) state, giant-conv safe), then a
     partial+final hash aggregate over tool-count rows."""
-    us = F.unix_micros(F.col("ts"))
-    lat = F.lead(us).over(w_conv()) - us
-    with_lat = turns.select("tool", lat.alias("_lat"))
+    with_lat = turns.select("tool", tool_latency().alias("_lat"))
     agg = with_lat.filter(F.col("tool").isNotNull()).groupBy("tool").agg(
         F.count(F.lit(1)).alias("n_calls"),
         F.count("_lat").alias("n_timed"),
@@ -538,10 +543,8 @@ def slowest_tool_calls(turns: DataFrame, k: int = 20) -> DataFrame:
     TakeOrderedAndProject: per-partition top-k heaps + a k-row merge on
     the driver — never a global sort, so the plan is the same at 10^12
     turns."""
-    us = F.unix_micros(F.col("ts"))
-    lat = F.lead(us).over(w_conv()) - us
     timed = turns.select(
-        "conv_id", "turn_idx", "tool", lat.alias("latency_us")
+        "conv_id", "turn_idx", "tool", tool_latency().alias("latency_us")
     ).filter(F.col("tool").isNotNull() & F.col("latency_us").isNotNull())
     return timed.orderBy(
         F.desc("latency_us"), "conv_id", "turn_idx"
@@ -702,10 +705,8 @@ def tool_latency_percentiles(
         if abs(q * 100 - p) > 1e-9:
             raise ValueError(f"qs must be whole percents, got {q}")
         pcts.append(p)
-    us = F.unix_micros(F.col("ts"))
-    lat = F.lead(us).over(w_conv()) - us
     timed = (
-        turns.select("tool", lat.alias("_lat"))
+        turns.select("tool", tool_latency().alias("_lat"))
         .filter(F.col("tool").isNotNull() & F.col("_lat").isNotNull())
     )
     ranked = twophase.positions(
@@ -740,9 +741,7 @@ def tool_latency_histogram_state(turns: DataFrame) -> DataFrame:
     track latency drift without ever re-ranking history. One partial+
     final hash aggregate; map-side combine collapses everything before
     the shuffle."""
-    us = F.unix_micros(F.col("ts"))
-    lat = F.lead(us).over(w_conv()) - us
-    timed = turns.select("tool", lat.alias("lat_us")).filter(
+    timed = turns.select("tool", tool_latency().alias("lat_us")).filter(
         F.col("tool").isNotNull() & F.col("lat_us").isNotNull()
     )
     return histogram_from_latencies(timed)

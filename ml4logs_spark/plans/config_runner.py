@@ -4,17 +4,26 @@ array of named ``action`` steps, dispatched through one static table
 the way the reference's ``__main__`` maps action names to functions.
 
 Step shape: ``{"action": name, "from": env_key, "out": env_key, "save":
-bool, "skip": bool, "partition_by": [cols], "where": sql, ...keys}``.
+bool, "stage": label, "skip": bool, "partition_by": [cols], "where":
+sql, ...keys}``.
 
 - ``from`` names the env frame the operator reads (its first argument);
   it defaults per action, usually to the previous logical stage.
   Sources and merges take no ``from``.
 - ``out`` names the env frame the result binds to (default: the action
-  name). Steps bind DataFrames into a lazy environment — the analog of
-  the reference's file-path IR — instead of materializing files.
-- ``save: true`` commits the output to the warehouse, the durable
-  boundary, with optional ``partition_by``; downstream steps then read
-  the committed table.
+  name). Steps bind frames into a lazy environment — the analog of the
+  reference's file-path IR — instead of materializing files: a frame is
+  built on its first read, once, from the names bound before its step.
+- ``save: true`` is a manifest commit (sources/manifest.py) of the
+  output to the warehouse, the durable boundary, with optional
+  ``partition_by`` (whose per-partition row counts the record keeps);
+  downstream steps then read the committed table, through the
+  warehouse's per-table read memo. The commit's fingerprint covers the
+  input files (the config's ``input`` and any step's) and every step up
+  to and including this one, so a rerun resumes each unchanged save
+  without building it, and editing a step reruns that step's save and
+  every save after it. ``stage`` labels the manifest record (default:
+  the action name).
 - ``skip: true`` mirrors the reference's per-step skip flag.
 - ``where`` (a SQL boolean expression) slices the ``from`` frame, so one
   config can split history from a new batch; only the actions whose row
@@ -39,6 +48,8 @@ the arguments must bind to the operator's signature.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import inspect
 import json
 from collections.abc import Callable
@@ -53,10 +64,11 @@ from ml4logs_spark.operators import enrich as enrich_op
 from ml4logs_spark.operators import features as feat
 from ml4logs_spark.operators import parse, route, similarity, textqa, windows
 from ml4logs_spark.sources import rawlog
+from ml4logs_spark.sources.manifest import Manifest, input_fingerprint
 from ml4logs_spark.sources.tables import Warehouse
 
 # keys any step may carry; run_config reads them itself
-STEP_KEYS = ("action", "out", "save", "skip", "partition_by")
+STEP_KEYS = ("action", "out", "save", "skip", "partition_by", "stage")
 
 
 class Action(NamedTuple):
@@ -363,29 +375,57 @@ def step_frame(spark: SparkSession, env: dict, step: dict, cfg: dict) -> DataFra
     return a.op(*args, **kw)
 
 
+def _fingerprint(cfg: dict, steps: list[dict]) -> str:
+    # the inputs' file state and every step up to and including this one
+    inputs = [p for p in [cfg.get("input"), *(s.get("input") for s in steps)] if p]
+    h = hashlib.md5(input_fingerprint(inputs).encode())
+    h.update(json.dumps(steps, sort_keys=True).encode())
+    return h.hexdigest()
+
+
+class _Frames(dict):
+    # the frame env: each name binds a thunk, called on every read
+    def __getitem__(self, name):
+        return super().__getitem__(name)()
+
+    def get(self, name, default=None):
+        return self[name] if name in self else default
+
+
 def run_config(spark: SparkSession, cfg: dict | str) -> dict:
-    """Run a pipeline config; returns {step out-name: saved row count or
-    'bound'} in execution order."""
+    """Run a pipeline config; returns {step out-name: committed row count,
+    'bound' or 'skipped'} in execution order.
+
+    Frames are built on their first read, once: a ``save`` step builds
+    only when its manifest stage is not committed, so a rerun resumes
+    without building anything upstream, and a trailing unsaved step
+    that no later step reads is never built."""
     if isinstance(cfg, str):
         cfg = json.loads(open(cfg).read())
     validate_config(cfg)
     wh = Warehouse(spark, cfg["warehouse"]) if cfg.get("warehouse") else None
-    env: dict[str, DataFrame] = {}
+    man = Manifest(wh) if wh else None
+    pipeline = cfg["pipeline"]
+    env = _Frames()
     result: dict[str, object] = {}
-    for step in cfg["pipeline"]:
+    for i, step in enumerate(pipeline):
         name = step["action"]
         out = step.get("out", name)
         if step.get("skip"):
             result[out] = "skipped"
             continue
-        df = step_frame(spark, env, step, cfg)
-        env[out] = df
-        if step.get("save"):
-            if wh is None:
-                raise ValueError(f"step {name}: save=true but no warehouse in config")
-            wh.write(df, out, partition_by=step.get("partition_by"))
-            env[out] = wh.read(out)  # downstream reads the committed table
-            result[out] = env[out].count()
-        else:
+        # a step reads the names bound before it, whatever a later step rebinds
+        build = functools.cache(
+            lambda s=step, e=_Frames(env.items()): step_frame(spark, e, s, cfg))
+        if not step.get("save"):
+            env[out] = build
             result[out] = "bound"
+            continue
+        if wh is None:
+            raise ValueError(f"step {name}: save=true but no warehouse in config")
+        stage, fp = step.get("stage", name), _fingerprint(cfg, pipeline[: i + 1])
+        keys = step.get("partition_by")
+        man.run_stage(stage, out, fp, build, partition_by=keys, lineage_keys=keys)
+        result[out] = man.record(stage, out, fp)["row_count"]
+        env[out] = lambda o=out: wh.read(o)  # downstream reads the committed table
     return result

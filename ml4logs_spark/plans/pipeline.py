@@ -1,33 +1,43 @@
 """End-to-end pipeline composition: parse -> enrich -> route -> aggregate,
-checkpointed through the manifest for resume.
+run as one config through ``config_runner.run_config``.
 
 The Spark restatement of the reference's config-driven step loop
 (/root/reference/src/ml4logs/__main__.py:46-51 + configs/HDFS1_100k/
-drain_preprocess.json): each stage is a DataFrame program, the durable
-boundaries are warehouse table commits, and a rerun resumes from the
-last committed stage (sources/manifest.py) instead of re-reading config
-``skip`` flags.
+drain_preprocess.json): ``PIPELINE`` is the parse, route and aggregate
+steps of ``configs/transcripts_preprocess.json``, with its own sink names
+and the aggregates read from the committed ``routed_turns`` table. It is
+Python, not a config file, because ``spark-submit --py-files`` ships only
+the package. Each ``save`` step is a manifest commit (sources/manifest.py)
+under its ``stage`` label (``parse``, ``route``, ``aggregate``); its
+fingerprint covers the input files and every step up to it, so a rerun
+resumes from the last committed stage instead of re-reading config
+``skip`` flags, and builds nothing for the stages it resumes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from ml4logs_spark.datagen import transcripts as tx
-from ml4logs_spark.operators import enrich as enrich_op
-from ml4logs_spark.operators import features as feat
-from ml4logs_spark.operators import parse, route, windows
-from ml4logs_spark.sources.manifest import Manifest, input_fingerprint
+from ml4logs_spark.plans.config_runner import run_config
+from ml4logs_spark.sources.manifest import Manifest
 from ml4logs_spark.sources.tables import Warehouse
 
-STAGES = [
-    "template_dim",
-    "routed_turns",
-    "sink_counts",
-    "conv_tool_tfidf",
-    "timedelta_features",
+PIPELINE = [
+    {"action": "transcripts"},
+    {"action": "template_dim", "save": True, "stage": "parse"},
+    {"action": "parse"},
+    {"action": "enrich"},
+    {"action": "route", "out": "routed_turns", "save": True, "stage": "route",
+     "partition_by": ["template_bucket", "role"]},
+    {"action": "sink_counts", "from": "routed_turns", "save": True,
+     "stage": "aggregate"},
+    {"action": "counts", "from": "routed_turns"},
+    {"action": "tfidf", "out": "conv_tool_tfidf", "save": True, "stage": "aggregate"},
+    {"action": "timedeltas", "out": "timedelta_features", "save": True,
+     "stage": "aggregate"},
 ]
+
+STAGES = [s.get("out", s["action"]) for s in PIPELINE if s.get("save")]
 
 
 def run_pipeline(
@@ -39,61 +49,17 @@ def run_pipeline(
     """Run all stages; returns {stage: ran?} (False = resume skip).
 
     fail_after simulates a crash for the kill/rerun resume test
-    (FIXTURES.md §6.7): raises RuntimeError after committing the named
-    stage.
+    (FIXTURES.md §6.7): runs ``PIPELINE`` up to the named stage, then
+    raises RuntimeError.
     """
-    wh = Warehouse(spark, warehouse_dir)
-    man = Manifest(wh)
-    fp = input_fingerprint([f"{sf_dir}/events.parquet"])
-    ran: dict[str, bool] = {}
-
-    turns = tx.transcripts(spark, sf_dir)
-
-    ran["template_dim"] = man.run_stage(
-        "parse", "template_dim", fp, lambda: parse.template_dim(turns)
-    )
-    if fail_after == "template_dim":
-        raise RuntimeError("simulated crash after template_dim")
-
-    dim = wh.read("template_dim")
-
-    def build_routed():
-        p = parse.parsed_turns(turns, dim)
-        e = enrich_op.enrich(p, tx.role_dim(spark), tx.tool_dim(spark))
-        return route.with_sink_key(e).drop("sink_key")
-
-    ran["routed_turns"] = man.run_stage(
-        "route", "routed_turns", fp, build_routed,
-        partition_by=["template_bucket", "role"],
-        lineage_keys=["template_bucket", "role"],
-    )
-    if fail_after == "routed_turns":
-        raise RuntimeError("simulated crash after routed_turns")
-
-    routed = wh.read("routed_turns")
-
-    ran["sink_counts"] = man.run_stage(
-        "aggregate", "sink_counts", fp,
-        lambda: routed.groupBy("template_bucket", "role").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("conv_id").alias("n_convs"),
-        ),
-    )
-    if fail_after == "sink_counts":
-        raise RuntimeError("simulated crash after sink_counts")
-
-    def build_tfidf():
-        counts = feat.conv_tool_counts(routed)
-        return feat.apply_tfidf(counts, feat.fit_idf(counts))
-
-    ran["conv_tool_tfidf"] = man.run_stage(
-        "aggregate", "conv_tool_tfidf", fp, build_tfidf
-    )
-    if fail_after == "conv_tool_tfidf":
-        raise RuntimeError("simulated crash after conv_tool_tfidf")
-
-    ran["timedelta_features"] = man.run_stage(
-        "aggregate", "timedelta_features", fp,
-        lambda: windows.with_timedeltas(turns).select("conv_id", "turn_idx", "td"),
-    )
-    return ran
+    steps = PIPELINE
+    if fail_after is not None:
+        outs = [s.get("out", s["action"]) for s in PIPELINE]
+        steps = PIPELINE[: outs.index(fail_after) + 1]
+    man = Manifest(Warehouse(spark, warehouse_dir))
+    n = len(man.load())
+    run_config(spark, {"input": sf_dir, "warehouse": warehouse_dir, "pipeline": steps})
+    if fail_after is not None:
+        raise RuntimeError(f"simulated crash after {fail_after}")
+    ran = {r["sink"] for r in man.load()[n:]}
+    return {s: s in ran for s in STAGES}

@@ -4,9 +4,18 @@ The reference's resumability is "skip if the output file exists"
 (/root/reference/src/ml4logs/data/utils.py:23-25, __main__.py:47-49).
 The distributed analog (north rule): every stage commit appends a
 manifest record keyed by (stage, sink, input_fingerprint); a rerun
-skips stages whose key already has a committed record AND whose sink is
-committed on disk — so a killed run resumes from the last committed
-stage, and already-committed sinks are never rewritten.
+skips stages whose key is that of the sink's newest committed record AND
+whose sink is committed on disk — so a killed run resumes from the last
+committed stage, and already-committed sinks are never rewritten. Only
+the newest record counts: after edits A -> B -> A, the sink holds B's
+table, so A's older record must not resume it.
+
+Every ``save`` step of a config (plans/config_runner.py, and so
+``run_pipeline``) commits through ``run_stage``: the step's ``stage``
+label, its ``out`` sink, and a fingerprint of the input files plus the
+config's steps up to it. ``build`` runs only when that key did not
+write the sink's current table, and ``record`` returns that record, whose
+``row_count`` the runner reports whether the stage ran or resumed.
 
 The manifest is JSONL next to the warehouse (tiny, driver-side — the
 analog of an Iceberg snapshot log; with Iceberg present the snapshot id
@@ -68,12 +77,24 @@ class Manifest:
             f.flush()
             os.fsync(f.fileno())
 
+    def latest(self, sink: str) -> dict | None:
+        """The newest committed record of ``sink``: the one that wrote
+        the table now on disk."""
+        return next((r for r in reversed(self.load())
+                     if r["sink"] == sink and r["status"] == "committed"), None)
+
+    def record(self, stage: str, sink: str, fingerprint: str) -> dict | None:
+        """``latest(sink)`` if ``(stage, fingerprint)`` wrote it, else None.
+        An older matching record does not count: a later commit under
+        another key has rewritten the table since."""
+        r = self.latest(sink)
+        if r and r["stage"] == stage and r["input_fingerprint"] == fingerprint:
+            return r
+        return None
+
     def committed(self, stage: str, sink: str, fingerprint: str) -> bool:
-        return any(
-            r["stage"] == stage and r["sink"] == sink
-            and r["input_fingerprint"] == fingerprint and r["status"] == "committed"
-            for r in self.load()
-        ) and self.warehouse.committed(sink)
+        return (self.record(stage, sink, fingerprint) is not None
+                and self.warehouse.committed(sink))
 
     def run_stage(
         self,

@@ -8,6 +8,12 @@ present, writes become atomic ``writeTo(...)`` commits and resume can
 key on snapshot ids; the parquet fallback emulates commit atomicity
 with a _COMMITTED marker written after a successful write plus the
 manifest protocol in sources/manifest.py.
+
+``Warehouse.read`` returns one DataFrame per table name and instance:
+a parquet read infers the schema, which costs a Spark job, so the
+manifest's read-back after a commit and every later read of that table
+share one. ``write`` drops the name's entry. A table rewritten behind
+the instance's back is not seen until it is written through it.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ class Warehouse:
         self.root = root
         self.use_iceberg = catalog is not None and iceberg_available(spark)
         self.catalog = catalog
+        self._reads: dict[str, DataFrame] = {}
         os.makedirs(root, exist_ok=True)
 
     def path(self, name: str) -> str:
@@ -41,6 +48,7 @@ class Warehouse:
 
     def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
               mode: str = "overwrite") -> None:
+        self._reads.pop(name, None)
         if self.use_iceberg:
             w = df.writeTo(f"{self.catalog}.{name}")
             if partition_by:
@@ -57,9 +65,12 @@ class Warehouse:
         open(os.path.join(p, "_COMMITTED"), "w").write("ok")
 
     def read(self, name: str) -> DataFrame:
-        if self.use_iceberg:
-            return self.spark.read.table(f"{self.catalog}.{name}")
-        return self.spark.read.parquet(self.path(name))
+        if name not in self._reads:
+            self._reads[name] = (
+                self.spark.read.table(f"{self.catalog}.{name}") if self.use_iceberg
+                else self.spark.read.parquet(self.path(name))
+            )
+        return self._reads[name]
 
     def committed(self, name: str) -> bool:
         if self.use_iceberg:

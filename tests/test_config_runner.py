@@ -17,8 +17,11 @@ from ml4logs_spark.operators import features as feat
 from ml4logs_spark.plans.config_runner import (
     ACTIONS, run_config, step_frame, validate_config,
 )
+from ml4logs_spark.plans.pipeline import PIPELINE
 from ml4logs_spark.sources import rawlog
-from tests.conftest import SF_DIR
+from ml4logs_spark.sources.manifest import Manifest
+from ml4logs_spark.sources.tables import Warehouse
+from tests.conftest import SF_DIR, spark_jobs
 
 _REPO = Path(__file__).resolve().parent.parent
 _CONFIGS = _REPO / "configs"
@@ -363,10 +366,64 @@ def test_validate_rejects_missing_required_key():
                                       {"action": "source_mix"}]})
 
 
-@pytest.mark.parametrize("path", sorted(p.name for p in _CONFIGS.glob("*.json")))
+# every shipped config, and the pipeline run_pipeline runs
+_SHIPPED = {p.name: json.loads(p.read_text()) for p in _CONFIGS.glob("*.json")}
+_SHIPPED["PIPELINE"] = {"input": SF_DIR, "pipeline": PIPELINE}
+
+
+@pytest.mark.parametrize("path", sorted(_SHIPPED))
 def test_shipped_config_validates(path):
     """Every shipped config binds every step without a Spark session."""
-    validate_config(json.loads((_CONFIGS / path).read_text()))
+    validate_config(_SHIPPED[path])
+
+
+def _sink_files(warehouse):
+    return {str(p): p.stat().st_mtime_ns for p in Path(warehouse).rglob("*")
+            if p.is_file() and p.name != "_manifest.jsonl"}
+
+
+def _preprocess_config(spark, tmp_path):
+    cfg = json.loads((_CONFIGS / "transcripts_preprocess.json").read_text())
+    cfg["warehouse"] = str(tmp_path / "wh")
+    return cfg, Manifest(Warehouse(spark, cfg["warehouse"]))
+
+
+def test_shipped_config_rerun_resumes(spark, tmp_path):
+    """Every save step is a manifest commit: rerunning the shipped config
+    returns the same result, runs no Spark job, appends no manifest
+    record and rewrites no sink file."""
+    cfg, man = _preprocess_config(spark, tmp_path)
+    first = run_config(spark, cfg)
+    records, files = man.load(), _sink_files(cfg["warehouse"])
+    jobs, second = spark_jobs(spark, "config-rerun", lambda: run_config(spark, cfg))
+    assert jobs == 0
+    assert second == first
+    assert man.load() == records
+    assert _sink_files(cfg["warehouse"]) == files
+
+
+def _embedding_width(spark, cfg, dim):
+    for step in cfg["pipeline"]:
+        if step["action"] in ("encode", "array_maxpool"):
+            step["dim"] = dim
+    run_config(spark, cfg)
+    table = spark.read.parquet(str(Path(cfg["warehouse"]) / "conv_embedding"))
+    return {len(r[0]) for r in table.select("max_embedding").collect()}
+
+
+def test_config_step_edit_reruns_later_saves_only(spark, tmp_path):
+    """A save's fingerprint covers every step up to it: narrowing the
+    embedding (the encode step and the max-pool that reads it) reruns
+    the one save after the edit and resumes the five saves before it.
+    Reverting the edit reruns that save again: the table on disk is the
+    narrowed one, so the first run's record must not resume it."""
+    cfg, man = _preprocess_config(spark, tmp_path)
+    assert _embedding_width(spark, cfg, 8) == {8}
+    n = len(man.load())
+    assert _embedding_width(spark, cfg, 4) == {4}
+    assert [r["sink"] for r in man.load()[n:]] == ["conv_embedding"]
+    assert _embedding_width(spark, cfg, 8) == {8}
+    assert [r["sink"] for r in man.load()[n:]] == ["conv_embedding"] * 2
 
 
 def test_shipped_hdfs_config_runs(spark, tmp_path):
@@ -599,3 +656,23 @@ def test_action_builds_its_operator_frame(spark, action_env, name):
             assert got.sameSemantics(want)
     finally:
         cache.release_all()
+
+
+def test_config_rebound_name_reads_earlier_binding(spark, tmp_path):
+    """A step reads the frames bound before it: rebinding ``documents``
+    to a source-mix sample feeds the sample to the next step, although
+    the rebinding step itself reads the full documents."""
+    weights = _STEPS["source_mix"]["weights"]
+    cfg = {
+        "input": SF_DIR,
+        "warehouse": str(tmp_path / "wh"),
+        "pipeline": [
+            {"action": "documents"},
+            {"action": "source_mix", "weights": weights, "out": "documents"},
+            {"action": "doc_stats", "save": True},
+        ],
+    }
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    want = textqa.doc_stats(textqa.source_mix_sample(docs, weights)).count()
+    assert 0 < want < docs.count()
+    assert run_config(spark, cfg)["doc_stats"] == want

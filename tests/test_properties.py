@@ -4,6 +4,7 @@ the distributed prefix sum, arbitrary float distributions (including
 constant/degenerate groups) for the fit/apply scalers."""
 
 import datetime
+import functools
 import math
 from collections import Counter
 
@@ -395,14 +396,15 @@ _MERGE_STATES = [
     "daily_health_state",
     "tool_latency_histogram_state",
     "read_latency_state",
+    "slowest_tool_calls",
 ]
 
 
 def _merged_and_whole(spark, state, docs, convs, lats, state_dir):
     """(merge of state(A) and state(B), state(A ∪ B)) for one additive
-    state; the ``_a`` flag drawn with each row (or conversation) splits
-    the input into A and B. The latency ledger is written under
-    ``state_dir``."""
+    state or the top-k state; the ``_a`` flag drawn with each row (or
+    conversation) splits the input into A and B. The latency ledger is
+    written under ``state_dir``."""
     from ml4logs_spark.operators import textqa
     from ml4logs_spark.streaming import latency
 
@@ -435,10 +437,9 @@ def _merged_and_whole(spark, state, docs, convs, lats, state_dir):
         ts = t0
         for i, (gap_s, tool, err, turn_side) in enumerate(turns):
             ts += datetime.timedelta(seconds=gap_s)
-            # latency pairs a turn with its successor, so that state
-            # splits whole conversations; the health counts split rows
-            side = conv_side if state == "tool_latency_histogram_state" \
-                else turn_side
+            # latency pairs a turn with its successor, so the latency
+            # states split whole conversations; the health counts split rows
+            side = turn_side if state == "daily_health_state" else conv_side
             rows.append((f"c{c:03d}", i, "u", "error code 7" if err else "ok",
                          tool, ts, side))
     a, b, whole = split(spark.createDataFrame(
@@ -448,6 +449,9 @@ def _merged_and_whole(spark, state, docs, convs, lats, state_dir):
     if state == "daily_health_state":
         f = windows.daily_health_state
         return windows.merge_daily_health_state(f(a), f(b)), f(whole)
+    if state == "slowest_tool_calls":  # k below the row count: the merge truncates
+        f = functools.partial(windows.slowest_tool_calls, k=5)
+        return windows.merge_slowest_tool_calls(f(a), f(b), k=5), f(whole)
     f = windows.tool_latency_histogram_state
     return windows.merge_tool_latency_histograms(f(a), f(b)), f(whole)
 
@@ -484,9 +488,10 @@ def _merged_and_whole(spark, state, docs, convs, lats, state_dir):
     ),
 )
 def test_additive_state_merge_law_property(spark, state, docs, convs, lats):
-    """For every additive day-2 state and any split of its input into A
-    and B, merging state(A) with state(B) equals state(A ∪ B) exactly:
-    same column names and types, same rows."""
+    """For every additive day-2 state, and the top-k slowest-call state,
+    and any split of its input into A and B, merging state(A) with
+    state(B) equals state(A ∪ B) exactly: same column names and types,
+    same rows."""
     import tempfile
 
     with tempfile.TemporaryDirectory() as state_dir:

@@ -6,7 +6,7 @@ import time
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, spark_jobs
 
 
 def _mtimes(warehouse_dir, sink):
@@ -90,3 +90,31 @@ def test_input_change_invalidates_resume(spark, tmp_path):
     ran1 = man.run_stage("s", "t1", a, lambda: tx.role_dim(spark))
     ran2 = man.run_stage("s", "t1", b, lambda: tx.role_dim(spark))
     assert ran1 and ran2  # different fingerprint -> stage reran
+
+
+def test_reverted_fingerprint_reruns_stage(spark, tmp_path):
+    """Only the sink's newest commit resumes: after A -> B the table is
+    B's, so going back to A rebuilds it, and A again resumes."""
+    from ml4logs_spark.datagen import transcripts as tx
+    from ml4logs_spark.sources.manifest import Manifest
+    from ml4logs_spark.sources.tables import Warehouse
+
+    man = Manifest(Warehouse(spark, str(tmp_path / "wh")))
+    ran = [man.run_stage("s", "t1", fp, lambda: tx.role_dim(spark))
+           for fp in ["a", "b", "a", "a"]]
+    assert ran == [True, True, True, False]
+    assert man.record("s", "t1", "b") is None
+    assert man.record("s", "t1", "a") == man.latest("t1")
+
+
+def test_pipeline_job_budget(spark, tmp_path):
+    """A fresh run commits five stages in at most 40 Spark jobs (each
+    committed table's schema is inferred once); a rerun resumes every
+    stage and builds nothing, so it runs none."""
+    from ml4logs_spark.plans.pipeline import run_pipeline
+
+    wh = str(tmp_path / "wh")
+    jobs, _ = spark_jobs(spark, "budget-fresh", lambda: run_pipeline(spark, SF_DIR, wh))
+    assert jobs <= 40
+    jobs, _ = spark_jobs(spark, "budget-rerun", lambda: run_pipeline(spark, SF_DIR, wh))
+    assert jobs == 0

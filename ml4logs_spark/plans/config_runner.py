@@ -341,11 +341,20 @@ class _Names(dict):
         return name
 
 
+def _width(step: dict, cfg: dict) -> int:
+    # the ``dim`` a step binds: its own, its row's, or its operator's default
+    a = ACTIONS[step["action"]]
+    kw = _arguments(a, step, cfg, _Names(), None)[1]
+    return kw.get("dim", inspect.signature(a.op).parameters["dim"].default)
+
+
 def validate_config(cfg: dict) -> None:
     """Check every step before any Spark work runs: a known action, only
-    keys its row accepts, and arguments that bind to the operator."""
+    keys its row accepts, arguments that bind to the operator, and an
+    ``array_maxpool`` as wide as the ``encode`` step it reads."""
     if "pipeline" not in cfg or not isinstance(cfg["pipeline"], list):
         raise ValueError("config needs a 'pipeline' list")
+    bound: dict[str, tuple[int, dict]] = {}  # name -> (index, step) binding it
     for i, step in enumerate(cfg["pipeline"]):
         name = step.get("action")
         if name not in ACTIONS:
@@ -364,6 +373,14 @@ def validate_config(cfg: dict) -> None:
             inspect.signature(a.op).bind(*args, **kw)
         except TypeError as e:
             raise ValueError(f"step {i} ({name}): {e}") from None
+        if name == "array_maxpool":  # it reads elements 1..dim of each vector
+            j, src = bound.get(args[0], (None, {}))
+            if src.get("action") == "encode" and _width(step, cfg) != _width(src, cfg):
+                raise ValueError(f"step {i} ({name}): dim {_width(step, cfg)} differs "
+                                 f"from the dim {_width(src, cfg)} of step {j} "
+                                 "(encode) it reads")
+        if not step.get("skip"):
+            bound[step.get("out", name)] = i, step
 
 
 def step_frame(spark: SparkSession, env: dict, step: dict, cfg: dict) -> DataFrame:

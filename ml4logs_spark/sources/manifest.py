@@ -22,7 +22,9 @@ analog of an Iceberg snapshot log; with Iceberg present the snapshot id
 would be recorded instead of the _COMMITTED marker). Each record also
 carries per-partition lineage: row counts per routed partition, wall
 time, and the input fingerprint, satisfying "checkpoints per-partition
-lineage and metrics to a manifest table".
+lineage and metrics to a manifest table". The commit does not read its
+sink back: the row counts are summed from the written parquet footers,
+keyed by the partition directory names (``Warehouse.counts``).
 """
 
 from __future__ import annotations
@@ -108,25 +110,17 @@ class Manifest:
         """Build+commit one stage; returns False if skipped (resume hit).
 
         lineage_keys: columns whose per-value row counts are recorded as
-        per-partition lineage in the manifest record.
+        per-partition lineage in the manifest record. The counts come
+        from ``Warehouse.counts``: on parquet, with partition columns as
+        keys, from what the write left on disk, so the commit runs no
+        Spark job beyond the write.
         """
         if self.committed(stage, sink, fingerprint):
             return False
         t0 = time.perf_counter()
         df = build()
         self.warehouse.write(df, sink, partition_by=partition_by)
-        out = self.warehouse.read(sink)
-        row_count = out.count()
-        lineage = None
-        if lineage_keys:
-            from pyspark.sql import functions as F
-
-            lineage = {
-                "/".join(str(v) for v in r[:-1]): r[-1]
-                for r in out.groupBy(*lineage_keys)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+        row_count, lineage = self.warehouse.counts(sink, lineage_keys)
         self._append({
             "stage": stage,
             "sink": sink,

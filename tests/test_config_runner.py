@@ -389,17 +389,33 @@ def _preprocess_config(spark, tmp_path):
 
 
 def test_shipped_config_rerun_resumes(spark, tmp_path):
-    """Every save step is a manifest commit: rerunning the shipped config
-    returns the same result, runs no Spark job, appends no manifest
-    record and rewrites no sink file."""
+    """Every save step is a manifest commit: a fresh run of the shipped
+    config commits its six saves in at most 29 Spark jobs, as no commit
+    reads its sink back. Rerunning it returns the same result,
+    runs no Spark job, appends no manifest record and rewrites no sink
+    file."""
     cfg, man = _preprocess_config(spark, tmp_path)
-    first = run_config(spark, cfg)
+    jobs, first = spark_jobs(spark, "config-fresh", lambda: run_config(spark, cfg))
+    assert jobs <= 29
     records, files = man.load(), _sink_files(cfg["warehouse"])
     jobs, second = spark_jobs(spark, "config-rerun", lambda: run_config(spark, cfg))
     assert jobs == 0
     assert second == first
     assert man.load() == records
     assert _sink_files(cfg["warehouse"]) == files
+
+
+def test_validate_rejects_maxpool_wider_than_encode():
+    """The max-pool reads elements 1..dim of each embedding, so narrowing
+    only ``encode`` fails validation before Spark starts (no session is
+    passed), not at run time past the end of the array."""
+    cfg = json.loads((_CONFIGS / "transcripts_preprocess.json").read_text())
+    encode_step = next(s for s in cfg["pipeline"] if s["action"] == "encode")
+    encode_step["dim"] = 4
+    with pytest.raises(ValueError, match=r"dim 8 differs from the dim 4 of step 9"):
+        run_config(None, cfg)
+    encode_step.pop("dim")  # both at their default width, 8
+    validate_config(cfg)
 
 
 def _embedding_width(spark, cfg, dim):

@@ -108,13 +108,128 @@ def test_reverted_fingerprint_reruns_stage(spark, tmp_path):
 
 
 def test_pipeline_job_budget(spark, tmp_path):
-    """A fresh run commits five stages in at most 40 Spark jobs (each
-    committed table's schema is inferred once); a rerun resumes every
-    stage and builds nothing, so it runs none."""
+    """A fresh run commits five stages in at most 23 Spark jobs: a commit
+    takes its counts from the written footers and a committed table is
+    read with its written schema, so neither runs a job; a rerun resumes
+    every stage and builds nothing, so it runs none."""
     from ml4logs_spark.plans.pipeline import run_pipeline
 
     wh = str(tmp_path / "wh")
     jobs, _ = spark_jobs(spark, "budget-fresh", lambda: run_pipeline(spark, SF_DIR, wh))
-    assert jobs <= 40
+    assert jobs <= 23
     jobs, _ = spark_jobs(spark, "budget-rerun", lambda: run_pipeline(spark, SF_DIR, wh))
     assert jobs == 0
+
+
+def _spark_counts(spark, path, keys):
+    """A commit's counts as a fresh Spark read gives them: count() and
+    the per-key group-by collect."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(path)
+    lineage = None
+    if keys:
+        lineage = {"/".join(str(v) for v in r[:-1]): r[-1]
+                   for r in df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).collect()}
+    return df.count(), lineage
+
+
+_ESCAPED = ["a/b", "k=v", "100%", "two words", "é", "naïve 😀", "x:y?", "007"]
+
+# (rows of (id, s, d), partition_by, lineage keys)
+_COUNT_CASES = {
+    "empty": ([], None, None),
+    "unpartitioned": ([(1, "a", "x"), (2, None, "y")], None, None),
+    "null_value": ([(1, None, "x"), (2, None, "y"), (3, "a", "x")], ["s"], ["s"]),
+    "escaped": ([(i, v, "x") for i, v in enumerate(_ESCAPED * 2)], ["s"], ["s"]),
+    "digit_string": ([(1, "007", "x"), (2, "007", "y"), (3, "42", "y")], ["s"], ["s"]),
+    "two_keys": ([(1, "007", "x"), (2, None, "y"), (3, "a/b", "y")], ["s", "d"], ["s", "d"]),
+    "key_subset": ([(1, "a", "x"), (2, "b", "x"), (3, "a", "y")], ["s", "d"], ["d"]),
+    "key_order": ([(1, "a", "x"), (2, "b", "x"), (3, "a", "y")], ["s", "d"], ["d", "s"]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_COUNT_CASES))
+def test_footer_counts_match_spark_counts(spark, tmp_path, case):
+    """``Warehouse.counts`` reads a commit's (row count, lineage) from the
+    footers and partition directory names with no Spark job, and equals
+    a fresh read's count and group-by: a NULL partition value is keyed
+    "None", Hive-escaped values unescaped, and a digit-string column
+    reads back as int ("007" -> "7") unless a value in it is not a
+    number."""
+    from ml4logs_spark.sources.tables import Warehouse
+
+    rows, parts, keys = _COUNT_CASES[case]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.write(spark.createDataFrame(rows, "id int, s string, d string"), "t", partition_by=parts)
+    jobs, got = spark_jobs(spark, f"footer-{case}", lambda: wh.counts("t", keys))
+    assert jobs == 0
+    assert got == _spark_counts(spark, wh.path("t"), keys)
+
+
+def test_footer_counts_empty_partitioned_sink(spark, tmp_path):
+    """An empty partitioned write leaves no part files, so a fresh read
+    cannot infer a schema and the old read-back commit raised. The
+    footer count commits it as 0 rows and no partitions, and the read
+    gives the written columns, the partition columns last."""
+    from pyspark.errors import AnalysisException
+
+    from ml4logs_spark.sources.manifest import Manifest
+    from ml4logs_spark.sources.tables import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    empty = spark.createDataFrame([], "id int, s string, d string")
+    assert Manifest(wh).run_stage("s", "t", "fp", lambda: empty,
+                                  partition_by=["s"], lineage_keys=["s"])
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        _spark_counts(spark, wh.path("t"), ["s"])
+    rec = Manifest(wh).latest("t")
+    assert (rec["row_count"], rec["partition_lineage"]) == (0, {})
+    read = wh.read("t")
+    assert read.columns == ["id", "d", "s"] and read.count() == 0
+
+
+def _committed_reads(spark, monkeypatch, run):
+    """{sink: (jobs of the read right after its write, its schema json, a
+    fresh read's schema json)} over the writes ``run()`` commits."""
+    from ml4logs_spark.sources.tables import Warehouse
+
+    seen = {}
+    write = Warehouse.write
+
+    def checked_write(self, df, name, partition_by=None, mode="overwrite"):
+        write(self, df, name, partition_by=partition_by, mode=mode)
+        jobs, read = spark_jobs(spark, f"read-{name}", lambda: self.read(name))
+        seen[name] = (jobs, read.schema.json(),
+                      spark.read.parquet(self.path(name)).schema.json())
+
+    with monkeypatch.context() as m:
+        m.setattr(Warehouse, "write", checked_write)
+        run()
+    return seen
+
+
+def test_committed_table_reads_without_a_job(spark, tmp_path, monkeypatch):
+    """Every save sink of ``PIPELINE`` and of the shipped transcripts
+    config reads back right after its commit with no Spark job, under
+    the schema (nullability included) that a fresh read infers."""
+    import json
+    from pathlib import Path
+
+    from ml4logs_spark.plans.config_runner import run_config
+    from ml4logs_spark.plans.pipeline import PIPELINE, run_pipeline
+
+    cfg = json.loads((Path(__file__).resolve().parent.parent / "configs"
+                      / "transcripts_preprocess.json").read_text())
+    cfg["warehouse"] = str(tmp_path / "cfg")
+    runs = {
+        "PIPELINE": (PIPELINE, lambda: run_pipeline(spark, SF_DIR, str(tmp_path / "wh"))),
+        "config": (cfg["pipeline"], lambda: run_config(spark, cfg)),
+    }
+    for label, (steps, run) in runs.items():
+        seen = _committed_reads(spark, monkeypatch, run)
+        assert sorted(seen) == sorted(s.get("out", s["action"]) for s in steps
+                                      if s.get("save")), label
+        for sink, (jobs, given, inferred) in seen.items():
+            assert jobs == 0, (label, sink)
+            assert given == inferred, (label, sink)

@@ -11,6 +11,9 @@
   signatures from md5-nibble weights; candidates = bucket collisions,
   exact cosine re-rank inside buckets. Signature is map-only; the join
   is equi on (signature) instead of a cross product.
+
+Every cosine here is ``_cos`` over ``_norm``-hoisted norms, and every
+per-query top-k ranks through ``_topk`` (candidate paths: ``_rerank``).
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql.window import Window
 
 from ml4logs_spark import cache
 from ml4logs_spark.operators.dedup import bucket_pairs, connected_components
+from ml4logs_spark.operators.textqa import _norm_rate_hex
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -53,49 +57,82 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(target) if n < target else df
 
 
-def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.withColumn("l2_norm", F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
+def _norm(v: Column) -> Column:
+    return F.sqrt(_dot(v, v))
 
 
-def cosine_topk(
-    emb: DataFrame, query_ids: list[int], k: int = 10, vec_col: str = "embedding"
-) -> DataFrame:
-    """Exact top-k cosine neighbours for each query vector (brute force)."""
-    # norms are hoisted to per-ROW columns before the pair join: the
-    # scoring stage is quadratic, and recomputing both O(dim) norms
-    # per PAIR would triple the interpreted higher-order arithmetic
-    # (same double values either way — sqrt is deterministic)
-    q = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_qn"),
+def _cos(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """The one cosine of this module: dot(a, b) over the hoisted norms
+    ``na``/``nb``, rounded to 6dp BEFORE any rank or threshold —
+    fold-order double noise (~1e-15) can differ between engines and
+    flip near-ties, while round(cos, 6) + id ranks identically
+    everywhere. A zero vector has norm 0: ``try_divide`` gives its
+    pairs a NULL cosine (DuckDB's ``x / 0.0``), which fails every
+    ``>=`` threshold and ranks last under ``F.desc``, where a plain
+    divide raises DIVIDE_BY_ZERO under ANSI."""
+    return F.round(F.try_divide(_dot(a, b), na * nb), 6)
+
+
+def _side(df: DataFrame, id_as: str, vec_as: str, norm_as: str,
+          vec_col: str) -> DataFrame:
+    """(id, vector, norm) projection of ``df``. The norm hoists per ROW
+    before any pair join: the scoring stages are quadratic, and
+    recomputing both O(dim) norms per PAIR would triple the
+    interpreted higher-order arithmetic (same doubles either way —
+    sqrt is deterministic)."""
+    v = F.col(vec_col)
+    return df.select(
+        F.col("vec_id").alias(id_as), v.alias(vec_as), _norm(v).alias(norm_as)
     )
-    c = _spread(emb).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col(vec_col).alias("cvec"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_cn"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            # round BEFORE ranking: fold-order double noise (~1e-15) can
-            # differ between engines and flip ranks of near-ties; ranking
-            # on round(cos, 6) + cand_id is deterministic everywhere.
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("_qn") * F.col("_cn")),
-                6,
-            ),
-        )
-    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, cand_id, cosine) rows: row_number
+    over (query_id; cosine DESC, cand_id ASC) — NULL cosines last."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "cand_id", "rank", "cosine")
     )
+
+
+def _rerank(pairs: DataFrame, emb: DataFrame, query_ids: list[int], k: int,
+            vec_col: str) -> DataFrame:
+    """Exact cosine re-rank of (query_id, cand_id) candidate pairs: the
+    broadcast query vectors and the candidate vectors join onto the
+    pairs by id (vectors travel once, not per collision), then score
+    and rank."""
+    q = _side(emb.filter(F.col("vec_id").isin(query_ids)),
+              "query_id", "qvec", "_qn", vec_col)
+    c = _side(emb, "cand_id", "cvec", "_cn", vec_col)
+    scored = (
+        pairs.join(F.broadcast(q), "query_id")
+        .join(c, "cand_id")
+        .withColumn("cosine", _cos(F.col("qvec"), F.col("cvec"),
+                                   F.col("_qn"), F.col("_cn")))
+    )
+    return _topk(scored, k)
+
+
+def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    return emb.withColumn("l2_norm", _norm(F.col(vec_col)))
+
+
+def cosine_topk(
+    emb: DataFrame, query_ids: list[int], k: int = 10, vec_col: str = "embedding"
+) -> DataFrame:
+    """Exact top-k cosine neighbours for each query vector (brute force)."""
+    q = _side(emb.filter(F.col("vec_id").isin(query_ids)),
+              "query_id", "qvec", "_qn", vec_col)
+    c = _side(_spread(emb), "cand_id", "cvec", "_cn", vec_col)
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .withColumn("cosine", _cos(F.col("qvec"), F.col("cvec"),
+                                   F.col("_qn"), F.col("_cn")))
+    )
+    return _topk(scored, k)
 
 
 def _hyperplane(plane: int, dim: int) -> list[float]:
@@ -148,6 +185,32 @@ def band_signatures(
     ).select("vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 
+def _lsh_candidates(
+    emb: DataFrame,
+    query_ids: list[int],
+    n_planes: int,
+    n_bands: int,
+    dim: int,
+    vec_col: str,
+) -> DataFrame:
+    """Shared LSH candidate generation: (query_id, cand_id) pairs that
+    collide in any band, the query bands broadcast into the bucket
+    equi-join. One definition keeps lsh_topk and lsh_candidate_fraction
+    grading the SAME candidate set (the _ivf_candidates pattern)."""
+    bs = band_signatures(emb, n_planes=n_planes, n_bands=n_bands,
+                         dim=dim, vec_col=vec_col)
+    qb = bs.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), "band", "sig"
+    )
+    cb = bs.select(F.col("vec_id").alias("cand_id"), "band", "sig")
+    return (
+        cb.join(F.broadcast(qb), ["band", "sig"])
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id")
+        .distinct()
+    )
+
+
 def lsh_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -175,46 +238,8 @@ def lsh_topk(
     Scale shape: candidate generation is an equi-join on (band, sig)
     buckets (never a cross product); scoring joins embeddings back by
     id, so vectors travel once, not per-collision."""
-    bs = band_signatures(emb, n_planes=n_planes, n_bands=n_bands, dim=dim)
-    qb = bs.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), "band", "sig"
-    )
-    cb = bs.select(F.col("vec_id").alias("cand_id"), "band", "sig")
-    pairs = (
-        cb.join(F.broadcast(qb), ["band", "sig"])
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id")
-        .distinct()
-    )
-    # per-row norm hoist, same rationale as cosine_topk
-    q = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("_qn"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("cvec"),
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("_cn"),
-    )
-    scored = (
-        pairs.join(F.broadcast(q), "query_id")
-        .join(c, "cand_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("_qn") * F.col("_cn")),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
+    pairs = _lsh_candidates(emb, query_ids, n_planes, n_bands, dim, "embedding")
+    return _rerank(pairs, emb, query_ids, k, "embedding")
 
 
 def embedding_near_dups(
@@ -238,23 +263,10 @@ def embedding_near_dups(
                              dim=dim, vec_col=vec_col)
     )
     pairs = bucket_pairs(bs, ["band", "sig"], ids=("vec_id", "vec_a", "vec_b"))
-    # per-row norm hoist, same rationale as cosine_topk
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col(vec_col).alias("va"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_na"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col(vec_col).alias("vb"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_nb"),
-    )
+    ea = _side(emb, "vec_a", "va", "_na", vec_col)
+    eb = _side(emb, "vec_b", "vb", "_nb", vec_col)
     scored = pairs.join(ea, "vec_a").join(eb, "vec_b").withColumn(
-        "cosine",
-        F.round(
-            _dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb")),
-            6,
-        ),
+        "cosine", _cos(F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"))
     )
     return scored.filter(F.col("cosine") >= threshold).select(
         "vec_a", "vec_b", "cosine"
@@ -277,34 +289,30 @@ def embedding_near_dup_clusters(
     ).withColumnRenamed("doc_id", "vec_id")
 
 
-def _cosine(a: Column, b: Column) -> Column:
-    return F.round(
-        _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))), 6
+def _cell_scores(vecs: DataFrame, codebook: DataFrame, *aggs: Column) -> DataFrame:
+    """argmax-cosine cell of each (vec_id, v) against a broadcast
+    (cent_id, centvec) codebook via ``max_by`` — ONE hash aggregate, no
+    window sort; the only shuffle is the group-by of N x k scored rows
+    with map-side combine. Tie-break: max struct (sim, -cent_id) ==
+    ORDER BY sim DESC, cent_id ASC. Both norms hoist per ROW (each
+    vector scores against k centroids); ``aggs`` ride in the same
+    aggregate over the scored rows (columns of ``vecs``, ``sim``)."""
+    cn = codebook.withColumn("_cn", _norm(F.col("centvec")))
+    scored = (
+        vecs.withColumn("_vn", _norm(F.col("v")))
+        .crossJoin(F.broadcast(cn))
+        .withColumn("sim", _cos(F.col("v"), F.col("centvec"),
+                                F.col("_vn"), F.col("_cn")))
+    )
+    ord_key = F.struct(F.col("sim").alias("s"), (-F.col("cent_id")).alias("c"))
+    return scored.groupBy("vec_id").agg(
+        F.max_by("cent_id", ord_key).alias("cell"), *aggs
     )
 
 
 def _assign_cells(vecs: DataFrame, codebook: DataFrame) -> DataFrame:
-    """argmax-cosine cell assignment of (vec_id, v) against a broadcast
-    (cent_id, centvec) codebook via ``max_by`` — ONE hash aggregate, no
-    window sort; the only shuffle is the group-by of N x k scored rows
-    with map-side combine. Tie-break: max struct (sim, -cent_id) ==
-    ORDER BY sim DESC, cent_id ASC."""
-    # per-row norm hoist (see cosine_topk): each vector scores against
-    # k centroids, so both norms compute once per ROW, not per pair
-    vn = _spread(vecs).withColumn("_vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cn = codebook.withColumn(
-        "_cn", F.sqrt(_dot(F.col("centvec"), F.col("centvec")))
-    )
-    scored = vn.crossJoin(F.broadcast(cn)).withColumn(
-        "sim",
-        F.round(
-            _dot(F.col("v"), F.col("centvec"))
-            / (F.col("_vn") * F.col("_cn")),
-            6,
-        ),
-    )
-    ord_key = F.struct(F.col("sim").alias("s"), (-F.col("cent_id")).alias("c"))
-    return scored.groupBy("vec_id").agg(F.max_by("cent_id", ord_key).alias("cell"))
+    """(vec_id, cell) argmax-cosine assignment (``_cell_scores``)."""
+    return _cell_scores(_spread(vecs), codebook)
 
 
 def fit_ivf_codebook(
@@ -392,7 +400,8 @@ def _ivf_candidates(
         emb.filter(F.col("vec_id").isin(query_ids))
         .select(F.col("vec_id").alias("query_id"), F.col(vec_col).alias("qv"))
         .crossJoin(F.broadcast(codebook))
-        .withColumn("sim", _cosine(F.col("qv"), F.col("centvec")))
+        .withColumn("sim", _cos(F.col("qv"), F.col("centvec"),
+                                _norm(F.col("qv")), _norm(F.col("centvec"))))
     )
     w_p = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cent_id"))
     probes = (
@@ -428,29 +437,7 @@ def ivf_topk(
     pairs = _ivf_candidates(
         emb, query_ids, n_centroids, n_probes, vec_col, codebook=codebook
     )
-    q = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = emb.select(F.col("vec_id").alias("cand_id"), F.col(vec_col).alias("cvec"))
-    scored = (
-        pairs.join(F.broadcast(q), "query_id")
-        .join(c, "cand_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (F.sqrt(_dot(F.col("qvec"), F.col("qvec")))
-                   * F.sqrt(_dot(F.col("cvec"), F.col("cvec")))),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
+    return _rerank(pairs, emb, query_ids, k, vec_col)
 
 
 def _recall_vs_exact(emb: DataFrame, approx: DataFrame,
@@ -475,6 +462,14 @@ def ivf_recall(emb: DataFrame, query_ids: list[int], k: int = 10, **ivf_kw) -> f
     return _recall_vs_exact(emb, ivf_topk(emb, query_ids, k, **ivf_kw), query_ids, k)
 
 
+def _candidate_fraction(pairs: DataFrame, emb: DataFrame,
+                        query_ids: list[int]) -> float:
+    """Candidate pairs over the Q x (N - 1) an exact scan would score."""
+    n_cand = pairs.count()
+    denom = len(query_ids) * max(emb.count() - 1, 1)
+    return round(n_cand / denom, 4)
+
+
 def ivf_candidate_fraction(
     emb: DataFrame,
     query_ids: list[int],
@@ -487,12 +482,11 @@ def ivf_candidate_fraction(
     probing — the pruning counterpart of lsh_candidate_fraction (with a
     uniform codebook it approaches n_probes/n_centroids; skewed cells
     push it higher). Defaults mirror ivf_topk's."""
-    n_cand = _ivf_candidates(
-        emb, query_ids, n_centroids, n_probes, vec_col, codebook=codebook
-    ).count()
-    n_total = emb.count()
-    denom = len(query_ids) * max(n_total - 1, 1)
-    return round(n_cand / denom, 4)
+    return _candidate_fraction(
+        _ivf_candidates(emb, query_ids, n_centroids, n_probes, vec_col,
+                        codebook=codebook),
+        emb, query_ids,
+    )
 
 
 def lsh_candidate_fraction(
@@ -508,22 +502,10 @@ def lsh_candidate_fraction(
     be earned by brute force when buckets barely prune). Defaults MUST
     mirror lsh_topk's so the fraction grades the same config the recall
     was measured on (band_signatures' own default is n_bands=2)."""
-    bs = band_signatures(emb, n_planes=n_planes, n_bands=n_bands,
-                         dim=dim, vec_col=vec_col)
-    qb = bs.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), "band", "sig"
+    return _candidate_fraction(
+        _lsh_candidates(emb, query_ids, n_planes, n_bands, dim, vec_col),
+        emb, query_ids,
     )
-    cb = bs.select(F.col("vec_id").alias("cand_id"), "band", "sig")
-    n_cand = (
-        cb.join(F.broadcast(qb), ["band", "sig"])
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id")
-        .distinct()
-        .count()
-    )
-    n_total = emb.count()
-    denom = len(query_ids) * max(n_total - 1, 1)
-    return round(n_cand / denom, 4)
 
 
 # ------------------------------------------------------ int8 quantization
@@ -641,9 +623,9 @@ def knn_label_vote(
     in-plan instead of exporting matrices).
 
     The seed set is the deterministic md5-prefix draw of ``vec_id``
-    (``seed_rate_hex``/0x10000 of the corpus — same draw family as
-    textqa.hash_sample, so the split is reproducible under any
-    partitioning); seeds keep their ``label``, every other vector gets
+    (``seed_rate_hex``/0x10000 of the corpus, the rate 2 or 4 lowercase
+    hex chars — same draw family as textqa.hash_sample, so the split is
+    reproducible under any partitioning); seeds keep their ``label``, every other vector gets
     ``pred_label`` = the label with the most votes among its k nearest
     seeds, ranked by round(cosine, 6) DESC then seed vec_id ASC, vote
     ties broken toward the smallest label.
@@ -658,9 +640,8 @@ def knn_label_vote(
     n_votes). Edge: an EMPTY seed set (nothing under the draw) yields
     NULL pred_label for every row — callers gate on seed availability
     rather than this function guessing a label."""
-    is_seed = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4) < F.lit(
-        seed_rate_hex
-    )
+    rate = _norm_rate_hex(seed_rate_hex, "seed_rate_hex")
+    is_seed = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4) < F.lit(rate)
     seeds = emb.filter(is_seed)
     rest = emb.filter(~is_seed)
     srow = seeds.agg(
@@ -674,7 +655,7 @@ def knn_label_vote(
                     # transform lambdas get no cross-iteration CSE, so
                     # recomputing it per (row x seed) would triple the
                     # O(dim) arithmetic on the hot map-only path
-                    F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("sn"),
+                    _norm(F.col(vec_col)).alias("sn"),
                 )
             )
         ).alias("_seeds")
@@ -682,13 +663,7 @@ def knn_label_vote(
     scored = F.transform(
         F.col("_seeds"),
         lambda s: F.struct(
-            (
-                -F.round(
-                    _dot(F.col(vec_col), s["v"])
-                    / (F.col("_qn") * s["sn"]),
-                    6,
-                )
-            ).alias("negc"),
+            (-_cos(F.col(vec_col), s["v"], F.col("_qn"), s["sn"])).alias("negc"),
             s["sid"].alias("sid"),
             s["lab"].alias("lab"),
         ),
@@ -707,7 +682,7 @@ def knn_label_vote(
     )
     return (
         _spread(rest)
-        .withColumn("_qn", F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
+        .withColumn("_qn", _norm(F.col(vec_col)))
         .crossJoin(F.broadcast(srow))
         .select(
             "vec_id",
@@ -764,27 +739,12 @@ def embedding_contaminated_ids(
         .select("vec_id", "bench_id")
         .distinct()
     )
-    bv = bench.select(
-        F.col("vec_id").alias("bench_id"),
-        F.col(vec_col).alias("bvec"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_bn"),
+    bv = _side(bench, "bench_id", "bvec", "_bn", vec_col)
+    scored = cand.join(_side(emb, "vec_id", "cvec", "_cn", vec_col), "vec_id").join(
+        F.broadcast(bv), "bench_id"
     )
-    # per-row norm hoist (see cosine_topk)
-    scored = cand.join(
-        emb.select(
-            "vec_id",
-            F.col(vec_col).alias("cvec"),
-            F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_cn"),
-        ),
-        "vec_id",
-    ).join(F.broadcast(bv), "bench_id")
     dirty = scored.filter(
-        F.round(
-            _dot(F.col("cvec"), F.col("bvec"))
-            / (F.col("_cn") * F.col("_bn")),
-            6,
-        )
-        >= threshold
+        _cos(F.col("cvec"), F.col("bvec"), F.col("_cn"), F.col("_bn")) >= threshold
     )
     return dirty.select("vec_id").distinct()
 
@@ -827,31 +787,13 @@ def ivf_cell_summary(
         codebook = cache.track(
             fit_ivf_codebook(emb, n_centroids, vec_col=vec_col)
         )
-    vecs = emb.select(
-        "vec_id", "label",
-        F.col(vec_col).alias("v"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_vn"),
-    )
-    cbn = codebook.withColumn(
-        "_cn", F.sqrt(_dot(F.col("centvec"), F.col("centvec")))
-    )
-    scored = vecs.crossJoin(F.broadcast(cbn)).withColumn(
-        "sim",
-        F.round(
-            _dot(F.col("v"), F.col("centvec"))
-            / (F.col("_vn") * F.col("_cn")),
-            6,
-        ),
-    )
-    ord_key = F.struct(F.col("sim").alias("s"), (-F.col("cent_id")).alias("c"))
+    vecs = emb.select("vec_id", "label", F.col(vec_col).alias("v"))
     # tracked persist: asg is a diamond node (feeds both the per-label
     # and per-cell rollups) — without it the N x k assignment aggregate
     # runs twice
     asg = cache.track(
-        scored.groupBy("vec_id").agg(
-            F.max_by("cent_id", ord_key).alias("cell"),
-            F.max("sim").alias("rcos"),
-            F.min("label").alias("label"),
+        _cell_scores(
+            vecs, codebook, F.max("sim").alias("rcos"), F.min("label").alias("label")
         )
     )
     lab = asg.groupBy("cell", "label").agg(F.count(F.lit(1)).alias("n"))
@@ -950,31 +892,18 @@ def incremental_embedding_near_dups(
         .select("new_id", "hist_id")
         .distinct()
     )
-    nv = new_emb.select(
-        F.col("vec_id").alias("new_id"),
-        F.col(vec_col).alias("nvec"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_nn"),
-    )
+    nv = _side(new_emb, "new_id", "nvec", "_nn", vec_col)
     # prune history to candidate ids BEFORE dequantizing: the int8
     # reconstruction is O(dim) per row, and at a 10^10-vector history
     # paying it for every non-candidate row would dwarf the probe
     cand_ids = hist_cand.select(F.col("hist_id").alias("vec_id")).distinct()
     pruned = code_state.join(F.broadcast(cand_ids), "vec_id", "left_semi")
-    hv = dequantize(pruned, quant, out_col="hvec").select(
-        F.col("vec_id").alias("hist_id"),
-        "hvec",
-        F.sqrt(_dot(F.col("hvec"), F.col("hvec"))).alias("_hn"),
-    )
+    hv = _side(dequantize(pruned, quant, out_col="hvec"),
+               "hist_id", "hvec", "_hn", "hvec")
     cross = (
         hv.join(F.broadcast(hist_cand.join(nv, "new_id")), "hist_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("nvec"), F.col("hvec"))
-                / (F.col("_nn") * F.col("_hn")),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cos(F.col("nvec"), F.col("hvec"),
+                                   F.col("_nn"), F.col("_hn")))
         .filter(F.col("cosine") >= threshold)
         .select(
             F.least("new_id", "hist_id").alias("vec_a"),
@@ -1021,14 +950,7 @@ def semantic_dedup_survivors(
     # aggregate (and the corpus scan under it) runs twice; the cached
     # frame is two narrow columns, so vectors are not retained
     cells = cache.track(ivf_cells(emb, codebook, vec_col=vec_col))
-    # per-row norm hoist (see cosine_topk): the within-cell pair stage
-    # is quadratic in cell size, so norms must not recompute per pair
-    v = emb.select(
-        "vec_id",
-        F.col(vec_col).alias("_v"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_n"),
-    )
-    sided = cells.join(v, "vec_id")
+    sided = cells.join(_side(emb, "vec_id", "_v", "_n", vec_col), "vec_id")
     a = sided.select(
         "cell", F.col("vec_id").alias("id_a"),
         F.col("_v").alias("va"), F.col("_n").alias("_na"),
@@ -1041,12 +963,7 @@ def semantic_dedup_survivors(
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
-            F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("_na") * F.col("_nb")),
-                6,
-            )
-            >= threshold
+            _cos(F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")) >= threshold
         )
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
@@ -1060,7 +977,7 @@ def _pq_subvectors(vecs: DataFrame, m: int, dsub: int,
                    vec_col: str = "v") -> DataFrame:
     """Map-side 1->m explode of (vec_id, v) into (vec_id, sub, sv) —
     one row per dim/m-wide subvector, Jegou et al. TPAMI 2011's
-    decomposition. The sub-norm hoists here (see cosine_topk): each
+    decomposition. The sub-norm hoists here (see _side): each
     subvector scores against ksub centroids, so dot(sv, sv) computes
     once per ROW, not per (row, centroid) pair."""
     parts = F.array(*[

@@ -128,6 +128,29 @@ def test_knn_empty_seed_set_yields_null_preds(spark, knn_rows):
     assert out.filter(F.col("pred_label").isNull()).count() == 6
 
 
+@pytest.mark.parametrize("bad", ["B000", "200", "G0", "20000", ""])
+def test_knn_rejects_malformed_seed_rate(spark, knn_rows, bad):
+    # the md5 prefix is lowercase hex: "B000" would compare above every
+    # "a..." prefix and seed 62.6 % instead of 68.8 %; "G0" is no rate
+    emb = spark.createDataFrame(
+        knn_rows, "vec_id long, label int, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="seed_rate_hex"):
+        similarity.knn_label_vote(emb, seed_rate_hex=bad)
+
+
+def test_knn_two_char_seed_rate_selects_same_seeds(spark, knn_rows):
+    emb = spark.createDataFrame(
+        knn_rows, "vec_id long, label int, embedding array<double>"
+    )
+    a, b = (
+        sorted(map(tuple, similarity.knn_label_vote(emb, k=3, seed_rate_hex=r)
+                   .collect()))
+        for r in ("20", "2000")
+    )
+    assert a == b and len(a) < len(knn_rows)
+
+
 # ------------------------------------------- temperature-scaled mixing
 
 def _py_rates(counts: dict, alpha=0.75):

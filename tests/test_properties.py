@@ -6,6 +6,7 @@ constant/degenerate groups) for the fit/apply scalers."""
 import datetime
 import functools
 import math
+import struct
 from collections import Counter
 
 import pandas as pd
@@ -840,3 +841,49 @@ def test_shingle_kernel_matches_lambda_reference_and_duckdb(spark, texts):
         assert sorted(got_rows, key=lambda r: r[0]) == [
             tuple(r) for r in ref.orderBy("doc_id").collect()
         ]
+
+
+_F32 = st.floats(min_value=-1e3, max_value=1e3, width=32, allow_nan=False)
+
+
+@settings(**SLOW)
+@given(
+    vecs=st.integers(1, 8).flatmap(
+        lambda d: st.lists(st.lists(_F32, min_size=d, max_size=d),
+                           min_size=1, max_size=6)
+    )
+)
+@example(vecs=[[0.0, 0.0], [3.0, -1.0], [0.5, 2.0]])  # a zero vector
+def test_hoisted_cosine_equals_per_pair_property(spark, vecs):
+    """``_cos`` over norms hoisted into per-row columns and joined onto
+    the pairs (the ``_rerank`` shape) == the per-pair cosine that
+    recomputes both norms inside the pair expression, bit for bit —
+    so hoisting ivf_topk's norms changes no double. A pair with a zero
+    vector scores NULL."""
+    from ml4logs_spark.operators.similarity import _cos, _dot, _side
+
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
+    )
+    va, vb = F.col("va"), F.col("vb")
+    den = F.sqrt(_dot(va, va)) * F.sqrt(_dot(vb, vb))
+    rows = (
+        _side(emb, "id_a", "va", "_na", "embedding")
+        .crossJoin(_side(emb, "id_b", "vb", "_nb", "embedding"))
+        .select(
+            "id_a", "id_b",
+            _cos(va, vb, F.col("_na"), F.col("_nb")).alias("got"),
+            # the per-pair form; the guard keeps ANSI's divide-by-zero out
+            F.when(den != 0, F.round(_dot(va, vb) / den, 6)).alias("want"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(vecs) ** 2
+
+    def bits(x):
+        return None if x is None else struct.pack("<d", x)
+
+    for r in rows:
+        zero = not any(vecs[r["id_a"]]) or not any(vecs[r["id_b"]])
+        assert (r["got"] is None) == zero
+        assert bits(r["got"]) == bits(r["want"])

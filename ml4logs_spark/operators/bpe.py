@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ml4logs_spark.operators.textqa import _toks_lower
+from ml4logs_spark.operators.textqa import _adjacent, token_rows
 
 # end-of-word sentinel: Sennrich's </w>, one char so it can never be
 # confused with a real symbol produced by merging (tokens are
@@ -48,11 +48,11 @@ def _merge_pair(sym_col: Column, a: str, b: str) -> Column:
 
 def word_type_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """The one corpus pass: (word, n) frequency dim over the shared
-    whitespace tokens, plus the initial character-symbol split with the
-    end-of-word sentinel appended."""
-    words = docs.select(
-        F.explode(_toks_lower(text_col)).alias("word")
-    ).groupBy("word").agg(F.count(F.lit(1)).alias("n"))
+    ``textqa.token_rows`` tokens, plus the initial character-symbol
+    split with the end-of-word sentinel appended."""
+    words = token_rows(docs, (), text_col).groupBy(
+        F.col("token").alias("word")
+    ).agg(F.count(F.lit(1)).alias("n"))
     syms = F.concat(
         F.split(F.col("word"), ""), F.array(F.lit(EOW))
     )
@@ -73,8 +73,9 @@ def bpe_fit(
     exact bigints).
 
     Shape at scale: the corpus contributes ONE explode + word hash
-    aggregate; each merge round is (a) one pair-explode + hash
-    aggregate over the word-type frame and (b) a map-side fold
+    aggregate; each merge round is (a) one pair-explode (the
+    ``textqa._adjacent`` pairs of the symbol arrays) + hash aggregate
+    over the word-type frame and (b) a map-side fold
     rewriting the symbol arrays — both bounded by vocabulary size, not
     corpus size. The per-round driver collect is the 1-row argmax
     (control flow, same bounded pattern as similarity's Lloyd rounds);
@@ -89,25 +90,17 @@ def bpe_fit(
     types = word_type_counts(docs, text_col).localCheckpoint()
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
-        pair = F.explode(
-            F.zip_with(
-                F.col("syms"),
-                F.slice(F.col("syms"), 2, 1 << 30),
-                lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-            )
-        ).alias("p")
         best = (
-            types.select("n", pair)
-            .filter(F.col("p.b").isNotNull())
-            .groupBy("p.a", "p.b")
+            types.select("n", F.inline(_adjacent(F.col("syms"))))
+            .groupBy("tok_a", "tok_b")
             .agg(F.sum("n").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
+            .orderBy(F.desc("cnt"), "tok_a", "tok_b")
             .limit(1)
             .collect()
         )
         if not best or best[0]["cnt"] < 2:
             break
-        a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
+        a, b, cnt = best[0]["tok_a"], best[0]["tok_b"], int(best[0]["cnt"])
         merges.append((rank, a, b, cnt))
         types = types.withColumn("syms", _merge_pair(F.col("syms"), a, b))
         if (rank + 1) % _CKPT_EVERY == 0:
@@ -134,11 +127,8 @@ def bpe_encode(
     ranked = sorted(
         ((r["merge_rank"], r["tok_a"], r["tok_b"]) for r in merges.collect())
     )
-    words = docs.select(
-        F.col(doc_id_col).alias("doc_id"),
-        F.explode(_toks_lower(text_col)).alias("word"),
-    )
-    syms = F.concat(F.split(F.col("word"), ""), F.array(F.lit(EOW)))
+    words = token_rows(docs, [F.col(doc_id_col).alias("doc_id")], text_col)
+    syms = F.concat(F.split(F.col("token"), ""), F.array(F.lit(EOW)))
     out = words.select("doc_id", syms.alias("syms"))
     for _, a, b in ranked:
         out = out.select(

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ml4logs_spark.operators.textqa import _toks_lower
+from ml4logs_spark.operators.textqa import token_rows
 
 
 def nb_fit(
@@ -33,7 +33,7 @@ def nb_fit(
       ln(1/(N_k+V))), ll(t,k) = ln((c(t,k)+1)/(N_k+V)) in micro-units;
     - ``priors``: (label, prior_micro) — ln(docs_k / docs_total).
 
-    Tokens are the shared ``_toks_lower``; a label whose docs are all
+    Tokens are the shared ``textqa.token_rows``; a label whose docs are all
     empty keeps N_k = 0 (prior-only class).
 
     Shape at scale: one explode feeds the (label, token) counts (hash
@@ -43,10 +43,7 @@ def nb_fit(
     all-pairs product over docs."""
     from ml4logs_spark import cache
 
-    toks = docs.select(
-        F.col(label_col).alias("label"),
-        F.explode(_toks_lower(text_col)).alias("token"),
-    )
+    toks = token_rows(docs, [F.col(label_col).alias("label")], text_col)
     # ONE explode+aggregate pass over the corpus: per-label token
     # totals and the vocabulary both derive from the (label, token)
     # count table (sum of counts == occurrence count; its token support
@@ -115,9 +112,7 @@ def nb_classify(
     label) partial+final aggregate of exact bigint micro-units → the
     K-row prior dim rides on a broadcast cross join and the argmax is
     a min(struct) hash aggregate, never a sort."""
-    ttok = docs.select(
-        "doc_id", F.explode(_toks_lower(text_col)).alias("token")
-    )
+    ttok = token_rows(docs, ["doc_id"], text_col)
     sums = (
         ttok.join(F.broadcast(loglik), "token")
         .groupBy("doc_id", "label")

@@ -663,7 +663,12 @@ def knn_label_vote(
     scored = F.transform(
         F.col("_seeds"),
         lambda s: F.struct(
-            (-_cos(F.col(vec_col), s["v"], F.col("_qn"), s["sn"])).alias("negc"),
+            # a NULL cosine (zero vector) ranks last, as the oracle's
+            # DESC NULLS LAST; a NULL field would sort first
+            F.coalesce(
+                -_cos(F.col(vec_col), s["v"], F.col("_qn"), s["sn"]),
+                F.lit(float("inf")),
+            ).alias("negc"),
             s["sid"].alias("sid"),
             s["lab"].alias("lab"),
         ),

@@ -33,11 +33,37 @@ def _toks_lower(text_col: str = "text") -> Column:
     """Lowercased tokens with empty strings (from leading/double spaces
     or NULL text) removed — the tokenizer the corpus-statistics
     operators share; its DuckDB mirror is
-    list_filter(str_split(lower(coalesce(text, '')), ' '), t -> t <> '')."""
-    return F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " "),
-        lambda t: t != "",
+    list_filter(str_split(lower(coalesce(text, '')), ' '), t -> t <> '').
+    ``split`` never yields a NULL element, so removing '' is that filter."""
+    return F.array_remove(
+        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " "), ""
     )
+
+
+def _adjacent(arr: Column) -> Column:
+    """The adjacent (tok_a, tok_b) structs of an array, in order: the
+    array zipped with its own tail, cut to size - 1 so the zip's NULL
+    pad never appears (empty for arrays of < 2 elements)."""
+    pairs = F.arrays_zip(
+        arr.alias("tok_a"), F.slice(arr, 2, 1 << 30).alias("tok_b")
+    )
+    return F.slice(pairs, 1, F.greatest(F.size(arr) - 1, F.lit(0)))
+
+
+def token_rows(docs: DataFrame, keys, text_col: str = "text") -> DataFrame:
+    """(keys…, token): one row per ``_toks_lower`` token — the one
+    token explode of the docs operators. ``keys`` are column names or
+    Columns carried onto every row; a doc without tokens gives none."""
+    return docs.select(*keys, F.explode(_toks_lower(text_col)).alias("token"))
+
+
+def bigram_rows(docs: DataFrame, keys, text_col: str = "text") -> DataFrame:
+    """(keys…, tok_a, tok_b): one row per adjacent pair of
+    ``_toks_lower`` tokens (``_adjacent``) — the one pair explode
+    of the n-gram operators. A doc with < 2 tokens gives none."""
+    # tokens projected once: the pair Column reads its array three times
+    t = docs.select(*keys, _toks_lower(text_col).alias("_toks"))
+    return t.select(*t.columns[:-1], F.inline(_adjacent(F.col("_toks"))))
 
 
 def _stats_exprs() -> list[Column]:
@@ -324,7 +350,8 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     - distinct_ratio: distinct tokens / tokens (low = loops/boilerplate)
     - top_token_frac: occurrences of the most frequent token / tokens
-    - dup_bigram_frac: 1 - distinct bigrams / bigrams (repeated phrasing)
+    - dup_bigram_frac: 1 - distinct bigrams / bigrams (repeated phrasing,
+      ``dup_bigram_frac_expr`` over the ``bigram_rows`` pairs)
 
     All ratios in [0,1], rounded to 6dp; empty/whitespace-only docs
     report zeros, single-token docs zero dup_bigram_frac. Tokens are
@@ -510,13 +537,10 @@ def dup_bigram_frac_expr(text_col: str = "text") -> Column:
     ONE definition shared by ``repetition_stats`` (the report) and
     ``curate_corpus``'s Gopher-style repetition gate (the filter), so
     the tokenizer or bigram shape can never drift between them. Same
-    ``_toks_lower`` tokens as every other docs operator."""
-    toks = _toks_lower(text_col)
-    n = F.size(toks)
-    bigrams = F.zip_with(
-        toks, F.slice(toks, 2, 1 << 30), lambda a, b: F.concat_ws(" ", a, b)
-    )
-    bigrams = F.slice(bigrams, 1, F.greatest(n - F.lit(1), F.lit(0)))
+    ``_toks_lower`` tokens and ``_adjacent`` pairs as ``bigram_rows``;
+    distinct pair structs count as distinct ``a b`` strings do, since a
+    token never contains ' '."""
+    bigrams = _adjacent(_toks_lower(text_col))
     n_bg = F.size(bigrams)
     n_bg_d = F.size(F.array_distinct(bigrams))
     return F.round(
@@ -532,41 +556,13 @@ def bigram_counts(
     adjacent symbol pairs, merge the most frequent). Returns
     (tok_a, tok_b, n) for pairs seen at least ``min_count`` times.
 
-    Shape at scale: zip the lowercased empty-filtered token array
-    (``_toks_lower``, so double spaces don't break adjacency) with its
-    own tail (map-side), explode pairs, ONE partial+final hash
-    aggregate on the pair key — the same explode+agg shape as
-    build_vocab; no UDF."""
-    return _bigram_pair_counts(docs, (), min_count, text_col)
-
-
-def _bigram_pair_counts(
-    docs: DataFrame,
-    key_cols: tuple[str, ...],
-    min_count: int,
-    text_col: str,
-) -> DataFrame:
-    """Shared adjacent-pair counting core for ``bigram_counts`` and
-    ``top_ngrams_per_source``: zip-with-tail pair construction over
-    ``_toks_lower``, explode, drop the NULL tail pad, one hash
-    aggregate on (*key_cols, tok_a, tok_b), ``min_count`` floor. One
-    definition so a tokenizer or pair-shape fix can never drift between
-    the corpus-wide and per-source variants (their DuckDB oracles share
-    the mirrored SQL the same way)."""
-    toks = _toks_lower(text_col)
-    pairs = F.zip_with(
-        toks,
-        F.slice(toks, 2, 1 << 30),
-        lambda a, b: F.struct(a.alias("tok_a"), b.alias("tok_b")),
-    )
-    exploded = docs.select(*key_cols, F.explode(pairs).alias("p")).select(
-        *key_cols,
-        F.col("p.tok_a").alias("tok_a"),
-        F.col("p.tok_b").alias("tok_b"),
-    )
+    Shape at scale: ``bigram_rows`` (the lowercased empty-filtered
+    tokens, so double spaces don't break adjacency, paired map-side),
+    ONE partial+final hash aggregate on the pair key — the same
+    explode+agg shape as build_vocab; no UDF."""
     return (
-        exploded.filter(F.col("tok_b").isNotNull())
-        .groupBy(*key_cols, "tok_a", "tok_b")
+        bigram_rows(docs, (), text_col)
+        .groupBy("tok_a", "tok_b")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= min_count)
     )
@@ -583,7 +579,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     a row with NULL score and 0 tokens (NULL-text contract).
 
     logp(t) = ln((count(t) + 1) / (N + V)) with N = corpus token count,
-    V = vocabulary size. Same ``_toks_lower`` tokens as every docs
+    V = vocabulary size. Tokens are ``token_rows``, as in every docs
     operator.
 
     Shape at scale: ONE explode feeds both the model fit (partial+
@@ -595,9 +591,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     join reattaches token-less docs. At vocabularies past broadcast
     size (~10^8 entries) drop the broadcast hint and the scoring join
     becomes a token-keyed shuffle — the only structural change."""
-    toks = docs.select(
-        "doc_id", F.explode(_toks_lower(text_col)).alias("token")
-    )
+    toks = token_rows(docs, ["doc_id"], text_col)
     vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("_cnt"))
     # NB: Spark resolution is case-insensitive — the normalizer columns
     # must not collide with _cnt under lowercasing
@@ -647,9 +641,7 @@ def lm_score(
     norm = counts.agg(
         F.sum("tf").alias("_tot"), F.count(F.lit(1)).alias("_vsz")
     )
-    toks = docs.select(
-        "doc_id", F.explode(_toks_lower(text_col)).alias("token")
-    )
+    toks = token_rows(docs, ["doc_id"], text_col)
     scored = (
         toks.join(F.broadcast(counts.select("token", "tf")), "token", "left")
         .crossJoin(F.broadcast(norm))
@@ -684,9 +676,8 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     and V the vocabulary size; returns (doc_id, avg_bigram_logprob,
     n_bigrams), docs with < 2 tokens keeping a row with NULL score and
     0 bigrams (same reattach contract as unigram_logprob). Tokens are
-    the shared ``_toks_lower``; pairs are the shared zip-with-tail
-    shape of ``bigram_counts`` so the model's support equals that
-    operator's output.
+    ``token_rows``; pairs are ``bigram_rows``, as in ``bigram_counts``,
+    so the model's support equals that operator's output.
 
     Shape at scale: ONE pair explode feeds both the model fit (hash
     aggregate on (tok_a, tok_b)) and the scoring join; the context
@@ -695,20 +686,10 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     hash join; past broadcast size (~10^8 distinct pairs) drop the
     hint and it becomes a pair-keyed shuffle join — the only
     structural change (same note as unigram_logprob)."""
-    toks = _toks_lower(text_col)
-    pairs = F.zip_with(
-        toks,
-        F.slice(toks, 2, 1 << 30),
-        lambda a, b: F.struct(a.alias("tok_a"), b.alias("tok_b")),
-    )
-    ep = (
-        docs.select("doc_id", F.explode(pairs).alias("p"))
-        .select("doc_id", F.col("p.tok_a").alias("tok_a"), F.col("p.tok_b").alias("tok_b"))
-        .filter(F.col("tok_b").isNotNull())
-    )
+    ep = bigram_rows(docs, ["doc_id"], text_col)
     pair_cnt = ep.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("_pn"))
     ctx = (
-        docs.select(F.explode(toks).alias("token"))
+        token_rows(docs, (), text_col)
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("_cn"))
     )
@@ -757,10 +738,11 @@ def source_kl_divergence(docs: DataFrame, text_col: str = "text") -> DataFrame:
     back as broadcasts, and the only non-broadcast join is (source,
     token) x (token) — token-keyed shuffle co-partitioned with the
     counts aggregate. Output is #sources rows."""
-    toks = docs.select(
-        "source", F.explode(_toks_lower(text_col)).alias("token")
+    st = (
+        token_rows(docs, ["source"], text_col)
+        .groupBy("source", "token")
+        .agg(F.count(F.lit(1)).alias("_c"))
     )
-    st = toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("_c"))
     s_tot = st.groupBy("source").agg(F.sum("_c").alias("_ns"))
     marg = st.groupBy("token").agg(F.sum("_c").alias("_cg"))
     g_tot = st.agg(F.sum("_c").alias("_ng"))
@@ -791,8 +773,8 @@ def bigram_novelty(docs: DataFrame, text_col: str = "text") -> DataFrame:
     novel prose near 1). Returns (doc_id, n_bigrams, novel_frac 6dp);
     docs with < 2 tokens keep a row with 0 bigrams and NULL frac. A
     bigram repeated only WITHIN one doc still counts as novel (it
-    appears in no other doc). Pairs are the shared zip-with-tail shape
-    of ``bigram_counts``/``bigram_logprob``.
+    appears in no other doc). Pairs are ``bigram_rows``, as in
+    ``bigram_counts``/``bigram_logprob``.
 
     Shape at scale: one pair explode feeds both the per-pair distinct-
     doc counts (two-phase countDistinct on the pair key) and the
@@ -800,21 +782,7 @@ def bigram_novelty(docs: DataFrame, text_col: str = "text") -> DataFrame:
     all-pairs product; one doc_id aggregate; novel_frac is an exact
     small-int ratio rounded at 6dp (identical doubles on both
     engines)."""
-    toks = _toks_lower(text_col)
-    pairs = F.zip_with(
-        toks,
-        F.slice(toks, 2, 1 << 30),
-        lambda a, b: F.struct(a.alias("tok_a"), b.alias("tok_b")),
-    )
-    ep = (
-        docs.select("doc_id", F.explode(pairs).alias("p"))
-        .select(
-            "doc_id",
-            F.col("p.tok_a").alias("tok_a"),
-            F.col("p.tok_b").alias("tok_b"),
-        )
-        .filter(F.col("tok_b").isNotNull())
-    )
+    ep = bigram_rows(docs, ["doc_id"], text_col)
     pair_docs = ep.groupBy("tok_a", "tok_b").agg(
         F.countDistinct("doc_id").alias("_nd")
     )
@@ -919,7 +887,7 @@ def top_ngrams_per_source(
     corpus-statistics view (which phrases dominate each crawl source)
     that feeds boilerplate and contamination review.
 
-    Shape at scale: the same zip-with-tail explode + partial+final hash
+    Shape at scale: the same ``bigram_rows`` + partial+final hash
     aggregate as ``bigram_counts`` keyed by (source, pair), then
     ``min_count`` prunes the long tail BEFORE the per-source ranking
     window, so the sort behind row_number runs over each source's
@@ -927,7 +895,12 @@ def top_ngrams_per_source(
     Deterministic tie-break: (n desc, tok_a, tok_b)."""
     from pyspark.sql.window import Window
 
-    agg = _bigram_pair_counts(docs, ("source",), min_count, text_col)
+    agg = (
+        bigram_rows(docs, ["source"], text_col)
+        .groupBy("source", "tok_a", "tok_b")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= min_count)
+    )
     w = Window.partitionBy("source").orderBy(
         F.col("n").desc(), "tok_a", "tok_b"
     )
@@ -941,12 +914,8 @@ def vocab_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Token statistics (token, df, tf) — the MERGEABLE state unit
     behind build_vocab, split out so day-2 ingest can maintain a
     vocabulary without rescanning history (merge_vocab_counts). One
-    explode + one partial+final hash aggregate on token."""
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("token"),
-    ).filter(F.col("token") != "")
-    return toks.groupBy("token").agg(
+    ``token_rows`` explode + one partial+final hash aggregate on token."""
+    return token_rows(docs, ["doc_id"], text_col).groupBy("token").agg(
         F.countDistinct("doc_id").alias("df"),
         F.count(F.lit(1)).alias("tf"),
     )
@@ -1088,14 +1057,14 @@ def vocab_coverage(docs: DataFrame, vocab: DataFrame) -> DataFrame:
     a pipeline runs before committing to a vocab (how much of the
     corpus would map to <unk> at this min_df/max_df setting).
 
-    Shape at scale: map-side token explode, the vocab broadcast as a
+    Shape at scale: map-side ``token_rows`` explode, the vocab broadcast as a
     left-join dim (a df-thresholded vocabulary is Heaps'-law bounded,
     and min_df pruning keeps it far below broadcast limits — at
     extreme vocab sizes the same plan degrades gracefully to a shuffle
     join), one doc_id hash aggregate. Tokenless docs (empty/NULL text)
     zero-fill via the docs-side left join, same convention as
     unigram_logprob."""
-    tok = docs.select("doc_id", F.explode(_toks_lower()).alias("token"))
+    tok = token_rows(docs, ["doc_id"])
     vdim = vocab.select("token").distinct().withColumn("_in", F.lit(1))
     per = (
         tok.join(F.broadcast(vdim), "token", "left")

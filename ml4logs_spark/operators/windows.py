@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ml4logs_spark.operators import twophase
+from ml4logs_spark.operators import textqa, twophase
 
 
 def w_conv():
@@ -393,7 +393,7 @@ def pack_conversations(
     where its FIRST token lands (stream packing: deterministic,
     order-exact, conversations never split across the midline
     reassignments a greedy bin-packer would need). Token counts are the
-    shared whitespace definition with NULL text folding to ''.
+    size of ``textqa._toks_lower`` (NULL text folds to '').
 
     Returns (conv_id, conv_tokens, token_offset, seq_id, seq_pos).
 
@@ -402,12 +402,8 @@ def pack_conversations(
     frame; the division into sequences is map-side arithmetic."""
     if seq_tokens <= 0:
         raise ValueError(f"seq_tokens must be positive, got {seq_tokens}")
-    n_tok = F.size(
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), " "),
-            lambda t: t != "",
-        )
-    )
+    # lower never changes whether a token is empty
+    n_tok = F.size(textqa._toks_lower("text"))
     sizes = turns.groupBy("conv_id").agg(
         F.sum(n_tok).cast("long").alias("conv_tokens")
     )

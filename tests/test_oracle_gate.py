@@ -4,9 +4,10 @@ The driver's CORRECTNESS gate grades the first 50 ``queries()`` entries;
 everything after position 50 with a full DuckDB oracle is certified here
 instead — the same Spark-vs-DuckDB row/column/value comparison, run at
 sf0.001 so a plain pytest run exercises it. The in-window queries built
-on the shingle kernel (dedup.shingle_rows) and on the similarity cosine
-kernel (similarity._cos) are gated here too, so a change to either
-kernel is caught by a plain pytest run.
+on the shingle kernel (dedup.shingle_rows), on the similarity cosine
+kernel (similarity._cos) and on the text token and pair kernels
+(textqa.token_rows / bigram_rows) are gated here too, so a change to
+any of these kernels is caught by a plain pytest run.
 """
 
 import os
@@ -65,6 +66,22 @@ WINDOW_QUERIES = [
     "semantic_dedup_survivors",
     "pq_codes",
     "pq_cosine_topk",
+    # textqa._toks_lower, token_rows, bigram_rows, _adjacent
+    "vocab_coverage",
+    "doc_unigram_logprob",
+    "bigram_logprob",
+    "perplexity_buckets",
+    "nb_source_classify",
+    "source_kl_divergence",
+    "bigram_novelty",
+    "pack_conversations",
+    "nb_confusion",
+    "lm_score_day2",
+    "incremental_vocab_counts",
+    "gopher_quality_flags",
+    "repetition_stats",
+    "bigram_counts",
+    "top_ngrams_per_source",
 ]
 
 
@@ -90,28 +107,32 @@ def test_shingle_window_query_matches_oracle(spark, duck, name):
     _assert_matches_oracle(spark, duck, name)
 
 
-@pytest.fixture(scope="module")
-def zero_vec(tmp_path_factory):
-    """(dir, DuckDB connection) over the sf0.001 embeddings with vec_id 0
-    set to the zero vector: a query (ids 0..4), the first IVF seed
-    centroid, and a candidate for every other query."""
+def _zeroed(tmp_path_factory, vec_id):
+    """(dir, DuckDB connection) over the sf0.001 embeddings with
+    ``vec_id`` set to the zero vector."""
     t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
     vecs = t.column("embedding").to_pylist()
     ids = t.column("vec_id").to_pylist()
-    vecs[ids.index(0)] = [0.0] * len(vecs[0])
+    vecs[ids.index(vec_id)] = [0.0] * len(vecs[0])
     i = t.schema.get_field_index("embedding")
     t = t.set_column(i, t.schema.field(i), pa.array(vecs, t.schema.field(i).type))
-    d = tmp_path_factory.mktemp("zero_vec")
+    d = tmp_path_factory.mktemp(f"zero_vec_{vec_id}")
     pq.write_table(t, d / "embeddings.parquet")
-    con = _connect(d)
-    yield str(d), con
+    return str(d), _connect(d)
+
+
+@pytest.fixture(scope="module")
+def zero_vec(tmp_path_factory):
+    """vec_id 0 zeroed: a query (ids 0..4), the first IVF seed
+    centroid, and a candidate for every other query."""
+    sf_dir, con = _zeroed(tmp_path_factory, 0)
+    yield sf_dir, con
     con.close()
 
 
 # A zero vector has norm 0: its pairs score a NULL cosine on both
 # engines (Spark try_divide, DuckDB x / 0.0) instead of aborting the
-# job. knn_label_vote is not listed: with a zero-norm SEED its
-# array_sort puts the NULL score first, while the oracle ranks it last.
+# job, and ranks last.
 @pytest.mark.parametrize("name", [
     "ann_cosine_topk",
     "lsh_cosine_topk",
@@ -120,7 +141,18 @@ def zero_vec(tmp_path_factory):
     "semantic_dedup_survivors",
     "embedding_decontaminated",
     "ivf_cell_summary",
+    "knn_label_vote",
 ])
 def test_zero_vector_matches_oracle(spark, zero_vec, name):
     sf_dir, con = zero_vec
     _assert_matches_oracle(spark, con, name, sf_dir)
+
+
+def test_zero_seed_ranks_last_in_knn_vote(spark, tmp_path_factory):
+    """vec_id 6 is a seed under knn_label_vote's default "2000" draw;
+    zeroed, its NULL cosine must rank below every scored seed."""
+    sf_dir, con = _zeroed(tmp_path_factory, 6)
+    try:
+        _assert_matches_oracle(spark, con, "knn_label_vote", sf_dir)
+    finally:
+        con.close()

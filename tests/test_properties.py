@@ -740,7 +740,7 @@ def test_latency_histogram_bucket_and_percentile_property(spark, lats, qs):
     assert got == want
 
 
-# Pieces for shingle-kernel inputs: runs of spaces (empty tokens),
+# Pieces for shingle- and token-kernel inputs: runs of spaces (empty tokens),
 # tabs and newlines inside tokens, NBSP (not a split point), combining
 # marks and astral-plane emoji.
 _SHINGLE_PIECES = ["a", "b", "ab", " ", "  ", "\t", "\n", "\u00a0", "e\u0301",
@@ -841,6 +841,123 @@ def test_shingle_kernel_matches_lambda_reference_and_duckdb(spark, texts):
         assert sorted(got_rows, key=lambda r: r[0]) == [
             tuple(r) for r in ref.orderBy("doc_id").collect()
         ]
+
+
+def _lambda_toks():
+    """The higher-order tokenizer ``textqa._toks_lower`` replaced."""
+    return F.filter(
+        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), " "),
+        lambda t: t != "",
+    )
+
+
+def _lambda_pairs(toks):
+    """The higher-order pair array ``textqa._adjacent`` replaced: the
+    tokens zipped with their tail, the NULL tail pad left in."""
+    return F.zip_with(
+        toks,
+        F.slice(toks, 2, 1 << 30),
+        lambda a, b: F.struct(a.alias("tok_a"), b.alias("tok_b")),
+    )
+
+
+def _lambda_dup_bigram_frac(toks):
+    n = F.size(toks)
+    bigrams = F.zip_with(
+        toks, F.slice(toks, 2, 1 << 30), lambda a, b: F.concat_ws(" ", a, b)
+    )
+    bigrams = F.slice(bigrams, 1, F.greatest(n - F.lit(1), F.lit(0)))
+    n_bg = F.size(bigrams)
+    return F.round(
+        F.when(
+            n_bg > 0, F.lit(1.0) - F.size(F.array_distinct(bigrams)) / n_bg
+        ).otherwise(F.lit(0.0)),
+        6,
+    )
+
+
+@settings(**SLOW)
+@given(
+    texts=st.lists(
+        st.lists(
+            st.sampled_from(_SHINGLE_PIECES + ["A", "B a"]), max_size=14
+        ).map("".join),
+        max_size=12,
+    ),
+)
+def test_token_and_pair_kernels_match_lambda_reference_and_duckdb(
+    spark, texts
+):
+    """The text family's built-in kernels equal the lambda forms they
+    replaced and the DuckDB mirrors of the oracles, per doc: the token
+    array and its ``token_rows`` explode, the ``bigram_rows`` pairs (as
+    multisets: no NULL tail pad survives), ``dup_bigram_frac_expr``, and
+    ``pack_conversations``' token count (NULL text counts 0 tokens)."""
+    import duckdb
+
+    from ml4logs_spark.operators import textqa
+    from ml4logs_spark.oracle.docs_sql import _DUP_BG_FRAC, _TOKS_LOWER
+
+    rows = list(enumerate(_SHINGLE_EDGES + ["A b a B", "b A"] + texts))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    old_toks = _lambda_toks()
+
+    per_doc = df.select(
+        "doc_id",
+        textqa._toks_lower().alias("toks"),
+        old_toks.alias("old_toks"),
+        textqa.dup_bigram_frac_expr().alias("frac"),
+        _lambda_dup_bigram_frac(old_toks).alias("old_frac"),
+        F.size(textqa._toks_lower()).alias("n"),
+        F.size(
+            F.filter(
+                F.split(F.coalesce(F.col("text"), F.lit("")), " "),
+                lambda t: t != "",
+            )
+        ).alias("old_n"),
+    ).orderBy("doc_id").collect()
+    assert len(per_doc) == len(rows)
+    for r in per_doc:
+        assert r["toks"] == r["old_toks"]
+        assert r["frac"] == r["old_frac"]
+        assert r["n"] == r["old_n"] == len(r["toks"])
+
+    toks = Counter(tuple(r) for r in textqa.token_rows(df, ["doc_id"]).collect())
+    pairs = Counter(
+        tuple(r) for r in textqa.bigram_rows(df, ["doc_id"]).collect()
+    )
+    assert toks == Counter(
+        tuple(r)
+        for r in df.select("doc_id", F.explode(old_toks)).collect()
+    )
+    assert pairs == Counter(
+        (r["doc_id"], r["p"]["tok_a"], r["p"]["tok_b"])
+        for r in df.select(
+            "doc_id", F.explode(_lambda_pairs(old_toks)).alias("p")
+        ).collect()
+        if r["p"]["tok_b"] is not None
+    )
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    assert toks == Counter(con.execute(
+        f"SELECT doc_id, unnest({_TOKS_LOWER}) FROM documents"
+    ).fetchall())
+    assert pairs == Counter(con.execute(
+        "SELECT doc_id, p.tok_a, p.tok_b FROM (SELECT doc_id, unnest("
+        "list_transform(generate_series(1, greatest(len(a) - 1, 0)), "
+        "i -> struct_pack(tok_a := a[i], tok_b := a[i + 1]))) AS p "
+        f"FROM (SELECT doc_id, {_TOKS_LOWER} AS a FROM documents))"
+    ).fetchall())
+    duck = {
+        d: (f, n) for d, f, n in con.execute(
+            f"SELECT doc_id, CAST({_DUP_BG_FRAC} AS DOUBLE), len(list_filter(str_split("
+            "coalesce(text, ''), ' '), x -> x <> '')) "
+            f"FROM (SELECT doc_id, text, {_TOKS_LOWER} AS a FROM documents)"
+        ).fetchall()
+    }
+    con.close()
+    assert {r["doc_id"]: (r["frac"], r["n"]) for r in per_doc} == duck
 
 
 _F32 = st.floats(min_value=-1e3, max_value=1e3, width=32, allow_nan=False)
